@@ -8,7 +8,7 @@ Spark-first:
 - DataFrame / Spark SQL declarative plans (Catalyst optimizes; no
   hand-scheduled operators),
 - Structured Streaming for the streaming twins (watermarks + windows +
-  ``transformWithStateInPandas``-style stateful ops),
+  ``applyInPandasWithState`` keyed state),
 - broadcast stream-static joins replacing the reference's Redis/HBase
   cache-aside async dim lookups,
 - LLM-scale data-pipeline extensions (dedup, similarity search, text

@@ -14,37 +14,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 
-def dedup_upserts(
-    df: DataFrame,
-    id_cols: Sequence[str],
-    order_col: str | None = None,
-    streaming: bool = False,
-) -> DataFrame:
-    """A1 — net out re-emitted upsert rows, keeping one row per id.
-
-    Reference: DwsTradeSkuOrderWindow.java:77-118 keeps MapState of last-seen
-    amounts per order_detail_id and emits deltas so duplicates cancel out.
-    Spark-first: keep the FIRST row per id (duplicates of an upsert stream
-    carry the same final amounts once left-join enrichment is append-mode,
-    SURVEY §2.5 A1 note). Batch: row_number over (id ORDER BY order_col)
-    for a deterministic keeper; streaming: dropDuplicates (requires a
-    watermark upstream for state eviction, W4).
-    """
-    if streaming or order_col is None:
-        return df.dropDuplicates(list(id_cols))
-    # total order: order_col first, every remaining ORDERABLE column as
-    # tie-break — two rows with equal id AND equal order_col but different
-    # payload must still pick the same keeper under any partitioning/
-    # arrival order (maps are not orderable in Spark and are skipped)
-    rest = _orderable(df, set(id_cols) | {order_col})
-    w = Window.partitionBy(*id_cols).orderBy(order_col, *rest)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-
 def dedup_within_watermark(
     df: DataFrame, id_cols: Sequence[str]
 ) -> DataFrame:
@@ -107,8 +76,7 @@ def first_today(
     column, so Spark does NOT evict this state by watermark — it grows
     O(keys x days) over the stream's lifetime. That is exactly the
     reference's own posture (its ValueState has no TTL either) and is fine
-    for bounded replays and day-scale jobs; for unbounded deployments use
-    ``first_today_bounded_state`` (event-time-timeout eviction). The
+    for bounded replays and day-scale jobs, not for unbounded ones. The
     upside of dropDuplicates here is that watermark metadata SURVIVES it,
     so downstream windowed aggs keep working (applyInPandasWithState
     would strip the watermark).
@@ -118,191 +86,3 @@ def first_today(
     if streaming:
         return with_day.dropDuplicates([key, "__day"]).drop("__day")
     return first_per_key(with_day, [key, "__day"], ts_col).drop("__day")
-
-
-def first_today_bounded_state(
-    df: DataFrame,
-    key: str,
-    ts_col: str = "ts",
-    ttl_hours: int = 36,
-) -> DataFrame:
-    """A8/W4 streaming — first event per (key, day) with BOUNDED state.
-
-    The Flink-exact twin of keyed ValueState lastVisitDate *with TTL*
-    (DwsUserUserLoginWindow.java:73-107): state per key is the last day an
-    event was emitted for, and an event-time timeout at watermark +
-    ``ttl_hours`` evicts keys idle past the horizon — state is
-    O(keys active within the TTL window), not O(keys x days).
-
-    Requires a watermark on ``ts_col`` upstream. Caveats (Spark contract):
-    ``applyInPandasWithState`` strips watermark metadata from its output —
-    re-declare a watermark AFTER this operator before any downstream
-    stateful op (see operators/windows.with_event_watermark) — and the
-    watermark -> stateful -> watermark -> agg chain trips Spark's
-    global-watermark correctness guard
-    (``spark.sql.streaming.statefulOperator.checkCorrectness.enabled``);
-    disabling it is safe for this operator because emitted rows carry
-    their own event times from the current batch, never older state
-    (chained-agg parity proven in
-    tests/test_streaming.py::test_first_today_bounded_state_chained_window_agg).
-
-    State is the SET of recently-emitted days (pruned to the TTL horizon),
-    not just the last day: a single last-day equality check lets an
-    in-watermark late event from a PRIOR day rewind it and re-emit both
-    days (the Flink reference has that flaw; the batch twin does not).
-    The set stays O(ttl_hours/24 + 2) entries, so state is still bounded.
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    schema = df.schema
-    ttl_ms = ttl_hours * 3600 * 1000
-    horizon_days = ttl_hours // 24 + 2
-
-    def fn(key_t, pdfs, state: GroupState):
-        import pandas as pd  # noqa: F811 (worker-side import)
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-        seen = set(state.get[0].split(",")) if state.exists and state.get[0] else set()
-        last_event_ms = 0
-        # Arrow hands the key's batch as MULTIPLE chunks in no guaranteed
-        # mutual order — sorting each chunk independently lets a later
-        # chunk's older row rewind the walk and re-emit a (key, day) that
-        # an earlier chunk already emitted. Concatenate, sort ONCE, then
-        # run one keep loop (memory is bounded by the key's batch volume,
-        # which the state contract already assumes fits a worker).
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            pdf = (
-                pd.concat(chunks, ignore_index=True)
-                .sort_values(ts_col)
-                .reset_index(drop=True)
-            )
-            ts = pd.to_datetime(pdf[ts_col])
-            days = ts.dt.strftime("%Y-%m-%d")
-            last_event_ms = int(ts.iloc[-1].value // 1_000_000)
-            keep = []
-            for j in range(len(pdf)):
-                d = days.iloc[j]
-                if d not in seen:
-                    keep.append(j)
-                    seen.add(d)
-            if keep:
-                yield pdf.iloc[keep]
-        if seen:  # prune to the TTL horizon so state stays bounded
-            cutoff = (
-                pd.Timestamp(max(seen)) - pd.Timedelta(days=horizon_days)
-            ).strftime("%Y-%m-%d")
-            seen = {d for d in seen if d >= cutoff}
-        state.update((",".join(sorted(seen)),))
-        # Anchor the eviction horizon to the newest signal we have: on the
-        # first batch the watermark is still 0 (epoch), and an epoch-anchored
-        # timeout would expire immediately and wipe live state.
-        wm = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(max(wm, last_event_ms) + ttl_ms)
-
-    return df.groupBy(key).applyInPandasWithState(
-        fn,
-        outputStructType=schema,
-        stateStructType="seen_days STRING",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def first_today_tws(
-    df: DataFrame,
-    key: str,
-    ts_col: str = "ts",
-    ttl_hours: int = 36,
-) -> DataFrame:
-    """A8/W4 streaming on the Spark 4 ``transformWithStateInPandas``
-    engine — same semantics as ``first_today_bounded_state`` (first event
-    per (key, day), keyed last-day state, event-time TTL eviction) WITHOUT
-    its two caveats: ``eventTimeColumnName`` re-exposes the output's event
-    time to the engine, so the watermark survives the operator, downstream
-    windowed aggs need no re-declared watermark, and the global-watermark
-    correctness guard (checkCorrectness) stays ON.
-
-    Timer discipline: transformWithState timers ACCUMULATE (unlike
-    GroupState.setTimeoutTimestamp which replaces), so each batch deletes
-    the key's previous timer before registering the new horizon —
-    otherwise a stale early timer would evict live state and re-emit
-    duplicate (key, day) rows.
-
-    Reference parity: keyed ValueState lastVisitDate + StateTtlConfig
-    (DwsUserUserLoginWindow.java:73-107), like the applyInPandasWithState
-    twin; kept alongside it because transformWithState requires the RocksDB
-    state store provider AND the protobuf wheel for its state protocol —
-    this sandbox ships neither requirement beyond pyspark itself
-    (google.protobuf absent), so the e2e tests skip here and run wherever
-    protobuf is installed (tests/test_streaming.py::test_first_today_tws_*).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    schema = df.schema
-    ttl_ms = ttl_hours * 3600 * 1000
-
-    class FirstToday(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._last = handle.getValueState("seen_days", "seen_days string")
-
-        def handleInputRows(self, key_t, rows, timer_values):
-            import pandas as pd  # noqa: F811 (worker-side import)
-
-            got = self._last.get()[0] if self._last.exists() else None
-            seen = set(got.split(",")) if got else set()
-            last_event_ms = 0
-            # chunks arrive in no guaranteed mutual order — concat + one
-            # sort + one keep loop; state is the TTL-horizon SET of
-            # emitted days, not last-day equality (see
-            # first_today_bounded_state for both rationales)
-            chunks = [pdf for pdf in rows if len(pdf)]
-            if chunks:
-                pdf = (
-                    pd.concat(chunks, ignore_index=True)
-                    .sort_values(ts_col)
-                    .reset_index(drop=True)
-                )
-                ts = pd.to_datetime(pdf[ts_col])
-                days = ts.dt.strftime("%Y-%m-%d")
-                last_event_ms = int(ts.iloc[-1].value // 1_000_000)
-                keep = []
-                for j in range(len(pdf)):
-                    d = days.iloc[j]
-                    if d not in seen:
-                        keep.append(j)
-                        seen.add(d)
-                if keep:
-                    yield pdf.iloc[keep]
-            if seen:
-                cutoff = (
-                    pd.Timestamp(max(seen))
-                    - pd.Timedelta(days=ttl_hours // 24 + 2)
-                ).strftime("%Y-%m-%d")
-                seen = {d for d in seen if d >= cutoff}
-            self._last.update((",".join(sorted(seen)),))
-            for t in list(self._handle.listTimers()):
-                self._handle.deleteTimer(t)
-            wm = timer_values.getCurrentWatermarkInMs()
-            self._handle.registerTimer(max(wm, last_event_ms) + ttl_ms)
-
-        def handleExpiredTimer(self, key_t, timer_values, expired_timer_info):
-            self._last.clear()
-            yield from ()
-
-        def close(self) -> None:
-            pass
-
-    return df.groupBy(key).transformWithStateInPandas(
-        statefulProcessor=FirstToday(),
-        outputStructType=schema,
-        outputMode="Append",
-        timeMode="EventTime",
-        eventTimeColumnName=ts_col,
-    )

@@ -93,7 +93,8 @@ def repair_is_new_streaming(
         else:
             first_day, first_new = None, None
         # chunks arrive in no guaranteed mutual order — concat + ONE sort
-        # before the order-sensitive state walk (see dedup.py)
+        # before the order-sensitive state walk (sorting each chunk alone
+        # lets a later chunk's older row rewind the walk)
         chunks = [pdf for pdf in pdfs if len(pdf)]
         for pdf in (
             [pd.concat(chunks, ignore_index=True)] if chunks else []
@@ -128,79 +129,6 @@ def repair_is_new_streaming(
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-    )
-
-
-def diff_state_deltas_streaming(
-    df: DataFrame,
-    id_col: str,
-    amount_cols: list[str],
-    ts_col: str = "event_time",
-) -> DataFrame:
-    """A1 exact diff-state — emit per-id DELTAS (current − last-seen) so
-    downstream windowed sums net out re-emitted upserts even when the
-    amounts CHANGED between emissions.
-
-    Reference: DwsTradeSkuOrderWindow.java:77-118 — MapState of last-seen
-    BigDecimal amounts per order_detail_id; each arrival emits the
-    difference. (The reference's state-key bug — writes `curOriginalAmount`
-    :111, reads `originalAmount` :89 — is NOT replicated; intent is.)
-    SUM(deltas) over any downstream grouping == last-seen value per id,
-    which is what the simplified keeper-dedup can't give when a re-emission
-    revises the amounts. Amounts must be numeric (double here; production
-    would carry decimals scaled to long for exactness in Arrow).
-
-    The state carries the last-seen EVENT TIME alongside the amounts: a
-    cross-batch late row (older ts arriving after a newer one already
-    updated the state) emits delta 0 instead of rewinding last-seen — so
-    SUM(deltas) always telescopes to the max-event-time value, not to
-    whichever row happened to arrive last.
-    """
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            got = list(state.get)
-            last, last_ts = got[:-1], got[-1]
-        else:
-            last, last_ts = [0.0] * len(amount_cols), -1.0
-        # chunk order is not guaranteed — concat + one sort (see dedup.py)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        for pdf in (
-            [pd.concat(chunks, ignore_index=True)] if chunks else []
-        ):
-            pdf = pdf.sort_values(ts_col).reset_index(drop=True)
-            tsv = (
-                pd.to_datetime(pdf[ts_col]).astype("int64") / 1e9
-            ).tolist()
-            stale = [t < last_ts for t in tsv]
-            for j, c in enumerate(amount_cols):
-                cur = pdf[c].astype("float64").tolist()
-                deltas = []
-                for v, is_stale in zip(cur, stale):
-                    if is_stale:
-                        deltas.append(0.0)
-                    else:
-                        deltas.append(v - last[j])
-                        last[j] = v
-                pdf[c] = deltas
-            fresh = [t for t, s in zip(tsv, stale) if not s]
-            if fresh:
-                last_ts = max(last_ts, fresh[-1])
-            yield pdf
-        state.update(tuple(last) + (last_ts,))
-
-    state_schema = (
-        ", ".join(f"a{i} DOUBLE" for i in range(len(amount_cols)))
-        + ", last_ts DOUBLE"
-    )
-    return df.groupBy(id_col).applyInPandasWithState(
-        fn,
-        outputStructType=df.schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -245,7 +173,7 @@ def back_visitor_flags_streaming(
         else:
             seen, max_day = set(), None
         # chunks arrive in no guaranteed mutual order — concat + ONE sort
-        # before the first-of-day walk (see dedup.py)
+        # before the first-of-day walk (see repair_is_new_streaming)
         chunks = [pdf for pdf in pdfs if len(pdf)]
         for pdf in (
             [pd.concat(chunks, ignore_index=True)] if chunks else []

@@ -12,7 +12,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..functions.tokenizer import kw_split
-from ..operators.dedup import dedup_upserts, first_today
+from ..operators.dedup import first_per_key, first_today
 from ..operators.joins import dim_enrich
 from ..operators.windows import tumble, with_event_watermark
 
@@ -71,7 +71,7 @@ def trade_sku_order_window(
         src = with_event_watermark(src, "event_time", "5 seconds")
         d = dedup_within_watermark(src, ["id"])
     else:
-        d = dedup_upserts(src, ["id"], order_col="ts")
+        d = first_per_key(src, ["id"], "ts")
     agged = tumble(
         d,
         "event_time",
@@ -154,7 +154,7 @@ def user_user_login_window(
             ],
             watermark="5 seconds",
         )
-    firsts = first_today(logins, "uid", "event_time", streaming=streaming)
+    firsts = first_today(logins, "uid", "event_time")
     firsts = firsts.withColumn(
         "d", F.to_date("event_time")
     )

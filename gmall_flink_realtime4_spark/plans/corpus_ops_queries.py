@@ -779,9 +779,9 @@ def llm_type_token_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     sources.
 
     One explode + one agg shuffle on source; countDistinct(term) expands
-    the aggregate input 2x (Spark's Expand) — at 100 TB the two-phase
-    distinct (`operators/skew.two_phase_distinct_count`) replaces it if
-    source cardinality is low enough to skew.
+    the aggregate input 2x (Spark's Expand) — at 100 TB a two-phase
+    distinct (distinct (source, term) first, then count per source)
+    replaces it if source cardinality is low enough to skew.
     """
     d = T.load(spark, sf_dir, "documents")
     t = d.select("source", F.explode(F.split("text", " ")).alias("term"))

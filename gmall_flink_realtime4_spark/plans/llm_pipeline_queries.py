@@ -12,8 +12,6 @@ exact integer arithmetic at every boundary, identical aliases both sides.
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
@@ -579,7 +577,10 @@ _PQ_DIFF = (
 ).format(d=PQ_D)
 
 
-from .llm_queries import _qdec  # noqa: E402  (shared quantize-once ladder)
+from .llm_queries import (  # noqa: E402  (shared quantize-once ladder + top-k)
+    _qdec,
+    _ranked_topk_per_query,
+)
 
 
 def _sqdist_q(a, b):
@@ -994,37 +995,6 @@ def ivfpq_residual_frame(emb: DataFrame) -> DataFrame:
     return _ivfpq_residuals(subint, cassign, _ivfpq_ccb(subint))
 
 
-# Phase-1 slices per qid (two-phase exact top-k) — same retune + rationale
-# as llm_queries.ANN_TOPK_SALT (r13): 8 bounds the local second-window
-# overhead, still lifts the NQ-way ceiling to NQ*8; identical output for
-# any salt (shared total order), production raises via env to ~cores/NQ.
-TOPK_SALT = int(os.environ.get("SPARK_GRAFT_TOPK_SALT", "8"))
-
-
-def _topk_per_qid(scored: DataFrame, ordcol: str) -> DataFrame:
-    """Exact (ordcol, vec_id)-ordered top-ADC_TOPK per qid, TWO-PHASE
-    (the llm_sample_reservoir pattern, r12): a single
-    Window.partitionBy(qid) caps the ranking stage at NQ(=8)-way
-    parallelism — at x100 that is one task sorting ~1.5-6M scored rows
-    per query id, and on a 1000-executor cluster the stage would idle
-    all but NQ cores. Phase 1 ranks within (qid, vec_id % SALT) slices
-    (NQ x SALT-way parallel, each slice's top-k is a superset filter of
-    the global top-k restricted to it); phase 2 ranks the <= SALT*k
-    survivors. Both phases use the SAME total order, so the result is
-    identical to the single window (oracle unchanged)."""
-    w1 = Window.partitionBy("qid", F.expr(f"vec_id % {TOPK_SALT}")).orderBy(
-        ordcol, "vec_id"
-    )
-    w2 = Window.partitionBy("qid").orderBy(ordcol, "vec_id")
-    return (
-        scored.withColumn("r1", F.row_number().over(w1))
-        .filter(F.col("r1") <= ADC_TOPK)
-        .withColumn("rk", F.row_number().over(w2))
-        .filter(F.col("rk") <= ADC_TOPK)
-        .select("qid", "vec_id")
-    )
-
-
 def _adc_topk(
     codes: DataFrame, dtab: DataFrame, keys: tuple[str, ...] = ("m", "cid")
 ) -> DataFrame:
@@ -1037,7 +1007,9 @@ def _adc_topk(
         .groupBy("qid", "vec_id")
         .agg(F.sum("qd2").alias("ad2"))
     )
-    return _topk_per_qid(adc, "ad2")
+    return _ranked_topk_per_query(
+        adc, "qid", "vec_id", F.col("ad2"), ADC_TOPK
+    ).select("qid", "vec_id")
 
 
 @query(
@@ -1201,7 +1173,13 @@ def llm_ann_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     itops = {
-        np: _topk_per_qid(scored.filter(F.col("rnk") <= np), "ad2")
+        np: _ranked_topk_per_query(
+            scored.filter(F.col("rnk") <= np),
+            "qid",
+            "vec_id",
+            F.col("ad2"),
+            ADC_TOPK,
+        ).select("qid", "vec_id")
         for np in IVFPQ_NPROBES
     }
     # -- exact ground truth + assembly ----------------------------------
@@ -1219,7 +1197,9 @@ def llm_ann_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             _sqdist_q(F.col("eq"), F.col("qeq")).alias("xd2"),
         )
     )
-    ex5 = _topk_per_qid(ex, "xd2")
+    ex5 = _ranked_topk_per_query(
+        ex, "qid", "vec_id", F.col("xd2"), ADC_TOPK
+    ).select("qid", "vec_id")
     # all top-k frames are NQ x TOPK rows; windows hide that from the
     # size estimator, so hint the broadcasts explicitly. ex5 keeps every
     # qid (exactly TOPK rows each), so grouping it preserves the full

@@ -1067,9 +1067,13 @@ def llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two-phase exact ranked top-k (r12): the IVF candidate set is
     # ~nprobe/k_cells of the corpus per query — a single qid window
     # would rank it 8-way-parallel at any cluster size
-    return _ranked_topk_per_query(scored, IVF_TOPK).select(
-        "query_vec_id", "neighbor_vec_id", "rank", "cos_sim_e9"
-    )
+    return _ranked_topk_per_query(
+        scored,
+        "query_vec_id",
+        "neighbor_vec_id",
+        F.col("cos_sim_e9").desc(),
+        IVF_TOPK,
+    ).select("query_vec_id", "neighbor_vec_id", "rank", "cos_sim_e9")
 
 
 def llm_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2078,9 +2082,13 @@ def llm_ann_ivf_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # two-phase exact ranked top-k (r12) — see _ranked_topk_per_query
-    ttopk = _ranked_topk_per_query(tscored, IVF_TOPK).select(
-        "query_vec_id", F.col("neighbor_vec_id").alias("tn")
-    )
+    ttopk = _ranked_topk_per_query(
+        tscored,
+        "query_vec_id",
+        "neighbor_vec_id",
+        F.col("cos_sim_e9").desc(),
+        IVF_TOPK,
+    ).select("query_vec_id", F.col("neighbor_vec_id").alias("tn"))
     brute = llm_ann_cosine_topk(spark, sf_dir).select(
         "query_vec_id", "neighbor_vec_id"
     )

@@ -21,7 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import pyspark.sql.functions as F
 
 from gmall_flink_realtime4_spark.operators.dedup import (
-    dedup_upserts,
+    first_per_key,
     first_today,
 )
 from gmall_flink_realtime4_spark.operators.stateful import repair_is_new_batch
@@ -56,8 +56,8 @@ def test_dedup_upserts_idempotent_under_duplication(spark, rows, seed):
     rng = random.Random(seed)
     dup = rows + [r for r in rows if rng.random() < 0.5]
     rng.shuffle(dup)
-    base = dedup_upserts(_df(spark, rows), ["id"], order_col="ts")
-    redelivered = dedup_upserts(_df(spark, dup), ["id"], order_col="ts")
+    base = first_per_key(_df(spark, rows), ["id"], "ts")
+    redelivered = first_per_key(_df(spark, dup), ["id"], "ts")
     assert sorted(map(tuple, base.collect())) == sorted(
         map(tuple, redelivered.collect())
     )
@@ -67,8 +67,8 @@ def test_dedup_upserts_idempotent_under_duplication(spark, rows, seed):
 @settings(**PROP_SETTINGS)
 def test_dedup_upserts_is_idempotent_operator(spark, rows):
     """dedup(dedup(x)) == dedup(x)."""
-    once = dedup_upserts(_df(spark, rows), ["id"], order_col="ts")
-    twice = dedup_upserts(once, ["id"], order_col="ts")
+    once = first_per_key(_df(spark, rows), ["id"], "ts")
+    twice = first_per_key(once, ["id"], "ts")
     assert sorted(map(tuple, once.collect())) == sorted(map(tuple, twice.collect()))
 
 
@@ -179,7 +179,7 @@ def test_flagship_dedup_net_out(spark, n_dups):
     payloads net out of the windowed sums entirely."""
     base = [(1, "u1", 1_000, 10), (2, "u1", 2_000, 20), (3, "u2", 3_000, 30)]
     rows = base + base[:n_dups]
-    deduped = dedup_upserts(_df(spark, rows), ["id"], order_col="ts")
+    deduped = first_per_key(_df(spark, rows), ["id"], "ts")
     total = deduped.agg(F.sum("amount").alias("s")).collect()[0]["s"]
     assert total == 60
 

@@ -63,21 +63,19 @@ def test_incremental_clusters_soak_restart(spark, tmp_path):
 
 
 def test_two_phase_topk_property_random_frames(spark):
-    """Hypothesis property over the r12 two-phase exact top-k helpers:
-    on RANDOM scored frames — duplicate scores (ties must break on the
-    candidate id), candidates colliding into the same phase-1 slice,
-    fewer candidates than k, empty queries — both `_topk_per_qid`
-    (ascending distance order) and `_ranked_topk_per_query` (descending
-    score order, rank emitted) must equal the brute-force python sort.
+    """Hypothesis property over the r12 two-phase exact top-k helper
+    `_ranked_topk_per_query`: on RANDOM scored frames — duplicate scores
+    (ties must break on the candidate id), candidates colliding into the
+    same phase-1 slice, fewer candidates than k, empty queries — both
+    orders it serves (ascending ADC distance per qid, descending cosine
+    score per query with rank emitted) must equal the brute-force python
+    sort.
     This pins the claim the plan rewrite leans on: phase-1 slicing can
     never evict a global top-k row, for ANY slice assignment."""
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
-    from gmall_flink_realtime4_spark.plans.llm_pipeline_queries import (
-        ADC_TOPK,
-        _topk_per_qid,
-    )
+    from gmall_flink_realtime4_spark.plans.llm_pipeline_queries import ADC_TOPK
     from gmall_flink_realtime4_spark.plans.llm_queries import (
         _ranked_topk_per_query,
     )
@@ -108,7 +106,10 @@ def test_two_phase_topk_property_random_frames(spark):
             [(q, v, s) for q, v, s in uniq], "qid long, vec_id long, ad2 long"
         )
         got_asc = sorted(
-            (r["qid"], r["vec_id"]) for r in _topk_per_qid(asc, "ad2").collect()
+            (r["qid"], r["vec_id"])
+            for r in _ranked_topk_per_query(
+                asc, "qid", "vec_id", F.col("ad2"), ADC_TOPK
+            ).collect()
         )
         exp_asc = []
         for q in {q for q, _, _ in uniq}:
@@ -122,7 +123,13 @@ def test_two_phase_topk_property_random_frames(spark):
         )
         got_desc = sorted(
             (r["query_vec_id"], r["neighbor_vec_id"], r["rank"])
-            for r in _ranked_topk_per_query(desc, 5).collect()
+            for r in _ranked_topk_per_query(
+                desc,
+                "query_vec_id",
+                "neighbor_vec_id",
+                F.col("cos_sim_e9").desc(),
+                5,
+            ).collect()
         )
         exp_desc = []
         for q in {q for q, _, _ in uniq}:

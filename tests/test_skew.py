@@ -1,5 +1,5 @@
-"""Equivalence tests for the skew-mitigation operators: each salted/two-
-phase form must produce exactly the plain form's result on skewed data."""
+"""Skew replication used by the SCALE.md evidence
+(tools/scale_sanity.replicate_skew)."""
 
 from __future__ import annotations
 
@@ -7,115 +7,6 @@ import os
 import sys
 
 import pyspark.sql.functions as F
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from gmall_flink_realtime4_spark.operators.skew import (
-    salted_collect_set,
-    salted_join,
-    two_phase_distinct_count,
-)
-
-
-def _skewed(spark):
-    # one hot key (90% of rows) + a long tail
-    rows = [("hot", i, f"v{i % 7}") for i in range(900)] + [
-        (f"k{i}", i, f"v{i % 5}") for i in range(100)
-    ]
-    return spark.createDataFrame(rows, "key string, seq long, val string")
-
-
-def test_salted_join_matches_plain_join(spark):
-    big = _skewed(spark)
-    small = spark.createDataFrame(
-        [("hot", "HOT"), ("k1", "K1"), ("k2", "K2")], "key string, name string"
-    )
-    plain = big.join(small, "key").select("key", "seq", "name")
-    salted = salted_join(big, small, "key", n_salts=4).select("key", "seq", "name")
-    assert sorted(map(tuple, salted.collect())) == sorted(
-        map(tuple, plain.collect())
-    )
-
-
-def test_salted_join_left_outer(spark):
-    big = _skewed(spark)
-    small = spark.createDataFrame([("hot", "HOT")], "key string, name string")
-    plain = big.join(small, "key", "left").select("key", "seq", "name")
-    salted = salted_join(big, small, "key", n_salts=4, how="left").select(
-        "key", "seq", "name"
-    )
-    assert sorted(map(tuple, salted.collect(), )) == sorted(
-        map(tuple, plain.collect())
-    )
-
-
-def test_two_phase_distinct_count(spark):
-    df = _skewed(spark)
-    plain = df.groupBy("key").agg(F.countDistinct("val").alias("distinct_count"))
-    two = two_phase_distinct_count(df, ["key"], "val")
-    assert sorted(map(tuple, two.collect())) == sorted(map(tuple, plain.collect()))
-
-
-def test_salted_collect_set(spark):
-    df = _skewed(spark)
-    plain = df.groupBy("key").agg(F.array_sort(F.collect_set("val")).alias("values"))
-    salted = salted_collect_set(df, ["key"], "val", n_salts=4)
-    a = {r["key"]: list(r["values"]) for r in plain.collect()}
-    b = {r["key"]: list(r["values"]) for r in salted.collect()}
-    assert a == b
-
-
-def test_two_phase_distinct_count_null_semantics(spark):
-    """Must match SQL COUNT(DISTINCT x): NULL is not a value, and an
-    all-NULL key still appears with count 0."""
-    df = spark.createDataFrame(
-        [("a", "x"), ("a", None), ("a", "x"), ("b", None)],
-        "key string, val string",
-    )
-    got = {
-        r.key: r.distinct_count
-        for r in two_phase_distinct_count(df, ["key"], "val").collect()
-    }
-    ref = {
-        r.key: r.c
-        for r in df.groupBy("key")
-        .agg(F.countDistinct("val").alias("c"))
-        .collect()
-    }
-    assert got == ref == {"a": 1, "b": 0}
-
-
-def test_two_phase_distinct_count_null_key_group(spark):
-    """SQL GROUP BY treats NULL keys as one real group: a NULL-key group
-    whose distinct_col has real values must keep its true count (a plain
-    using-columns join would null-match it down to 0)."""
-    df = spark.createDataFrame(
-        [(None, "x"), (None, "y"), (None, None), ("a", "x")],
-        "key string, val string",
-    )
-    got = {
-        r.key: r.distinct_count
-        for r in two_phase_distinct_count(df, ["key"], "val").collect()
-    }
-    ref = {
-        r.key: r.c
-        for r in df.groupBy("key")
-        .agg(F.countDistinct("val").alias("c"))
-        .collect()
-    }
-    assert got == ref == {None: 2, "a": 1}
-
-
-def test_salted_join_rejects_small_side_preserving_modes(spark):
-    """right/full outer would emit unmatched small-side rows once per salt
-    replica — the operator must refuse instead of silently duplicating."""
-    import pytest as _pt
-
-    big = spark.createDataFrame([("k", 1)], "key string, seq int")
-    small = spark.createDataFrame([("k", "n")], "key string, name string")
-    for bad in ("right", "full", "outer"):
-        with _pt.raises(ValueError):
-            salted_join(big, small, "key", how=bad)
 
 
 def test_replicate_skew_plants_documented_hot_keys(spark, tmp_path, monkeypatch):

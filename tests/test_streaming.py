@@ -10,8 +10,6 @@ sink (K3/K5). Watermark late-row semantics (W1/W3) get a dedicated test.
 
 from __future__ import annotations
 
-import pytest
-
 import os
 import sys
 
@@ -118,83 +116,6 @@ def test_first_today_dedup_stream_parity(spark, tmp_path):
 
     assert key(streamed) == key(batch)
     assert streamed.count() == batch.count()
-
-
-def test_first_today_bounded_state_stream_parity(spark, tmp_path):
-    """A8/W4 twin: the bounded-state keyed-state form (event-time-timeout
-    eviction) emits the same (key, day) first-visit universe as the batch
-    min-ts keeper when batches arrive in time order."""
-    from gmall_flink_realtime4_spark.operators.dedup import (
-        first_today_bounded_state,
-    )
-
-    e = _events(spark)
-    batch = first_today(e, "user_id", "ts")
-    src = empty_stream_dir(str(tmp_path))
-    s = stream_parquet_source(spark, src, e.schema, max_files_per_trigger=1000)
-    streamed = run_to_memory(
-        first_today_bounded_state(
-            s.withWatermark("ts", "1 hour"), "user_id", "ts", ttl_hours=36
-        ),
-        output_mode="append",
-        stages=_stage_writes(src, time_slices(e, 3, "ts")),
-    )
-
-    def key(df):
-        return sorted(
-            (r[0], r[1])
-            for r in df.select("user_id", F.date_format("ts", "yyyy-MM-dd")).collect()
-        )
-
-    assert key(streamed) == key(batch)
-    assert streamed.count() == batch.count()
-
-
-def test_first_today_bounded_state_chained_window_agg(spark, tmp_path):
-    """A8/W4 + A5: the bounded-state dedup CHAINED into a tumbling count —
-    exercises the documented contract that applyInPandasWithState strips
-    watermark metadata, so the watermark is re-declared AFTER the stateful
-    op and the windowed agg still closes windows correctly."""
-    from gmall_flink_realtime4_spark.operators.dedup import (
-        first_today,
-        first_today_bounded_state,
-    )
-    from gmall_flink_realtime4_spark.operators.windows import tumble
-
-    e = _events(spark)
-    batch = tumble(
-        first_today(e, "user_id", "ts"),
-        "ts",
-        "1 day",
-        aggs=[F.count(F.lit(1)).alias("uu_ct")],
-    )
-    src = empty_stream_dir(str(tmp_path))
-    s = stream_parquet_source(spark, src, e.schema, max_files_per_trigger=1000)
-    firsts = first_today_bounded_state(
-        s.withWatermark("ts", "1 hour"), "user_id", "ts", ttl_hours=48
-    )
-    streamed_df = tumble(
-        firsts,
-        "ts",
-        "1 day",
-        aggs=[F.count(F.lit(1)).alias("uu_ct")],
-        watermark="5 seconds",  # re-declared: the stateful op ate the first
-    )
-    # two chained stateful ops with a re-declared watermark trip Spark's
-    # global-watermark correctness guard; the op emits rows at their own
-    # event time (never older than its input batch), so the documented
-    # escape hatch is safe here — see first_today_bounded_state docstring
-    check = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
-    spark.conf.set(check, "false")
-    try:
-        stages = _stage_writes(src, time_slices(e, 3, "ts") + [_flush_row(spark)])
-        got = run_to_memory(streamed_df, output_mode="append", stages=stages)
-    finally:
-        spark.conf.set(check, "true")
-    cols = ["stt", "uu_ct"]
-    assert _rows(got.filter(F.col("stt") < "2025-01-01"), cols) == _rows(
-        batch, cols
-    )
 
 
 def test_kmv_sketch_windowed_stream_parity(spark, tmp_path):
@@ -513,47 +434,6 @@ def test_dedup_within_watermark_ttl_semantics(spark, tmp_path):
     assert by_id[1] == 2 and by_id[2] == 1
 
 
-def test_diff_state_deltas_net_out_revisions(spark, tmp_path):
-    """A1 exact: a re-emitted upsert with REVISED amounts must net to the
-    latest value in a windowed sum (keeper-dedup can't do this; the
-    reference's MapState diff emission can)."""
-    from gmall_flink_realtime4_spark.operators.stateful import (
-        diff_state_deltas_streaming,
-    )
-
-    schema = "id long, event_time timestamp, amount double"
-
-    def frame(rows):
-        return spark.createDataFrame(
-            rows, "id long, event_time string, amount double"
-        ).select(
-            "id", F.col("event_time").cast("timestamp").alias("event_time"),
-            "amount",
-        )
-
-    src = empty_stream_dir(str(tmp_path))
-    s = stream_parquet_source(spark, src, schema, max_files_per_trigger=1000)
-    deltas = diff_state_deltas_streaming(s, "id", ["amount"])
-    agged = (
-        deltas.withWatermark("event_time", "5 seconds")
-        .groupBy(F.window("event_time", "1 hour").alias("w"))
-        .agg(F.sum("amount").alias("total"))
-        .select(F.col("w.start").alias("stt"), "total")
-    )
-    stages = _stage_writes(
-        src,
-        [
-            frame([(1, "2024-01-01 00:00:01", 10.0), (2, "2024-01-01 00:00:02", 5.0)]),
-            frame([(1, "2024-01-01 00:00:03", 15.0)]),  # revision of id=1
-            frame([(9, "2024-01-01 06:00:00", 0.0)]),  # flush
-        ],
-    )
-    got = run_to_memory(agged, output_mode="append", stages=stages)
-    by_window = {r["stt"].isoformat(): r["total"] for r in got.collect()}
-    # latest amounts: id1=15, id2=5 -> 20 (a plain sum of emissions = 30)
-    assert by_window["2024-01-01T00:00:00"] == 20.0
-
-
 def test_upsert_parquet_across_batches(spark, tmp_path):
     """K5 across micro-batches: a later batch must upsert over keys merged
     in an earlier batch (read-merge-overwrite cycle), and a late delete
@@ -690,150 +570,6 @@ def test_incremental_corpus_dedup_foreach_batch(spark, tmp_path):
     )
     got = _rows(spark.read.parquet(target), ["fp", "doc_id"])
     assert got == _rows(expected, ["fp", "doc_id"]) and got
-
-
-def _tws_available() -> bool:
-    """transformWithStateInPandas needs the google.protobuf RUNTIME for
-    its state protocol; this sandbox ships pyspark 4.1.2 without it, so
-    the port is code-complete but its e2e tests skip here (they run
-    wherever protobuf is installed).
-
-    Unblock attempted and recorded r11 (ROUND11_NOTES 'protobuf
-    impossibility'): no protobuf wheel, conda pkg, or vendored runtime
-    exists anywhere on this image (only typeshed .pyi stubs), installs
-    are prohibited, and pyspark's generated StateMessage_pb2 gencode is
-    pinned to Protobuf Python 6.33.0 with ValidateProtobufRuntimeVersion
-    — so even a smuggled older runtime would be version-rejected. The
-    applyInPandasWithState twin covers the same semantics and IS tested
-    (test_first_today_stream_parity et al.)."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _tws_available(),
-    reason="google.protobuf not installed (transformWithState state protocol)",
-)
-def test_first_today_tws_stream_parity(spark, tmp_path):
-    """A8/W4 on the Spark 4 transformWithState engine: same (key, day)
-    first-visit universe as the batch min-ts keeper."""
-    from gmall_flink_realtime4_spark.operators.dedup import (
-        first_today,
-        first_today_tws,
-    )
-
-    e = _events(spark)
-    batch = first_today(e, "user_id", "ts")
-    src = empty_stream_dir(str(tmp_path))
-    s = stream_parquet_source(spark, src, e.schema, max_files_per_trigger=1000)
-    prov = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(prov, None)
-    spark.conf.set(
-        prov,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        streamed = run_to_memory(
-            first_today_tws(
-                s.withWatermark("ts", "1 hour"), "user_id", "ts", ttl_hours=36
-            ),
-            output_mode="append",
-            stages=_stage_writes(src, time_slices(e, 3, "ts")),
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset(prov)
-        else:
-            spark.conf.set(prov, prev)
-
-    def key(df):
-        return sorted(
-            (r[0], r[1])
-            for r in df.select(
-                "user_id", F.date_format("ts", "yyyy-MM-dd")
-            ).collect()
-        )
-
-    assert key(streamed) == key(batch)
-    assert streamed.count() == batch.count()
-
-
-@pytest.mark.skipif(
-    not _tws_available(),
-    reason="google.protobuf not installed (transformWithState state protocol)",
-)
-def test_first_today_tws_chained_window_agg_no_escape_hatch(spark, tmp_path):
-    """The transformWithState port's whole point: eventTimeColumnName keeps
-    the watermark alive through the stateful op, so the chained tumbling
-    agg needs NO re-declared watermark and the checkCorrectness guard
-    stays ON (the applyInPandasWithState twin needs both escape hatches)."""
-    from gmall_flink_realtime4_spark.operators.dedup import (
-        first_today,
-        first_today_tws,
-    )
-    from gmall_flink_realtime4_spark.operators.windows import tumble
-
-    e = _events(spark)
-    batch = tumble(
-        first_today(e, "user_id", "ts"),
-        "ts",
-        "1 day",
-        aggs=[F.count(F.lit(1)).alias("uu_ct")],
-    )
-    src = empty_stream_dir(str(tmp_path))
-    s = stream_parquet_source(spark, src, e.schema, max_files_per_trigger=1000)
-    prov = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(prov, None)
-    spark.conf.set(
-        prov,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    check = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
-    assert spark.conf.get(check) != "false"  # guard stays ON end-to-end
-    try:
-        firsts = first_today_tws(
-            s.withWatermark("ts", "1 hour"), "user_id", "ts", ttl_hours=48
-        )
-        streamed_df = tumble(
-            firsts,
-            "ts",
-            "1 day",
-            aggs=[F.count(F.lit(1)).alias("uu_ct")],
-            # no watermark re-declaration: it survived the stateful op
-        )
-        stages = _stage_writes(src, time_slices(e, 3, "ts") + [_flush_row(spark)])
-        got = run_to_memory(streamed_df, output_mode="append", stages=stages)
-    finally:
-        if prev is None:
-            spark.conf.unset(prov)
-        else:
-            spark.conf.set(prov, prev)
-    cols = ["stt", "uu_ct"]
-    assert _rows(got.filter(F.col("stt") < "2025-01-01"), cols) == _rows(
-        batch, cols
-    )
-
-
-def test_first_today_tws_constructs(spark, tmp_path):
-    """Construction-only check (like the Kafka factories): the
-    transformWithState plan must build against a streaming source with the
-    input schema preserved — full e2e runs where protobuf is available."""
-    from gmall_flink_realtime4_spark.operators.dedup import first_today_tws
-
-    e = _events(spark)
-    src = empty_stream_dir(str(tmp_path))
-    s = stream_parquet_source(spark, src, e.schema)
-    out = first_today_tws(
-        s.withWatermark("ts", "1 hour"), "user_id", "ts", ttl_hours=36
-    )
-    assert out.isStreaming
-    assert set(out.columns) == set(e.columns)
 
 
 def test_incremental_checksum_partials_merge(spark, tmp_path):
@@ -1048,55 +784,6 @@ def test_incremental_path_transitions_state_table(spark, tmp_path):
     assert got == expected and got
 
 
-def test_first_today_bounded_state_multi_chunk_batch(spark, tmp_path):
-    """Regression: Arrow hands a key's micro-batch as multiple chunks in no
-    guaranteed mutual order — sorting chunks independently let a later
-    chunk's older row rewind last_day and re-emit an already-emitted
-    (key, day). Forcing 1-row chunks with out-of-order days in one batch
-    must still yield exactly one row per (key, day)."""
-    from gmall_flink_realtime4_spark.operators.dedup import (
-        first_today_bounded_state,
-    )
-
-    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "1")
-    try:
-        # one key, one micro-batch, rows deliberately day-interleaved:
-        # day2, day1, day2 — pre-fix this emitted day2 twice
-        rows = [
-            ("u1", "2024-01-02 10:00:00"),
-            ("u1", "2024-01-01 09:00:00"),
-            ("u1", "2024-01-02 11:00:00"),
-            ("u1", "2024-01-01 12:00:00"),
-        ]
-        e = spark.createDataFrame(rows, "user_id string, ts_s string").select(
-            "user_id", F.col("ts_s").cast("timestamp").alias("ts")
-        )
-        src = empty_stream_dir(str(tmp_path))
-        s = stream_parquet_source(
-            spark, src, e.schema, max_files_per_trigger=1000
-        )
-        streamed = run_to_memory(
-            first_today_bounded_state(
-                s.withWatermark("ts", "1 hour"), "user_id", "ts"
-            ),
-            output_mode="append",
-            stages=_stage_writes(src, [e.coalesce(1)]),
-        )
-        got = sorted(
-            (r[0], r[1])
-            for r in streamed.select(
-                "user_id", F.date_format("ts", "yyyy-MM-dd")
-            ).collect()
-        )
-        assert got == [("u1", "2024-01-01"), ("u1", "2024-01-02")]
-        # and the kept rows are the day-FIRST events
-        kept_ts = sorted(str(r.ts) for r in streamed.collect())
-        assert kept_ts == ["2024-01-01 09:00:00", "2024-01-02 10:00:00"]
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
-
-
 def test_repair_is_new_streaming_multi_chunk_batch(spark, tmp_path):
     """Same chunk-order regression for the is_new repair state machine:
     with 1-row Arrow chunks and an out-of-order batch, the FIRST visit
@@ -1191,81 +878,6 @@ def test_upsert_parquet_tie_break_deterministic(spark, tmp_path):
         upsert_parquet(b, path, ["k"], "ver")
         got = [(r.ver, r.v) for r in spark.read.parquet(path).collect()]
         assert got == [(1, "v7")]  # max payload tuple wins, every time
-
-
-def test_first_today_bounded_state_late_prior_day_no_rewind(spark, tmp_path):
-    """An in-watermark late event from a PRIOR day arriving in a later
-    micro-batch must emit that day's first visit ONCE without rewinding
-    the state — a last-day equality check would re-emit the newer day on
-    the next event (duplicate (key, day) rows)."""
-    from gmall_flink_realtime4_spark.operators.dedup import (
-        first_today_bounded_state,
-    )
-
-    cols = "user_id string, ts_s string"
-    b1 = spark.createDataFrame([("u", "2024-01-02 10:00:00")], cols)
-    b2 = spark.createDataFrame(
-        [("u", "2024-01-01 23:30:00")], cols  # late prior-day, in watermark
-    )
-    b3 = spark.createDataFrame(
-        [("u", "2024-01-02 11:00:00")], cols  # must NOT re-emit day2
-    )
-    frames = [
-        b.select("user_id", F.col("ts_s").cast("timestamp").alias("ts"))
-        for b in (b1, b2, b3)
-    ]
-    src = empty_stream_dir(str(tmp_path))
-    s = stream_parquet_source(
-        spark, src, frames[0].schema, max_files_per_trigger=1000
-    )
-    streamed = run_to_memory(
-        first_today_bounded_state(
-            s.withWatermark("ts", "2 days"), "user_id", "ts"
-        ),
-        output_mode="append",
-        stages=_stage_writes(src, frames),
-    )
-    got = sorted(
-        (r[0], r[1])
-        for r in streamed.select(
-            "user_id", F.date_format("ts", "yyyy-MM-dd")
-        ).collect()
-    )
-    assert got == [("u", "2024-01-01"), ("u", "2024-01-02")]
-
-
-def test_diff_state_deltas_late_row_does_not_rewind(spark, tmp_path):
-    """A cross-batch late row (older event time) must emit delta 0 so
-    SUM(deltas) stays at the max-event-time value instead of rewinding to
-    whichever row arrived last."""
-    from gmall_flink_realtime4_spark.operators.stateful import (
-        diff_state_deltas_streaming,
-    )
-
-    cols = "id string, event_time timestamp, amt double"
-    b1 = spark.createDataFrame(
-        [("x", "2024-01-01 10:00:00", 100.0)], "id string, ts_s string, amt double"
-    )
-    b2 = spark.createDataFrame(
-        [("x", "2024-01-01 09:00:00", 80.0)], "id string, ts_s string, amt double"
-    )
-    frames = [
-        b.select("id", F.col("ts_s").cast("timestamp").alias("event_time"), "amt")
-        for b in (b1, b2)
-    ]
-    src = empty_stream_dir(str(tmp_path))
-    s = stream_parquet_source(
-        spark, src, frames[0].schema, max_files_per_trigger=1000
-    )
-    streamed = run_to_memory(
-        diff_state_deltas_streaming(
-            s.withWatermark("event_time", "1 day"), "id", ["amt"]
-        ),
-        output_mode="append",
-        stages=_stage_writes(src, frames),
-    )
-    total = sum(r.amt for r in streamed.collect())
-    assert total == 100.0  # late 80-amount row contributed delta 0
 
 
 def test_incremental_anomaly_partials_merge(spark, tmp_path):

@@ -469,82 +469,6 @@ def test_trademark_refund_window_end_to_end_stream_vs_batch(spark, tmp_path):
     assert streamed == expect
 
 
-def test_sku_order_revised_amount_netting_stream_vs_batch(spark, tmp_path):
-    """A1 exact diff-state e2e: a re-emission that CHANGES the amounts —
-    the case keeper-dedup can't net out (reference MapState diff semantics,
-    DwsTradeSkuOrderWindow.java:77-118). diff_state_deltas_streaming chains
-    into the windowed sum; the batch oracle keeps the LAST emission per id.
-    Watermark attaches AFTER the stateful op (applyInPandasWithState strips
-    watermark metadata)."""
-    from gmall_flink_realtime4_spark.operators.dedup import dedup_upserts
-    from gmall_flink_realtime4_spark.operators.stateful import (
-        diff_state_deltas_streaming,
-    )
-    from gmall_flink_realtime4_spark.operators.windows import tumble
-
-    schema = (
-        "id string, sku_id string, split_total_amount double,"
-        " original_amount double, ts long"
-    )
-    rows = [
-        ("d1", "s1", 20.0, 21.0, 100),
-        ("d1", "s1", 25.0, 26.0, 105),  # REVISED amounts, same 10 s window
-        ("d2", "s1", 5.0, 5.0, 103),
-        ("d3", "s2", 7.0, 7.0, 111),    # next window
-    ]
-
-    def to_frame(vs):
-        return spark.createDataFrame(vs, schema).withColumn(
-            "event_time",
-            F.expr("cast(timestamp_seconds(ts) as timestamp_ntz)"),
-        )
-
-    def agg(df, watermark):
-        return tumble(
-            df,
-            "event_time",
-            "10 seconds",
-            keys=[F.col("sku_id")],
-            aggs=[
-                F.sum("split_total_amount").alias("order_amount"),
-                F.sum("original_amount").alias("orig_amount"),
-            ],
-            watermark=watermark,
-        )
-
-    # batch oracle: last emission per id wins (ts desc, deterministic)
-    last = dedup_upserts(
-        to_frame(rows).withColumn("neg_ts", -F.col("ts")),
-        ["id"],
-        order_col="neg_ts",
-    ).drop("neg_ts")
-    cols = ["stt", "sku_id", "order_amount", "orig_amount"]
-    expect = sorted(tuple(str(r[c]) for c in cols) for r in agg(last, None).collect())
-    assert [(r[2], r[3]) for r in expect] == [("30.0", "31.0"), ("7.0", "7.0")]
-
-    src = empty_stream_dir(str(tmp_path))
-    s = stream_parquet_source(
-        spark,
-        src,
-        schema + ", event_time timestamp_ntz",
-        1000,
-    )
-    deltas = diff_state_deltas_streaming(
-        s, "id", ["split_total_amount", "original_amount"], ts_col="event_time"
-    )
-    flush = [("zz", "s1", 0.0, 0.0, 10_000_000)]
-    stages = [
-        (lambda vs=vs: to_frame(vs).coalesce(1).write.mode("append").parquet(src))
-        for vs in (rows[:2], rows[2:], flush)
-    ]
-    got = run_to_memory(agg(deltas, "5 seconds"), "append", stages=stages)
-    streamed = sorted(
-        tuple(str(r[c]) for c in cols)
-        for r in got.filter(F.col("stt") < "1970-02-01").collect()
-    )
-    assert streamed == expect
-
-
 def test_province_window_end_to_end_stream_vs_batch(spark, tmp_path):
     """DwsTradeProvinceOrderWindow streaming: DISTINCT order/user counts
     (A7) via tagged dedup-stream union — countDistinct has no streaming
