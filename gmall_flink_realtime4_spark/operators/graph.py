@@ -190,8 +190,8 @@ def connected_components(
     # 3 to converge + 3 to observe no change; per-sweep checks pay 3),
     # and the checkpoint is NON-eager so the check's sum-agg action
     # materializes it in the same job (one job per sweep, not two). The
-    # per-check cost is one scalar collect over the 8-partition
-    # checkpointed frame. max_rounds still bounds sweeps EXACTLY.
+    # per-check cost is one scalar collect over the checkpointed frame,
+    # whose width AQE coalesces. max_rounds still bounds sweeps EXACTLY.
     prev_sum = labels.agg(F.sum("lab")).collect()[0][0]
     done_rounds = 0
     while max_rounds is None or done_rounds < max_rounds:

@@ -442,9 +442,10 @@ def f_unpivot_event_day(spark: SparkSession, sf_dir: str) -> DataFrame:
 # NULL FKs, how many orphans (non-NULL FK with no parent). Complements
 # dq_reconcile_orders_lineitem (which reconciles amounts on one edge).
 #
-# Scale (r13): every probe keeps the broadcast-probe shape — child rows
-# NEVER shuffle; each edge is a left join against the DISTINCT parent keys
-# and a one-row count agg — but lineitem's 3 probes now share ONE scan:
+# Scale (r13): every probe whose parent fits the broadcast threshold keeps
+# the broadcast-probe shape — child rows do not shuffle; each edge is a
+# left join against the DISTINCT parent keys and a one-row count agg —
+# but lineitem's 3 probes now share ONE scan:
 # three broadcast hash joins stacked in a single codegen stage (distinct
 # parent keys cannot multiply rows), one 9-measure agg, stack()ed back to
 # 3 audit rows. Scans of lineitem 3 -> 1, probe branches 7 -> 5.
@@ -456,8 +457,13 @@ def f_unpivot_event_day(spark: SparkSession, sf_dir: str) -> DataFrame:
 # counts (~|orders| rows — unique keys do not collapse map-side), while
 # the broadcast probes shuffle NOTHING on the child side; page-cached
 # parallel scans + broadcast probes beat one giant exchange at every
-# measurable tier. If a parent ever outgrows the broadcast threshold, AQE
-# degrades that one edge to SMJ — the same fallback the old shape had.
+# measurable tier.
+#
+# Only the dimension parents (part, supplier, customer, nation, region)
+# carry a broadcast hint. A user hint bypasses autoBroadcastJoinThreshold
+# and AQE never demotes it, so the fact-sized distinct o_orderkey parent is
+# left to the threshold: it broadcasts while it fits and falls back to a
+# sort-merge join once it outgrows it.
 # ---------------------------------------------------------------------------
 _FK_EDGES = (
     ("lineitem.l_orderkey->orders", "lineitem", "l_orderkey", "orders", "o_orderkey"),
@@ -468,6 +474,7 @@ _FK_EDGES = (
     ("supplier.s_nationkey->nation", "supplier", "s_nationkey", "nation", "n_nationkey"),
     ("nation.n_regionkey->region", "nation", "n_regionkey", "region", "r_regionkey"),
 )
+_DIM_PARENTS = frozenset({"part", "supplier", "customer", "nation", "region"})
 
 
 @query(
@@ -509,7 +516,9 @@ def dq_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .select(F.col(pk).alias(f"pk{i}"))
                 .distinct()
             )
-            j = j.join(F.broadcast(p), j[f"fk{i}"] == p[f"pk{i}"], "left")
+            if parent in _DIM_PARENTS:
+                p = F.broadcast(p)
+            j = j.join(p, j[f"fk{i}"] == p[f"pk{i}"], "left")
         agg = j.agg(
             F.count(F.lit(1)).cast("bigint").alias("n_child"),
             *[

@@ -117,7 +117,9 @@ def raw_log(spark: SparkSession, sf_dir: str) -> DataFrame:
         raw.repartition(spark.sparkContext.defaultParallelism).write.mode(
             "overwrite"
         ).parquet(cache_dir)
-    return spark.read.parquet(cache_dir)
+    # the one-column schema is known: reading with it skips the footer-
+    # merge schema-inference job a bare read launches on every call
+    return spark.read.schema("value string").parquet(cache_dir)
 
 
 def _split(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

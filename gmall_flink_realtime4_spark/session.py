@@ -7,7 +7,8 @@ serves every pipeline. Confs are split into:
 - BUILD_CONFS: set at builder time when *we* own the session (tests, bench).
 - RUNTIME_CONFS: safe to set on an externally-created session (the driver's
   verify harness builds its own SparkSession and passes it in) — session
-  timezone, parquet nanos handling, AQE/shuffle sizing.
+  timezone, parquet nanos handling, AQE/shuffle sizing, the streaming
+  checkpoint file manager.
 
 Determinism notes (for the DuckDB oracle gate):
 - session timezone is pinned to UTC so TIMESTAMP / date_format results are
@@ -48,6 +49,20 @@ RUNTIME_CONFS: dict[str, str] = {
     # partitions — size the shuffles to the box like our own sessions do
     # (AQE still coalesces below this; purely a perf normalization)
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+    # Streaming checkpoints (offset/commit logs, state deltas, snapshots and
+    # their checksum files) go through FileSystem, not Spark's default
+    # FileContext manager. Without the native-hadoop library the local
+    # FileContext path forks a shell per file (`readlink` on every rename,
+    # `chmod` on create), and the state-store tasks spent most of their
+    # wall time waiting on those forks. This manager writes a temp file and
+    # renames it, with the same file names and layout; Spark's checkpoint
+    # checksums (fileChecksum.enabled, left on) and Hadoop's .crc sidecars
+    # are kept. The class moved package in Spark 4.1 (tests/test_streaming.py
+    # loads it through the JVM).
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ),
 }
 
 BUILD_CONFS: dict[str, str] = {

@@ -5,6 +5,12 @@ an idempotent target (parquet/Delta overwrite-merge, or Kafka with
 downstream dedup by key) — the effective equivalent of the reference's
 transactional Kafka producer (FlinkSinkUtil.java:25-36; its checkpointing
 is commented out, BaseAPP.java:33-50, so this engine is strictly stronger).
+
+Caller-supplied checkpoint paths (Kafka or parquet sinks on HDFS included)
+are written by the same Spark-supported checkpoint manager the session
+sets (``session.RUNTIME_CONFS``): a temp file, then a ``FileSystem``
+rename. Under ``overwriteIfPossible`` a rename onto an existing HDFS file
+does not replace it: the old file is kept.
 """
 
 from __future__ import annotations

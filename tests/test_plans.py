@@ -496,6 +496,45 @@ def test_referential_integrity_no_cartesian_dims_broadcast(spark):
     assert "BroadcastHashJoin" in plan
 
 
+def test_referential_integrity_orders_edge_respects_threshold(spark):
+    """Only the dimension parents carry a broadcast hint. With the
+    broadcast threshold below the distinct o_orderkey side, that edge must
+    fall back to a sort-merge join (a hint would force the broadcast past
+    the threshold, and AQE never demotes a hint) while the five dimension
+    parents still broadcast on all six of their edges."""
+    import contextlib
+    import io
+    import re
+
+    df = queries()["dq_referential_integrity"](spark, SF)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain("formatted")
+    finally:
+        spark.conf.set(key, prev)
+    plan = buf.getvalue()
+
+    def parent_cols(join):
+        # source column of each join node's right (build/parent) key
+        out = []
+        for block in plan.split("\n\n"):
+            if re.match(rf"\(\d+\) {join}\n", block):
+                rk = re.search(r"Right keys \[1\]: \[(\S+)\]", block).group(1)
+                src = re.search(rf"(\w+)#\d+L? AS {re.escape(rk)}", plan)
+                out.append(src.group(1))
+        return sorted(out)
+
+    assert parent_cols("SortMergeJoin") == ["o_orderkey"]
+    assert parent_cols("BroadcastHashJoin") == sorted(
+        ["p_partkey", "s_suppkey", "c_custkey", "n_nationkey", "n_nationkey",
+         "r_regionkey"]
+    )
+
+
 def test_path_transitions_window_keyed_by_user(spark):
     """The lag() window must partition by user_id (maximum-cardinality key
     -> scales out; an unpartitioned window would serialize the corpus) and

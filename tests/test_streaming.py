@@ -401,6 +401,128 @@ def test_checkpoint_recovery_exactly_once(spark, tmp_path):
     assert got == [("a", 2), ("b", 4), ("c", 6)]
 
 
+def test_checkpoint_file_manager_class_loads(spark):
+    """The session routes checkpoints through Spark's FileSystem manager
+    (no per-file shell forks on a local FS without native hadoop). The
+    class moved package in Spark 4.1: an upgrade must fail here, not at
+    the first streaming start()."""
+    from gmall_flink_realtime4_spark.session import RUNTIME_CONFS
+
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    name = spark.conf.get(key)
+    assert name == RUNTIME_CONFS[key]
+    jvm = spark._jvm
+    cls = jvm.java.lang.Class.forName(name)
+    base = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager"
+    )
+    assert base.isAssignableFrom(cls)
+    # Spark's checkpoint checksums still wrap the manager
+    assert spark.conf.get(
+        "spark.sql.streaming.checkpoint.fileChecksum.enabled"
+    ) == "true"
+
+
+def test_page_view_window_restart_from_checkpoint(spark, tmp_path):
+    """The traffic page-view twin (first-today dedup state + window state)
+    over two in-order slices, stopped, then restarted from the SAME
+    checkpoint with the remaining slices and a flush row: batch ids
+    continue past the stop, the union of emitted rows equals the batch
+    twin, and the state store's delta files carry Spark's checksum
+    sidecars (``N.delta.crc``) and Hadoop's (``.N.delta.crc``)."""
+    import re
+
+    from gmall_flink_realtime4_spark.pipelines import dws
+
+    # dims are functions of mid, so which of a mid's same-day rows the
+    # streaming dedup keeps cannot move its uv into another group
+    page = T.load(spark, SF, "events").select(
+        F.struct(
+            F.col("user_id").cast("string").alias("mid"),
+            F.concat(F.lit("v"), (F.col("user_id") % 3).cast("string")).alias("vc"),
+            F.lit("app").alias("ch"),
+            (F.col("user_id") % 7).cast("string").alias("ar"),
+            (F.col("user_id") % 2).cast("string").alias("is_new"),
+        ).alias("common"),
+        F.struct(
+            F.when(F.col("event_id") % 3 != 0, F.lit("home")).alias("last_page_id"),
+            F.floor(F.col("value") * 100).cast("bigint").alias("during_time"),
+        ).alias("page"),
+        F.expr("unix_millis(cast(ts as timestamp))").alias("ts"),
+    )
+    cols = ["stt", "vc", "ch", "ar", "is_new", "uv_ct", "sv_ct", "pv_ct", "dur_sum"]
+    expected = _rows(
+        dws.traffic_vc_ch_ar_is_new_page_view_window(
+            page, window="1 day", streaming=False
+        ),
+        cols,
+    )
+    flush = page.limit(1).select(
+        F.struct(
+            F.lit("__flush").alias("mid"), F.lit("__flush").alias("vc"),
+            F.lit("app").alias("ch"), F.lit("0").alias("ar"),
+            F.lit("0").alias("is_new"),
+        ).alias("common"),
+        "page",
+        (F.col("ts") + F.lit(30 * 86_400_000)).alias("ts"),
+    )
+    slices = time_slices(page, 4, "ts")
+
+    src = empty_stream_dir(str(tmp_path))
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+
+    def emit(bdf, bid):
+        # batch-id keyed overwrite: a batch replayed after a crash rewrites
+        # its own output
+        bdf.write.mode("overwrite").parquet(os.path.join(out, f"batch_id={bid}"))
+
+    def run(frames):
+        q = (
+            dws.traffic_vc_ch_ar_is_new_page_view_window(
+                stream_parquet_source(spark, src, page.schema, 1000),
+                window="1 day",
+                streaming=True,
+            )
+            .writeStream.foreachBatch(emit)
+            .outputMode("append")
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        try:
+            for stage in _stage_writes(src, frames):
+                stage()
+                q.processAllAvailable()
+        finally:
+            q.stop()
+            q.awaitTermination()
+
+    def batch_ids():
+        return {int(d.split("=")[1]) for d in os.listdir(out)}
+
+    run(slices[:2])
+    first = batch_ids()
+    run(slices[2:] + [flush])
+    second = batch_ids() - first
+    assert first and second
+    assert min(second) > max(first)  # resumed, not re-numbered from 0
+
+    got = spark.read.parquet(out).filter(F.col("vc") != "__flush")
+    assert _rows(got, cols) == expected
+
+    state = os.path.join(ckpt, "state")
+    n_deltas = 0
+    for _, _, fs in os.walk(state):
+        for f in fs:
+            if re.fullmatch(r"\d+\.delta", f):
+                n_deltas += 1
+                assert f"{f}.crc" in fs  # Spark's checkpoint checksum
+                assert f".{f}.crc" in fs  # Hadoop's sidecar
+    assert n_deltas
+    # both state operators (dedup and window) kept their stores
+    assert len(os.listdir(state)) == 2
+
+
 def test_dedup_within_watermark_ttl_semantics(spark, tmp_path):
     """A1+W4: dropDuplicatesWithinWatermark nets out duplicates arriving
     within the watermark delay (the reference's 30 s TTL state) but NOT a
