@@ -17,13 +17,18 @@ Spark-first:
 Layout:
   session.py    SparkSession factory + runtime conf normalization
   tables.py     driver-testdata loaders + reference-domain adapters
-  plans/        batch/streaming-unified query definitions + oracle registry
-  operators/    reusable operator library (dedup, windows, joins, split, state)
-  functions/    scalar/UDF surface (dates, json, tokenizer)
-  sources/      Kafka / file / rate / CDC-envelope source factories
-  sinks/        Kafka / parquet-upsert / console sink factories
-  streaming/    runners wiring source -> transform -> sink
-  llm/          dedup / similarity / text-analysis / multimodal operators
+  schemas.py    CDC envelope / behavior-log StructTypes
+  plans/        registered queries + DuckDB oracles: the warehouse layers
+                (dwd/dws/log/window/func) and the domain modules (dedup,
+                retrieval, text, corpus, dq, olap, llm_multimodal)
+  operators/    shared primitives (dedup, windows, joins, split, state,
+                graph, pq, vectors, minhash, hashing, stopwords)
+  functions/    scalar/UDF surface (keyword tokenizer)
+  pipelines/    one transform module per reference app
+  sources/      topic_db CDC source
+  sinks/        routed-Kafka frame + idempotent parquet upsert sinks
+  streaming/    runners wiring source -> transform -> sink, and the
+                incremental (foreachBatch) twins
 """
 
 __version__ = "0.1.0"

@@ -4,13 +4,13 @@ The ONE copy of the PQ exact-integer kernel — subspace constants, the
 offset-int quantize pass, subspace split, exact squared-L2, the
 broadcast-codebook min-struct argmin, and the floored-integer-mean Lloyd
 trainer — imported by BOTH the batch plans
-(``plans.llm_pipeline_queries``: llm_ann_pq_encode / ivf_trained_recall /
+(``plans.retrieval_queries``: llm_ann_pq_encode / ivf_trained_recall /
 pq_adc_recall) and the streaming twin
 (``streaming.incremental.pq_train_partials``). Promoted out of the plans
 module (r12, ADVICE) so the streaming layer no longer reaches into plan
 internals: a rename/refactor here breaks both importers loudly at import
 time instead of silently at twin call time. Same pattern as
-``_hexval_sql``'s single home in ``plans.llm_scale_queries``.
+``hexval_sql``'s single home in ``operators.hashing``.
 
 Determinism contract (CLAUDE.md sign rule): every division runs on
 offset-POSITIVE integers so Spark's truncating ``div`` and DuckDB's
@@ -24,8 +24,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 # Quantize ladder shared with every embedding query (the ONE copy —
-# plans.llm_queries documents why a second copy is forbidden).
-from ..plans.llm_queries import _qdec
+# operators.vectors documents why a second copy is forbidden).
+from .vectors import qdec
 
 PQ_M = 8  # subspaces (64-dim vectors -> 8 x 8-dim subvectors)
 PQ_D = 8  # dims per subspace
@@ -64,7 +64,7 @@ def sqdist_int(a, b):
 def pq_fullint(emb: DataFrame) -> DataFrame:
     """(vec_id, full): the ONE quantize pass — offset-int whole vectors."""
     return emb.select(
-        "vec_id", sv_int(_qdec(F.col("embedding"))).alias("full")
+        "vec_id", sv_int(qdec(F.col("embedding"))).alias("full")
     )
 
 

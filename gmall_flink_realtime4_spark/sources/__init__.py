@@ -1,9 +1,3 @@
-"""Source factories (SURVEY.md §2.1 S1-S6)."""
+"""Source factories (SURVEY.md §2.1)."""
 
-from .factories import (  # noqa: F401
-    kafka_json_source,
-    kafka_string_source,
-    parquet_dim_source,
-    rate_source,
-    read_topic_db,
-)
+from .factories import read_topic_db  # noqa: F401

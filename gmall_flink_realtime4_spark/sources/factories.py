@@ -1,58 +1,18 @@
-"""Source factories — the engine's S1-S6 inventory (SURVEY.md §2.1).
+"""Source factories (SURVEY.md §2.1).
 
-Thin, declarative wrappers: each returns a DataFrame (streaming or batch)
-with a normalized shape, so pipelines never touch connector options. Kafka
-factories are construct-only in environments without a broker (the CI
-container) — they build the plan; starting the query needs the real
-bootstrap servers.
+``read_topic_db`` (S3) normalizes any frame of topic_db JSON strings —
+streaming or batch — into the CDC envelope with its event time and
+watermark, so pipelines never touch connector options. Kafka sources
+(S1/S2) need the ``spark-sql-kafka`` connector on the classpath; without
+it ``format("kafka")`` fails at plan time, so none is defined here.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from ..schemas import CDC_ENVELOPE
-
-
-def kafka_string_source(
-    spark: SparkSession,
-    topic: str,
-    bootstrap: str,
-    group_id: str,
-    starting_offsets: str = "latest",
-) -> DataFrame:
-    """S1 — Kafka topic -> stream of JSON strings (value-only UTF-8).
-
-    Reference: FlinkSourceUtil.java:21-48 (group id, latest offsets,
-    value-only deserializer; used by every DataStream app via
-    BaseAPP.java:53-55).
-    """
-    return (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
-        .option("kafka.group.id", group_id)
-        .load()
-        .select(F.col("value").cast("string").alias("value"))
-    )
-
-
-def kafka_json_source(
-    spark: SparkSession,
-    topic: str,
-    bootstrap: str,
-    group_id: str,
-    schema,
-) -> DataFrame:
-    """S2/S6 — Kafka JSON source decoded to columns.
-
-    Reference: SQLUtil.java:9-19 (DDL with format=json) and the per-app dwd
-    topic DDLs (DwdTradeOrderCancelDetail.java:25-44 etc.).
-    """
-    raw = kafka_string_source(spark, topic, bootstrap, group_id)
-    return raw.select(F.from_json("value", schema).alias("j")).select("j.*")
 
 
 def read_topic_db(
@@ -71,26 +31,3 @@ def read_topic_db(
     if watermark is not None and out.isStreaming:
         out = out.withWatermark("event_time", watermark)
     return out
-
-
-def parquet_dim_source(
-    spark: SparkSession, path: str, row_key: str = "row_key"
-) -> DataFrame:
-    """S5 — dimension table for lookup/broadcast joins.
-
-    Reference: the HBase lookup table with PARTIAL cache + async
-    (BaseSQLApp.java:68-83). Spark-first: the dim is a parquet/Delta
-    snapshot re-read per micro-batch (same freshness as the reference's 2 h
-    cache, better consistency) and broadcast into the join (J4/J5) — no
-    cache layer, no async I/O.
-    """
-    return spark.read.parquet(path)
-
-
-def rate_source(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
-    """Dev/bench source (the reference's parallel: console producers)."""
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .load()
-    )

@@ -1,5 +1,5 @@
 """Streaming-incremental near-dup detection — the foreachBatch twin of
-`plans.llm_scale_queries.llm_dedup_minhash_lsh`.
+`plans.dedup_queries.llm_dedup_minhash_lsh`.
 
 A production corpus grows continuously; re-running batch MinHash-LSH over
 the whole corpus per ingest is O(corpus) every time. The incremental form
@@ -39,12 +39,23 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.errors import AnalysisException
 
 from ..operators.graph import connected_components
+from ..operators.minhash import minhash_bands, minhash_verify, shingles
 from ..operators.pq import argmin_codes, pq_fullint, pq_subint
-from ..plans.llm_scale_queries import (
+from ..plans.dedup_queries import (
     DUP_CLUSTER_THRESHOLD_PM,
-    _shingles,
-    minhash_bands,
-    minhash_verify,
+    WINNOW_MIN_SHARED,
+    winnow_fingerprint_rows,
+)
+from ..plans.llm_multimodal import (
+    AHASH_BAND_BITS,
+    AHASH_BANDS,
+    AHASH_HAM_MAX,
+    ahash_image,
+)
+from ..plans.retrieval_queries import (
+    bm25_query_frame,
+    bm25_score_topk,
+    bm25_tf_rows,
 )
 
 
@@ -77,7 +88,7 @@ def incremental_minhash_pairs(
     batch = docs_batch.select("doc_id", "text").localCheckpoint(eager=True)
     # minhash_bands checkpoints the signature frame internally; the band
     # explode above it is cheap, so no second materialization here
-    bands_b = minhash_bands(_shingles(batch))
+    bands_b = minhash_bands(shingles(batch))
 
     prev_bands = _read_state(spark, bands_path, batch_id)
     prev_docs = _read_state(spark, docs_path, batch_id)
@@ -117,7 +128,7 @@ def incremental_minhash_pairs(
     docs_cand = docs_all.join(cand_ids, "doc_id", "left_semi")
     # verify BEFORE the state writes (docs_all lazily reads the state
     # parquet) and materialize the result for the same reason
-    out = minhash_verify(cand, _shingles(docs_cand)).localCheckpoint(
+    out = minhash_verify(cand, shingles(docs_cand)).localCheckpoint(
         eager=True
     )
 
@@ -132,7 +143,7 @@ def incremental_minhash_pairs(
 
 def clusters_finalize(pairs_all: DataFrame) -> DataFrame:
     """Near-dup CLUSTERS from the accumulated pair state — the streaming
-    finalize of `plans.llm_scale_queries.llm_dedup_clusters` (r12: the
+    finalize of `plans.dedup_queries.llm_dedup_clusters` (r12: the
     one dedup-family member that lacked an incremental twin).
 
     `incremental_minhash_pairs` already emits every verified pair exactly
@@ -167,7 +178,7 @@ def incremental_ahash_pairs(
     batch_id: int = 0,
 ) -> DataFrame:
     """Streaming-incremental IMAGE near-dup detection — the foreachBatch
-    twin of `plans.round6_ext_queries.llm_multimodal_image_neardup_pairs`.
+    twin of `plans.llm_multimodal.llm_multimodal_image_neardup_pairs`.
 
     Simpler than the text twin because the verify needs only the 48-bit
     fingerprints: STATE is just (doc_id, ahash) — no payload retention at
@@ -180,12 +191,6 @@ def incremental_ahash_pairs(
     one-shot batch query. Same replay-safe batch_id-partitioned overwrite
     state as `incremental_minhash_pairs`.
     """
-    from ..plans.llm_multimodal import ahash_image
-    from ..plans.round6_ext_queries import (
-        AHASH_BAND_BITS,
-        AHASH_BANDS,
-        AHASH_HAM_MAX,
-    )
 
     fps_path = f"{state_dir}/fps"
     fp_b = (
@@ -256,7 +261,7 @@ def incremental_winnow_pairs(
     batch_id: int = 0,
 ) -> DataFrame:
     """Streaming-incremental winnowing near-dup candidates — the
-    foreachBatch twin of `plans.round6_ext_queries.llm_winnow_fingerprints`.
+    foreachBatch twin of `plans.dedup_queries.llm_winnow_fingerprints`.
 
     STATE is (doc_id, f) fingerprint rows plus the (doc_id, n_fp) size
     table — no payload retention (fingerprint selection runs once per doc
@@ -275,10 +280,6 @@ def incremental_winnow_pairs(
     Same replay-safe batch_id-partitioned overwrite state as the minhash
     twin.
     """
-    from ..plans.round6_ext_queries import (
-        WINNOW_MIN_SHARED,
-        winnow_fingerprint_rows,
-    )
 
     fps_path = f"{state_dir}/fps"
     fp_b = winnow_fingerprint_rows(
@@ -337,8 +338,7 @@ def bm25_index_partials(docs_batch: DataFrame) -> tuple[DataFrame, DataFrame]:
     tf) inverted-index rows for the query vocabulary (append-only — docs
     are immutable, so a doc's rows are final in its arrival batch) and
     the mergeable 1-row (n, a) corpus-stats partial. The streaming
-    accumulate side of `plans.round6_ext_queries.llm_bm25_topk`."""
-    from ..plans.round6_ext_queries import bm25_tf_rows
+    accumulate side of `plans.retrieval_queries.llm_bm25_topk`."""
 
     tf = bm25_tf_rows(docs_batch)
     stats = docs_batch.select(
@@ -357,7 +357,6 @@ def bm25_finalize(
     the batch query over the concatenated corpus
     (tests/test_round6_ext.py::test_incremental_bm25_index_matches_batch).
     """
-    from ..plans.round6_ext_queries import bm25_query_frame, bm25_score_topk
 
     g = stats_all.agg(
         F.sum("n").cast("bigint").alias("n"),

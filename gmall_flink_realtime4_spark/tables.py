@@ -46,8 +46,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # money / measure scale used everywhere (see module docstring)
 MONEY = "decimal(18,2)"
 AGG = "decimal(38,6)"  # internal only; final outputs cast to double
@@ -175,29 +173,8 @@ def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 
 
 # ---------------------------------------------------------------------------
-# Reference-domain adapters (Spark side). Oracle-side twins live in
-# plans/oracle_views.py as SQL CTE text.
+# Reference-domain adapters (Spark side).
 # ---------------------------------------------------------------------------
-
-
-def order_info(
-    spark: SparkSession, sf_dir: str, spread: bool = True
-) -> DataFrame:
-    """orders -> order_info. Status mapping documents the TPC-H role of the
-    reference lifecycle codes (1001 created / 1002 paid / 1003 cancelled,
-    FIXTURES.md §1): O->1001, P->1002, F->1003."""
-    o = load(spark, sf_dir, "orders", spread=spread)
-    return o.select(
-        F.col("o_orderkey").alias("id"),
-        F.col("o_custkey").alias("user_id"),
-        F.when(F.col("o_orderstatus") == "O", "1001")
-        .when(F.col("o_orderstatus") == "P", "1002")
-        .otherwise("1003")
-        .alias("order_status"),
-        F.col("o_orderdate").alias("create_time"),
-        F.col("o_totalprice").cast(MONEY).alias("total_amount"),
-        F.col("o_orderpriority").alias("order_priority"),
-    )
 
 
 def order_detail(
@@ -219,21 +196,4 @@ def order_detail(
         F.col("l_returnflag").alias("return_flag"),
         F.col("l_linestatus").alias("line_status"),
         F.col("l_shipdate").alias("create_time"),
-    )
-
-
-def events_log(
-    spark: SparkSession, sf_dir: str, spread: bool = True
-) -> DataFrame:
-    """events -> behavior-log role (topic_log, DwdBaseLog.java:39-154):
-    mid=user_id, page_id=event_type, during_time=value."""
-    e = load(spark, sf_dir, "events", spread=spread)
-    return e.select(
-        F.col("event_id"),
-        F.col("ts"),
-        F.col("user_id").alias("mid"),
-        F.col("user_id").alias("uid"),
-        F.col("event_type").alias("page_id"),
-        F.col("value").alias("during_time"),
-        F.col("props"),
     )

@@ -17,8 +17,8 @@ import pyspark.sql.functions as F
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from gmall_flink_realtime4_spark.plans.catalog import queries
-from gmall_flink_realtime4_spark.plans.corpus_ops_queries import (
-    CONTAIN_PM_MIN,
+from gmall_flink_realtime4_spark.plans.dedup_queries import CONTAIN_PM_MIN
+from gmall_flink_realtime4_spark.plans.text_queries import (
     HH_MIN_SUPPORT,
     HH_TOP_K,
 )
@@ -214,7 +214,7 @@ def test_streaming_incremental_heavy_hitter_counts(spark, tmp_path):
     distributive agg relies on at 100 TB."""
     import pyspark.sql.functions as FF
 
-    from gmall_flink_realtime4_spark.plans.corpus_ops_queries import (
+    from gmall_flink_realtime4_spark.plans.text_queries import (
         _trigram_occurrences,
     )
     from gmall_flink_realtime4_spark.streaming.runner import stream_parquet_source
@@ -287,9 +287,7 @@ def test_containment_lsh_prunes_corpus_before_shingling(spark):
     import contextlib
     import io
 
-    from gmall_flink_realtime4_spark.plans.corpus_ops_queries import (
-        containment_lsh,
-    )
+    from gmall_flink_realtime4_spark.plans.dedup_queries import containment_lsh
 
     df = containment_lsh(spark, SF, persist=False)
     buf = io.StringIO()
@@ -307,7 +305,7 @@ def test_grouped_topk_contract(spark):
     plan = _plan(spark, "f_top_users_per_event_type")
     assert len(re.findall(r"\(\d+\) Window\b", plan)) == 2
     assert "salt" in plan
-    from gmall_flink_realtime4_spark.plans.corpus_ops_queries import GROUP_TOP_K
+    from gmall_flink_realtime4_spark.plans.olap_queries import GROUP_TOP_K
 
     rows = queries()["f_top_users_per_event_type"](spark, SF).collect()
     by_type = {}
@@ -430,7 +428,7 @@ def test_streaming_incremental_chunk_keeper_merge(spark, tmp_path):
     later batch carries the SMALLER key and must replace the stored row."""
     import pyspark.sql.functions as FF
 
-    from gmall_flink_realtime4_spark.plans.corpus_ops_queries import CHUNK_TOKENS
+    from gmall_flink_realtime4_spark.plans.dedup_queries import CHUNK_TOKENS
     from gmall_flink_realtime4_spark.sinks.factories import upsert_parquet
     from gmall_flink_realtime4_spark.streaming.runner import stream_parquet_source
 
@@ -506,7 +504,7 @@ def test_chunk_dedup_no_window_skew_hazard(spark):
 
     import pyspark.sql.functions as FF
 
-    from gmall_flink_realtime4_spark.plans.corpus_ops_queries import chunk_dedup
+    from gmall_flink_realtime4_spark.plans.dedup_queries import chunk_dedup
 
     plan = _plan(spark, "llm_chunk_dedup")
     assert not re.search(r"\(\d+\) Window", plan)

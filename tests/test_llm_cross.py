@@ -59,7 +59,7 @@ def test_ivf_recall_floor(spark):
     # llm_ann_ivf_recall was folded out of the registry in round 7 (its
     # metric lives on as llm_ann_ivf_trained_recall's recall_seed_pm); the
     # floor test keeps driving the un-registered function directly.
-    from gmall_flink_realtime4_spark.plans.llm_scale_queries import (
+    from gmall_flink_realtime4_spark.plans.retrieval_queries import (
         llm_ann_ivf_recall,
     )
 
@@ -80,24 +80,24 @@ def test_simhash_identical_docs_same_fingerprint(spark):
 
 
 def test_hexval_sql_full_hex_range_no_overflow(spark):
-    """Regression: _hexval_sql coefficients must be BIGINT — bare 16**7
+    """Regression: hexval_sql coefficients must be BIGINT — bare 16**7
     parses as INT32 and (digit>=8) * 268435456 overflows under ANSI mode.
     Exercise every digit value at every position, and pin the exact value."""
     import pyspark.sql.functions as F
 
-    from gmall_flink_realtime4_spark.plans.llm_scale_queries import (
-        _KMV_HEX_DIGITS,
-        _hexval_sql,
+    from gmall_flink_realtime4_spark.operators.hashing import (
+        KMV_HEX_DIGITS,
+        hexval_sql,
     )
 
-    rows = [(c * _KMV_HEX_DIGITS,) for c in "0123456789abcdef"]
+    rows = [(c * KMV_HEX_DIGITS,) for c in "0123456789abcdef"]
     df = spark.createDataFrame(rows, "hx string")
     got = {
         r["hx"][0]: r["u"]
-        for r in df.withColumn("u", F.expr(_hexval_sql("hx", "instr"))).collect()
+        for r in df.withColumn("u", F.expr(hexval_sql("hx", "instr"))).collect()
     }
     for c in "0123456789abcdef":
-        assert got[c] == int(c * _KMV_HEX_DIGITS, 16)
+        assert got[c] == int(c * KMV_HEX_DIGITS, 16)
 
 
 def test_stratified_sample_partitioning_invariant(spark):
@@ -125,10 +125,12 @@ def test_kmv_union_equals_single_global_sketch(spark):
     import pyspark.sql.functions as FF
 
     from gmall_flink_realtime4_spark import tables as T
-    from gmall_flink_realtime4_spark.plans.llm_scale_queries import (
+    from gmall_flink_realtime4_spark.operators.hashing import (
         KMV_K,
-        _KMV_M,
-        _hexval_sql,
+        KMV_M,
+        hexval_sql,
+    )
+    from gmall_flink_realtime4_spark.plans.olap_queries import (
         _kmv_group_sketch,
     )
 
@@ -146,12 +148,12 @@ def test_kmv_union_equals_single_global_sketch(spark):
     g = _kmv_group_sketch(e).select(
         "n",
         FF.expr(
-            _hexval_sql(
+            hexval_sql(
                 f"element_at(kmin_all, cast(least(n, {KMV_K}) as int))", "instr"
             )
         ).alias("v"),
     ).collect()[0]
-    direct = g.n if g.n < KMV_K else ((KMV_K - 1) * _KMV_M) // g.v
+    direct = g.n if g.n < KMV_K else ((KMV_K - 1) * KMV_M) // g.v
     assert union_row.kmv_estimate == direct
 
 
@@ -165,9 +167,8 @@ def test_topcells_matches_window_rank_reference(spark):
     import pyspark.sql.functions as FF
     from pyspark.sql import Window as W
 
-    from gmall_flink_realtime4_spark.plans.llm_queries import _dot
-    from gmall_flink_realtime4_spark.plans.llm_scale_queries import (
-        _cos_e9,
+    from gmall_flink_realtime4_spark.operators.vectors import cos_e9, dot_dec
+    from gmall_flink_realtime4_spark.plans.retrieval_queries import (
         _probe_cells,
         _topcells,
     )
@@ -183,7 +184,7 @@ def test_topcells_matches_window_rank_reference(spark):
     rows = [(i, v if any(v) else [1.0] + v[1:]) for i, v in rows]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     embn = emb.select(
-        "vec_id", "embedding", _dot(FF.col("embedding"), FF.col("embedding")).alias("n2")
+        "vec_id", "embedding", dot_dec(FF.col("embedding"), FF.col("embedding")).alias("n2")
     )
     cent = embn.filter(FF.col("vec_id") < n_cent).select(
         FF.col("vec_id").alias("cid"),
@@ -201,7 +202,7 @@ def test_topcells_matches_window_rank_reference(spark):
     bscore = embn.crossJoin(FF.broadcast(cent)).select(
         "vec_id",
         "cid",
-        _cos_e9(_dot(FF.col("embedding"), FF.col("ce")), FF.col("n2"), FF.col("cn2")).alias("ce9"),
+        cos_e9(dot_dec(FF.col("embedding"), FF.col("ce")), FF.col("n2"), FF.col("cn2")).alias("ce9"),
     )
     w = W.partitionBy("vec_id").orderBy(FF.col("ce9").desc(), FF.col("cid"))
     ref_rows = (
@@ -244,7 +245,7 @@ def test_cells_exact_compression_matches_uncompressed(spark, tmp_path):
     directed-emission subtlety: x<y inside a rep pair does not imply
     rep_a<rep_b). 64-dim vectors from a tiny value alphabet force dup
     groups AND cross-cell near-ties."""
-    from gmall_flink_realtime4_spark.plans.llm_scale_queries import (
+    from gmall_flink_realtime4_spark.plans.retrieval_queries import (
         llm_dedup_embedding_cells,
     )
 
@@ -268,7 +269,7 @@ def test_cosine_exact_compression_matches_uncompressed(spark, tmp_path):
     candidacy means undirected rep pairs expand with least/greatest member
     ordering — the result must still match the uncompressed miner exactly
     on dup-heavy interleaved data."""
-    from gmall_flink_realtime4_spark.plans.llm_scale_queries import (
+    from gmall_flink_realtime4_spark.plans.retrieval_queries import (
         llm_dedup_embedding_cosine,
     )
 
@@ -288,15 +289,15 @@ def test_cosine_exact_compression_matches_uncompressed(spark, tmp_path):
 
 def test_topcells_quantize_once_matches_inline_decimal(spark):
     """The default quantize-once one-pass form of _topcells (centroids
-    cast to DECIMAL once in the probe struct, scored with _dot_q) must
-    emit exactly the ranking of the inline-decimal path (dot=_dot
+    cast to DECIMAL once in the probe struct, scored with dot_q) must
+    emit exactly the ranking of the inline-decimal path (dot=dot_dec
     re-casts per score) — the bit-identity guard for the r8 revert of
     the r5 double-prescore machinery."""
     import pyspark.sql.functions as F
 
     from gmall_flink_realtime4_spark import tables as T
-    from gmall_flink_realtime4_spark.plans.llm_queries import _dot
-    from gmall_flink_realtime4_spark.plans.llm_scale_queries import (
+    from gmall_flink_realtime4_spark.operators.vectors import dot_dec
+    from gmall_flink_realtime4_spark.plans.retrieval_queries import (
         _probe_cells,
         _topcells,
     )
@@ -306,7 +307,7 @@ def test_topcells_quantize_once_matches_inline_decimal(spark):
     embn = emb.select(
         "vec_id",
         "embedding",
-        _dot(F.col("embedding"), F.col("embedding")).alias("n2"),
+        dot_dec(F.col("embedding"), F.col("embedding")).alias("n2"),
     )
     cent = embn.filter(F.col("vec_id") < 23).select(
         F.col("vec_id").alias("cid"),
@@ -322,7 +323,7 @@ def test_topcells_quantize_once_matches_inline_decimal(spark):
         }
         slow = {
             r.vec_id: list(r.cells)
-            for r in _topcells(embn, cent, nprobe, dot=_dot)
+            for r in _topcells(embn, cent, nprobe, dot=dot_dec)
             .select("vec_id", _probe_cells().alias("cells"))
             .collect()
         }

@@ -1,11 +1,24 @@
-"""Every public operator has a caller inside the package.
+"""Import-layering and dead-code guards for the package.
 
 The operator library holds one implementation per primitive; a function
 that only its own tests import is dead weight and gets deleted, not kept
-as an alternative. This guard makes that rule a check: each module-level
-public function in ``operators/*.py`` must be imported or referenced by
-code (not a comment or docstring) in some other package module. A
-package ``__init__.py`` re-export does not count as a use.
+as an alternative. The plan modules are organised by domain and share
+code only through ``operators/`` and ``functions/``, never through each
+other's private names or function-body imports that dodge an import
+cycle. Each rule is an AST check over code, so comments and docstrings
+never count:
+
+- each module-level public function in ``operators/*.py`` is imported or
+  referenced by some other package module (a package ``__init__.py``
+  re-export does not count as a use);
+- no package module imports a ``_``-prefixed name from another package
+  module;
+- no package module imports a ``plans`` module inside a function body
+  (``plans/__init__.py``'s ``load_all`` is the one registration entry);
+- ``operators/`` and ``functions/`` import nothing from ``plans/``;
+- every public package function (registered queries aside) is referenced
+  somewhere in the package, ``tests/``, ``tools/``, ``perfbench/`` or
+  ``bench.py``.
 """
 
 from __future__ import annotations
@@ -13,7 +26,16 @@ from __future__ import annotations
 import ast
 from pathlib import Path
 
-PKG = Path(__file__).resolve().parent.parent / "gmall_flink_realtime4_spark"
+ROOT = Path(__file__).resolve().parent.parent
+PKG = ROOT / "gmall_flink_realtime4_spark"
+
+
+def _parse(paths) -> dict[Path, ast.Module]:
+    return {p: ast.parse(p.read_text(), filename=str(p)) for p in paths}
+
+
+def _package_modules() -> dict[Path, ast.Module]:
+    return _parse(PKG.rglob("*.py"))
 
 
 def _referenced_names(tree: ast.AST) -> set[str]:
@@ -28,10 +50,36 @@ def _referenced_names(tree: ast.AST) -> set[str]:
     return names
 
 
+def _package_imports(path: Path, tree: ast.Module):
+    """(node, dotted target module, at module top level) for every
+    ``from ... import`` of a package module in ``tree``."""
+    top = {id(n) for n in tree.body}
+    # the dotted package a relative import in ``path`` is resolved against
+    pkg = list(path.relative_to(ROOT).with_suffix("").parts)[:-1]
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.ImportFrom):
+            continue
+        if node.level:
+            base = pkg[: len(pkg) - node.level + 1]
+            mod = base + (node.module.split(".") if node.module else [])
+        else:
+            mod = node.module.split(".")
+        if mod[0] == PKG.name:
+            yield node, ".".join(mod), id(node) in top
+
+
+def _is_plans_module(target: str, names: list[str]) -> bool:
+    """True when an import pulls in a module file under ``plans/``."""
+    parts = target.split(".")
+    if parts[1:2] != ["plans"]:
+        return False
+    if len(parts) > 2:
+        return True
+    return any((PKG / "plans" / f"{n}.py").exists() for n in names)
+
+
 def test_every_operator_has_a_package_caller():
-    modules = {
-        p: ast.parse(p.read_text(), filename=str(p)) for p in PKG.rglob("*.py")
-    }
+    modules = _package_modules()
     unused = []
     for path in sorted((PKG / "operators").glob("*.py")):
         if path.name == "__init__.py":
@@ -47,3 +95,81 @@ def test_every_operator_has_a_package_caller():
                 users |= _referenced_names(tree)
         unused += [f"{path.stem}.{f}" for f in public if f not in users]
     assert not unused, f"operators with no caller in the package: {unused}"
+
+
+def test_no_private_names_imported_across_modules():
+    private = [
+        f"{p.relative_to(PKG)}:{node.lineno} {a.name}"
+        for p, tree in _package_modules().items()
+        for node, _, _ in _package_imports(p, tree)
+        for a in node.names
+        if a.name.startswith("_")
+    ]
+    assert not private, f"private names imported from another module: {private}"
+
+
+def test_no_function_body_imports_of_plans_modules():
+    nested = [
+        f"{p.relative_to(PKG)}:{node.lineno} {target}"
+        for p, tree in _package_modules().items()
+        if p != PKG / "plans" / "__init__.py"
+        for node, target, at_top in _package_imports(p, tree)
+        if not at_top
+        and _is_plans_module(target, [a.name for a in node.names])
+    ]
+    assert not nested, f"plans modules imported inside functions: {nested}"
+
+
+def test_operators_and_functions_do_not_import_plans():
+    upward = [
+        f"{p.relative_to(PKG)}:{node.lineno} {target}"
+        for p, tree in _package_modules().items()
+        if p.relative_to(PKG).parts[0] in ("operators", "functions")
+        for node, target, _ in _package_imports(p, tree)
+        if target.split(".")[1:2] == ["plans"]
+    ]
+    assert not upward, f"library code importing the query layer: {upward}"
+
+
+def _is_registered_query(fn: ast.FunctionDef) -> bool:
+    return any(
+        isinstance(d, ast.Call) and getattr(d.func, "id", None) == "query"
+        for d in fn.decorator_list
+    )
+
+
+def test_every_public_function_is_referenced():
+    package = _package_modules()
+    others = _parse(
+        [
+            *(ROOT / "tests").rglob("*.py"),
+            *(ROOT / "tools").rglob("*.py"),
+            *(ROOT / "perfbench").rglob("*.py"),
+            ROOT / "bench.py",
+        ]
+    )
+    refs = {
+        path: _referenced_names(tree)
+        for path, tree in {**package, **others}.items()
+        # a package re-export is not a use
+        if not (path.name == "__init__.py" and PKG in path.parents)
+    }
+    unreferenced = []
+    for path, tree in sorted(package.items()):
+        elsewhere = set().union(*(r for p, r in refs.items() if p != path))
+        for fn in tree.body:
+            if (
+                not isinstance(fn, ast.FunctionDef)
+                or fn.name.startswith("_")
+                or _is_registered_query(fn)
+                or fn.name in elsewhere
+            ):
+                continue
+            # the def's own body (recursion) does not count as a use
+            if not any(
+                fn.name in _referenced_names(node)
+                for node in tree.body
+                if node is not fn
+            ):
+                unreferenced.append(f"{path.relative_to(PKG)}::{fn.name}")
+    assert not unreferenced, f"public functions nothing references: {unreferenced}"

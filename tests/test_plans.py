@@ -122,10 +122,10 @@ def test_ivf_assignment_is_map_only(spark):
     import pyspark.sql.functions as F
 
     from gmall_flink_realtime4_spark import tables as T
-    from gmall_flink_realtime4_spark.plans.llm_queries import _dot
-    from gmall_flink_realtime4_spark.plans.llm_scale_queries import (
-        IVF_N_CENTROIDS,
+    from gmall_flink_realtime4_spark.operators.vectors import dot_dec
+    from gmall_flink_realtime4_spark.plans.retrieval_queries import (
         IVF_NPROBE,
+        IVF_N_CENTROIDS,
         _topcells,
     )
 
@@ -142,7 +142,7 @@ def test_ivf_assignment_is_map_only(spark):
     embn = emb.select(
         "vec_id",
         "embedding",
-        _dot(F.col("embedding"), F.col("embedding")).alias("n2"),
+        dot_dec(F.col("embedding"), F.col("embedding")).alias("n2"),
     )
     cent = embn.filter(F.col("vec_id") < IVF_N_CENTROIDS).select(
         F.col("vec_id").alias("cid"),
@@ -221,7 +221,7 @@ def test_kmv_sketch_is_partial_agg_fold_no_window(spark):
     import pyspark.sql.functions as F
 
     from gmall_flink_realtime4_spark import tables as T
-    from gmall_flink_realtime4_spark.plans.llm_scale_queries import (
+    from gmall_flink_realtime4_spark.plans.olap_queries import (
         _kmv_group_sketch,
     )
 
@@ -345,7 +345,7 @@ def test_ivfpq_residual_join_back_runtime_honest(spark):
     corpus-sized assignment) and carry no raw fact file on any broadcast
     side."""
     from gmall_flink_realtime4_spark import tables as T
-    from gmall_flink_realtime4_spark.plans.llm_pipeline_queries import (
+    from gmall_flink_realtime4_spark.plans.retrieval_queries import (
         ivfpq_residual_frame,
     )
     from tools.plan_audit import _final_plan, runtime_broadcast_findings
@@ -637,7 +637,7 @@ def test_pca_power_step_no_dxd_and_no_join_back(spark):
     import io
 
     from gmall_flink_realtime4_spark import tables as T
-    from gmall_flink_realtime4_spark.plans.round7_ext_queries import (
+    from gmall_flink_realtime4_spark.plans.retrieval_queries import (
         pca_dim_frame,
     )
 

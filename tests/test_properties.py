@@ -202,7 +202,7 @@ def test_chunk_dedup_accounting_property(spark, docs, seed):
     tokens. Row order / partitioning must not change the result."""
     import math
 
-    from gmall_flink_realtime4_spark.plans.corpus_ops_queries import (
+    from gmall_flink_realtime4_spark.plans.dedup_queries import (
         CHUNK_TOKENS,
         chunk_dedup,
     )
@@ -250,7 +250,7 @@ def test_dup_span_coverage_property(spark, docs):
     """For ANY corpus: docs with < 8 tokens are absent; window count is
     tokens-7; a doc duplicated verbatim under a different id is fully
     covered; coverage matches a pure-python span-frequency oracle."""
-    from gmall_flink_realtime4_spark.plans import corpus_ops_queries as C
+    from gmall_flink_realtime4_spark.plans import dedup_queries as C
 
     rows_in = [(i, " ".join(toks)) for i, toks in enumerate(docs)]
     # append a verbatim duplicate of the first doc with >= 8 tokens, if any
@@ -304,7 +304,7 @@ def _docs_df(spark, rows):
 
 
 def _cks(df):
-    from gmall_flink_realtime4_spark.plans.analytics_ext_queries import (
+    from gmall_flink_realtime4_spark.plans.dq_queries import (
         checksum_finalize,
         checksum_partials,
     )
@@ -320,7 +320,7 @@ def _cks(df):
 def test_checksum_order_and_split_invariant(spark, rows, seed):
     """Shuffled row order, different partition counts, and two-batch
     partial-fold all yield the identical fingerprint."""
-    from gmall_flink_realtime4_spark.plans.analytics_ext_queries import (
+    from gmall_flink_realtime4_spark.plans.dq_queries import (
         checksum_finalize,
         checksum_partials,
     )
@@ -365,7 +365,7 @@ VEC_VALS = (0.25, 0.5, 1.0)
 def test_cells_compression_equality_property(spark, tmp_path_factory, data):
     import pandas as pd
 
-    from gmall_flink_realtime4_spark.plans.llm_scale_queries import (
+    from gmall_flink_realtime4_spark.plans.retrieval_queries import (
         llm_dedup_embedding_cells,
     )
 
@@ -475,8 +475,8 @@ def test_topcells_prerank_margin_survives_boundary_vectors(spark, seed):
     PRESCORE_MARGIN_E9 bound)."""
     import pyspark.sql.functions as F
 
-    from gmall_flink_realtime4_spark.plans.llm_queries import _dot
-    from gmall_flink_realtime4_spark.plans.llm_scale_queries import (
+    from gmall_flink_realtime4_spark.operators.vectors import dot_dec
+    from gmall_flink_realtime4_spark.plans.retrieval_queries import (
         _probe_cells,
         _topcells,
     )
@@ -487,7 +487,7 @@ def test_topcells_prerank_margin_survives_boundary_vectors(spark, seed):
     embn = emb.select(
         "vec_id",
         "embedding",
-        _dot(F.col("embedding"), F.col("embedding")).alias("n2"),
+        dot_dec(F.col("embedding"), F.col("embedding")).alias("n2"),
     )
     cent = embn.filter(F.col("vec_id") < 7).select(
         F.col("vec_id").alias("cid"),
@@ -502,7 +502,7 @@ def test_topcells_prerank_margin_survives_boundary_vectors(spark, seed):
     }
     slow = {
         r.vec_id: list(r.cells)
-        for r in _topcells(embn, cent, 2, dot=_dot)
+        for r in _topcells(embn, cent, 2, dot=dot_dec)
         .select("vec_id", _probe_cells().alias("cells"))
         .collect()
     }
@@ -546,9 +546,7 @@ def test_countmin_sound_on_arbitrary_corpora(spark, tokens):
     merged per-half sketches (mergeability independent of the data)."""
     from collections import Counter
 
-    from gmall_flink_realtime4_spark.plans.round5_ext_queries import (
-        countmin_sketch,
-    )
+    from gmall_flink_realtime4_spark.plans.olap_queries import countmin_sketch
 
     exact = Counter(tokens)
     tc = spark.createDataFrame(
@@ -560,7 +558,7 @@ def test_countmin_sound_on_arbitrary_corpora(spark, tokens):
         "exact_count",
         F.explode(F.array([F.lit(i) for i in range(4)])).alias("rw"),
     )
-    from gmall_flink_realtime4_spark.plans.round5_ext_queries import _CM_HV
+    from gmall_flink_realtime4_spark.plans.olap_queries import _CM_HV
 
     hashed = rows.withColumn(
         "hx",
@@ -691,7 +689,7 @@ def test_bpe_pair_counts_matches_python_model(spark, tmp_path_factory, words):
     from collections import Counter
 
     from gmall_flink_realtime4_spark.plans.catalog import queries
-    from gmall_flink_realtime4_spark.plans.round5_ext_queries import BPE_TOP_K
+    from gmall_flink_realtime4_spark.plans.text_queries import BPE_TOP_K
 
     pc = Counter()
     for w in words:
@@ -820,7 +818,7 @@ def test_minhash_lsh_matches_python_model_exactly(spark):
     import hashlib
 
     from gmall_flink_realtime4_spark.plans.catalog import queries
-    from gmall_flink_realtime4_spark.plans.llm_scale_queries import (
+    from gmall_flink_realtime4_spark.operators.minhash import (
         MINHASH_B,
         MINHASH_K,
         MINHASH_R,
@@ -872,7 +870,7 @@ def test_pii_redact_matches_python_model_exactly(spark):
     import hashlib
     import re as _re
 
-    from gmall_flink_realtime4_spark.plans.analytics_ext_queries import (
+    from gmall_flink_realtime4_spark.plans.text_queries import (
         PII_EMAIL,
         PII_IP,
         PII_PHONE,
@@ -1017,11 +1015,13 @@ def test_clusters_match_python_union_find_exactly(spark):
     import hashlib
 
     from gmall_flink_realtime4_spark.plans.catalog import queries
-    from gmall_flink_realtime4_spark.plans.llm_scale_queries import (
-        DUP_CLUSTER_THRESHOLD_PM,
+    from gmall_flink_realtime4_spark.operators.minhash import (
         MINHASH_B,
         MINHASH_K,
         MINHASH_R,
+    )
+    from gmall_flink_realtime4_spark.plans.dedup_queries import (
+        DUP_CLUSTER_THRESHOLD_PM,
     )
 
     sf = "/root/testdata/sf0.001"
@@ -1092,7 +1092,7 @@ def test_embedding_cells_match_python_model_exactly(spark):
     import numpy as np
 
     from gmall_flink_realtime4_spark.plans.catalog import queries
-    from gmall_flink_realtime4_spark.plans.llm_scale_queries import (
+    from gmall_flink_realtime4_spark.plans.retrieval_queries import (
         CELLS_NPROBE,
         IVF_N_CENTROIDS,
         NEARDUP_THRESHOLD_E9,
@@ -1172,10 +1172,10 @@ def test_ann_ivf_matches_python_model_exactly(spark):
     import numpy as np
 
     from gmall_flink_realtime4_spark.plans.catalog import queries
-    from gmall_flink_realtime4_spark.plans.llm_scale_queries import (
+    from gmall_flink_realtime4_spark.plans.retrieval_queries import (
         ANN_N_QUERIES,
-        IVF_N_CENTROIDS,
         IVF_NPROBE,
+        IVF_N_CENTROIDS,
         IVF_TOPK,
     )
 
@@ -1287,11 +1287,7 @@ def test_pq_encode_matches_python_model_exactly(spark):
     from fractions import Fraction
 
     from gmall_flink_realtime4_spark.plans.catalog import queries
-    from gmall_flink_realtime4_spark.plans.llm_pipeline_queries import (
-        PQ_D,
-        PQ_K,
-        PQ_M,
-    )
+    from gmall_flink_realtime4_spark.operators.pq import PQ_D, PQ_K, PQ_M
 
     sf = "/root/testdata/sf0.001"
     rows = spark.read.parquet(f"{sf}/embeddings.parquet").select(
@@ -1342,16 +1338,18 @@ def test_pq_trained_adc_recall_matches_python_model_exactly(spark):
     from decimal import ROUND_HALF_UP, Decimal
 
     from gmall_flink_realtime4_spark.plans.catalog import queries
-    from gmall_flink_realtime4_spark.plans.llm_pipeline_queries import (
+    from gmall_flink_realtime4_spark.operators.pq import (
+        PQ_D,
+        PQ_K,
+        PQ_M,
+        PQ_OFF_INT,
+    )
+    from gmall_flink_realtime4_spark.plans.retrieval_queries import (
         ADC_NQ,
         ADC_TOPK,
         IVFPQ_C,
         IVFPQ_NPROBE,
         IVFPQ_NPROBES,
-        PQ_D,
-        PQ_K,
-        PQ_M,
-        PQ_OFF_INT,
         PQ_RES_OFF,
     )
 
@@ -1595,7 +1593,7 @@ def test_pack_sequences_matches_python_model_exactly(spark):
     chunk assignment — the distributed two-phase bucket prefix sum must
     land every doc in the identical chunk."""
     from gmall_flink_realtime4_spark.plans.catalog import queries
-    from gmall_flink_realtime4_spark.plans.llm_pipeline_queries import SEQ_LEN
+    from gmall_flink_realtime4_spark.plans.corpus_queries import SEQ_LEN
 
     sf = "/root/testdata/sf0.001"
     rows = spark.read.parquet(f"{sf}/documents.parquet").select(
@@ -1625,7 +1623,7 @@ def test_decontaminate_matches_python_model_exactly(spark):
     per-train-doc shared-shingle / eval-partner counts with the >= 5
     contamination flag."""
     from gmall_flink_realtime4_spark.plans.catalog import queries
-    from gmall_flink_realtime4_spark.plans.llm_pipeline_queries import (
+    from gmall_flink_realtime4_spark.plans.corpus_queries import (
         DECON_EVAL_MOD,
         DECON_MIN_SHARED,
     )
@@ -1674,9 +1672,7 @@ def test_chunk_dedup_matches_python_model_exactly(spark):
     min-(doc_id, chunk_idx) keeper per chunk text, and accounts kept
     tokens / duplicate chunks per doc."""
     from gmall_flink_realtime4_spark.plans.catalog import queries
-    from gmall_flink_realtime4_spark.plans.corpus_ops_queries import (
-        CHUNK_TOKENS,
-    )
+    from gmall_flink_realtime4_spark.plans.dedup_queries import CHUNK_TOKENS
 
     sf = "/root/testdata/sf0.001"
     rows = spark.read.parquet(f"{sf}/documents.parquet").select(
@@ -1716,9 +1712,7 @@ def test_containment_matches_python_model_exactly(spark):
     and the per-mille containment scores with the >= 800 either-side
     emission rule."""
     from gmall_flink_realtime4_spark.plans.catalog import queries
-    from gmall_flink_realtime4_spark.plans.corpus_ops_queries import (
-        CONTAIN_PM_MIN,
-    )
+    from gmall_flink_realtime4_spark.plans.dedup_queries import CONTAIN_PM_MIN
 
     sf = "/root/testdata/sf0.001"
     rows = spark.read.parquet(f"{sf}/documents.parquet").select(
@@ -1785,7 +1779,7 @@ def test_winnowing_guarantee_shared_run_shares_fingerprint(
     contains at least one COMPLETE window of k-gram hashes, identical in
     both docs, so both select its minimum — a shared fingerprint is
     structurally guaranteed, for every plant position."""
-    from gmall_flink_realtime4_spark.plans.round6_ext_queries import (
+    from gmall_flink_realtime4_spark.plans.dedup_queries import (
         winnow_fingerprint_rows,
     )
 
@@ -1819,7 +1813,7 @@ def test_hll_registers_invariant_under_duplication(spark, rows, dup_mask):
     any subset of the keyed rows leaves every register — and therefore
     the estimate — bit-identical (MAX absorbs duplicates; the property
     the sketch's no-distinct-pass design rests on)."""
-    from gmall_flink_realtime4_spark.plans.round6_ext_queries import (
+    from gmall_flink_realtime4_spark.plans.olap_queries import (
         hll_register_partials,
     )
 
@@ -1852,7 +1846,7 @@ def test_bm25_is_bag_of_words(spark, docs, seed):
     """BM25 is a bag-of-words score: shuffling the tokens inside every
     document changes nothing (tf/dl/df/N/avgdl are all order-free), so
     the full top-K output is identical."""
-    from gmall_flink_realtime4_spark.plans.round6_ext_queries import (
+    from gmall_flink_realtime4_spark.plans.retrieval_queries import (
         bm25_query_frame,
         bm25_score_topk,
         bm25_tf_rows,
@@ -1900,7 +1894,7 @@ def test_skyline_collapse_equals_quadratic_spec(spark, pts):
     arbitrary point sets — duplicate coordinates (forced by the tight
     value range) exercise the same-revenue-class and all-ties-survive
     rules every shrink."""
-    from gmall_flink_realtime4_spark.plans.round7_ext_queries import (
+    from gmall_flink_realtime4_spark.plans.olap_queries import (
         pareto_frontier_2d,
     )
 
@@ -1939,7 +1933,7 @@ def test_reservoir_merge_invariant_to_batching(spark, ids, k, n_batches, seed):
     """Distributed reservoir merge: however documents are partitioned into
     batches (including empty batches and k > batch size), ranking the
     union of per-batch top-k survivor states equals the one-shot top-k."""
-    from gmall_flink_realtime4_spark.plans.round7_ext_queries import (
+    from gmall_flink_realtime4_spark.plans.corpus_queries import (
         reservoir_finalize,
         reservoir_partials,
         reservoir_sample,

@@ -347,7 +347,7 @@ def test_incremental_winnow_soak_restart(spark, tmp_path):
     deliberately batch-side only); after the restart the union of
     emissions equals the one-shot CAPLESS run, which on this corpus also
     equals the registered capped query (max fingerprint df 9 << 64)."""
-    from gmall_flink_realtime4_spark.plans.round6_ext_queries import (
+    from gmall_flink_realtime4_spark.plans.dedup_queries import (
         winnow_fingerprint_rows,
         winnow_pairs,
     )
@@ -393,11 +393,8 @@ def test_pq_training_lifts_recall_on_clustered_corpus(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from gmall_flink_realtime4_spark.plans.llm_pipeline_queries import (
-        IVFPQ_C,
-        PQ_D,
-        PQ_M,
-    )
+    from gmall_flink_realtime4_spark.operators.pq import PQ_D, PQ_M
+    from gmall_flink_realtime4_spark.plans.retrieval_queries import IVFPQ_C
 
     dim = PQ_M * PQ_D
     n, k = 200, IVFPQ_C

@@ -64,7 +64,7 @@ def test_incremental_clusters_soak_restart(spark, tmp_path):
 
 def test_two_phase_topk_property_random_frames(spark):
     """Hypothesis property over the r12 two-phase exact top-k helper
-    `_ranked_topk_per_query`: on RANDOM scored frames — duplicate scores
+    `ranked_topk_per_query`: on RANDOM scored frames — duplicate scores
     (ties must break on the candidate id), candidates colliding into the
     same phase-1 slice, fewer candidates than k, empty queries — both
     orders it serves (ascending ADC distance per qid, descending cosine
@@ -75,9 +75,9 @@ def test_two_phase_topk_property_random_frames(spark):
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
-    from gmall_flink_realtime4_spark.plans.llm_pipeline_queries import ADC_TOPK
-    from gmall_flink_realtime4_spark.plans.llm_queries import (
-        _ranked_topk_per_query,
+    from gmall_flink_realtime4_spark.plans.retrieval_queries import ADC_TOPK
+    from gmall_flink_realtime4_spark.operators.vectors import (
+        ranked_topk_per_query,
     )
 
     row = st.tuples(
@@ -107,7 +107,7 @@ def test_two_phase_topk_property_random_frames(spark):
         )
         got_asc = sorted(
             (r["qid"], r["vec_id"])
-            for r in _ranked_topk_per_query(
+            for r in ranked_topk_per_query(
                 asc, "qid", "vec_id", F.col("ad2"), ADC_TOPK
             ).collect()
         )
@@ -123,7 +123,7 @@ def test_two_phase_topk_property_random_frames(spark):
         )
         got_desc = sorted(
             (r["query_vec_id"], r["neighbor_vec_id"], r["rank"])
-            for r in _ranked_topk_per_query(
+            for r in ranked_topk_per_query(
                 desc,
                 "query_vec_id",
                 "neighbor_vec_id",

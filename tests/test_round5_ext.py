@@ -19,7 +19,7 @@ import pyspark.sql.functions as F
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from gmall_flink_realtime4_spark.plans.catalog import queries
-from gmall_flink_realtime4_spark.plans.round5_ext_queries import (
+from gmall_flink_realtime4_spark.plans.olap_queries import (
     CM_DEPTH,
     CM_WIDTH,
     countmin_sketch,

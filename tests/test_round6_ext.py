@@ -21,9 +21,11 @@ import pyspark.sql.functions as F
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from gmall_flink_realtime4_spark.plans.catalog import queries
-from gmall_flink_realtime4_spark.plans.round6_ext_queries import (
+from gmall_flink_realtime4_spark.plans.corpus_queries import (
     CAP_NSALT,
     DOMAIN_CAP,
+)
+from gmall_flink_realtime4_spark.plans.olap_queries import (
     ZB,
     ZB_BITS,
     _interleave_sql,
@@ -91,9 +93,7 @@ def test_domain_cap_two_phase_equals_one_window(spark):
         for r in queries()["llm_sample_domain_cap"](spark, SF).collect()
     }
     from gmall_flink_realtime4_spark import tables as T
-    from gmall_flink_realtime4_spark.plans.llm_scale_queries import (
-        _hexval_sql,
-    )
+    from gmall_flink_realtime4_spark.operators.hashing import hexval_sql
     from pyspark.sql import Window
 
     d = (
@@ -103,7 +103,7 @@ def test_domain_cap_two_phase_equals_one_window(spark):
             "doc_id",
             F.md5(F.col("doc_id").cast("string")).alias("hx"),
         )
-        .withColumn("u", F.expr(_hexval_sql("hx", "instr")))
+        .withColumn("u", F.expr(hexval_sql("hx", "instr")))
     )
     w = Window.partitionBy("source").orderBy("u", "doc_id")
     ref = {
@@ -206,11 +206,9 @@ def test_image_neardup_recall_is_total_within_radius(spark):
     the full exact pair set from the fingerprint frame in Python and
     compare — banding may never lose a pair inside the radius."""
     from gmall_flink_realtime4_spark.plans.llm_multimodal import (
+        AHASH_HAM_MAX,
         _fixed_ppm_frame,
         ahash_image,
-    )
-    from gmall_flink_realtime4_spark.plans.round6_ext_queries import (
-        AHASH_HAM_MAX,
     )
 
     fps = {
@@ -323,10 +321,7 @@ def test_stats_profile_python_model(spark):
 
     import pyarrow.parquet as pq
 
-    from gmall_flink_realtime4_spark.plans.llm_scale_queries import (
-        _KMV_M,
-        KMV_K,
-    )
+    from gmall_flink_realtime4_spark.operators.hashing import KMV_K, KMV_M
 
     t = pq.read_table(f"{SF}/orders.parquet").to_pylist()
     cols = {
@@ -356,7 +351,7 @@ def test_stats_profile_python_model(spark):
             est = n
         else:
             v = int(hashes[KMV_K - 1][:12], 16)
-            est = ((KMV_K - 1) * _KMV_M) // max(v, 1)
+            est = ((KMV_K - 1) * KMV_M) // max(v, 1)
         model[c] = (len(t), nn, len(distinct), est)
     got = {
         r["col_name"]: (r["n_rows"], r["n_nonnull"], r["ndv_exact"], r["ndv_kmv_est"])
@@ -373,10 +368,7 @@ def test_join_cardinality_python_model(spark):
 
     import pyarrow.parquet as pq
 
-    from gmall_flink_realtime4_spark.plans.llm_scale_queries import (
-        _KMV_M,
-        KMV_K,
-    )
+    from gmall_flink_realtime4_spark.operators.hashing import KMV_K, KMV_M
 
     a_keys = {
         r["o_custkey"]
@@ -393,7 +385,7 @@ def test_join_cardinality_python_model(spark):
     theta_hx = min(ka[min(len(ha), KMV_K) - 1], kb[min(len(hb), KMV_K) - 1])
     theta_v = int(theta_hx[:12], 16)
     below = len({h for h in ka if h < theta_hx} & set(kb))
-    est = (below * _KMV_M) // max(theta_v, 1)
+    est = (below * KMV_M) // max(theta_v, 1)
     exact = len(a_keys & b_keys)
     row = queries()["dq_sketch_join_cardinality"](spark, SF).collect()[0]
     assert (
@@ -413,9 +405,7 @@ def test_bpe_train_merges_python_model(spark):
     semantics."""
     import pyarrow.parquet as pq
 
-    from gmall_flink_realtime4_spark.plans.round6_ext_queries import (
-        BPE_TRAIN_ROUNDS,
-    )
+    from gmall_flink_realtime4_spark.plans.text_queries import BPE_TRAIN_ROUNDS
 
     t = pq.read_table(f"{SF}/documents.parquet").to_pylist()
     freq: dict[tuple, int] = {}
@@ -483,9 +473,7 @@ def test_bpe_encode_corpus_consistency(spark):
     """Encode invariants over every doc: BPE tokens never exceed char
     tokens; totals reconcile with an independent python encode through
     the trained vocabulary."""
-    from gmall_flink_realtime4_spark.plans.round6_ext_queries import (
-        _bpe_train,
-    )
+    from gmall_flink_realtime4_spark.plans.text_queries import _bpe_train
 
     rows = queries()["llm_bpe_encode_corpus"](spark, SF).collect()
     assert rows
@@ -531,7 +519,7 @@ def test_incremental_stats_profile_partials_merge(spark):
     arbitrary batches finalize to exactly the one-shot profile's
     n_rows / n_nonnull / ndv_exact / ndv_kmv_est."""
     from gmall_flink_realtime4_spark import tables as T
-    from gmall_flink_realtime4_spark.plans.round6_ext_queries import (
+    from gmall_flink_realtime4_spark.plans.dq_queries import (
         stats_profile_finalize,
         stats_profile_partials,
     )
@@ -569,7 +557,7 @@ def test_pagerank_python_model(spark):
     ranks."""
     import pyarrow.parquet as pq
 
-    from gmall_flink_realtime4_spark.plans.round6_ext_queries import (
+    from gmall_flink_realtime4_spark.plans.olap_queries import (
         PR_DAMP_NUM,
         PR_ITERS,
         _PPB,
@@ -630,7 +618,7 @@ def test_incremental_pagerank_edge_state_table(spark):
     from pyspark.sql import Window
 
     from gmall_flink_realtime4_spark import tables as T
-    from gmall_flink_realtime4_spark.plans.round6_ext_queries import (
+    from gmall_flink_realtime4_spark.plans.olap_queries import (
         pagerank_from_edges,
     )
 
@@ -714,11 +702,11 @@ def test_hll_python_model(spark):
     by max, pinned integer estimate — and require bit-identical output."""
     import pyarrow.parquet as pq
 
-    from gmall_flink_realtime4_spark.plans.round6_ext_queries import (
+    from gmall_flink_realtime4_spark.plans.olap_queries import (
+        HLL_M,
         _HLL_ALPHA_DEN,
         _HLL_ALPHA_NUM,
         _HLL_W,
-        HLL_M,
     )
 
     rows = pq.read_table(f"{SF}/documents.parquet").to_pylist()
@@ -769,7 +757,7 @@ def test_incremental_hll_register_partials_merge(spark):
     lossless with no distinct pass (the streaming accumulate-then-finalize
     twin)."""
     from gmall_flink_realtime4_spark import tables as T
-    from gmall_flink_realtime4_spark.plans.round6_ext_queries import (
+    from gmall_flink_realtime4_spark.plans.olap_queries import (
         _source_shingles,
         hll_finalize,
         hll_register_partials,
@@ -804,7 +792,7 @@ def test_bm25_python_model(spark):
     order as written) and require identical top-5 per query."""
     import pyarrow.parquet as pq
 
-    from gmall_flink_realtime4_spark.plans.round6_ext_queries import (
+    from gmall_flink_realtime4_spark.plans.retrieval_queries import (
         BM25_QUERIES,
         BM25_TOP_K,
     )
@@ -870,7 +858,7 @@ def test_winnow_python_model(spark):
     candidate pairs exactly, including the overlap per-mille."""
     import pyarrow.parquet as pq
 
-    from gmall_flink_realtime4_spark.plans.round6_ext_queries import (
+    from gmall_flink_realtime4_spark.plans.dedup_queries import (
         WINNOW_MAX_DF,
         WINNOW_MIN_SHARED,
         WINNOW_W,
@@ -991,7 +979,7 @@ def test_incremental_winnow_pairs_matches_capless_batch(spark, tmp_path):
     capless run also equals the registered capped query, so the twin's
     union matches the driver-gated result too. Replays are idempotent."""
     from gmall_flink_realtime4_spark import tables as T
-    from gmall_flink_realtime4_spark.plans.round6_ext_queries import (
+    from gmall_flink_realtime4_spark.plans.dedup_queries import (
         winnow_fingerprint_rows,
         winnow_pairs,
     )
@@ -1066,10 +1054,10 @@ def test_vocab_drift_python_model(spark):
     '§other', TV / chi-square / argmax — bit-identical."""
     import pyarrow.parquet as pq
 
-    from gmall_flink_realtime4_spark.plans.round6_ext_queries import (
-        _OTHER,
+    from gmall_flink_realtime4_spark.plans.dq_queries import (
         VOCAB_DRIFT_MIN_SUPPORT,
         VOCAB_DRIFT_V,
+        _OTHER,
     )
 
     rows = pq.read_table(f"{SF}/documents.parquet").to_pylist()
@@ -1174,7 +1162,7 @@ def test_lsh_tuning_curve_python_model(spark):
     the sample IS the corpus — the model computes it either way."""
     import pyarrow.parquet as pq
 
-    from gmall_flink_realtime4_spark.plans.round6_ext_queries import (
+    from gmall_flink_realtime4_spark.plans.dedup_queries import (
         LSH_CURVE_CONFIGS,
         LSH_CURVE_TRUTH_DOCS,
         LSH_CURVE_TRUTH_PM,
@@ -1278,9 +1266,7 @@ def test_benford_python_model(spark):
 
     import pyarrow.parquet as pq
 
-    from gmall_flink_realtime4_spark.plans.round6_ext_queries import (
-        BENFORD_PM,
-    )
+    from gmall_flink_realtime4_spark.plans.dq_queries import BENFORD_PM
 
     # the pinned constants must BE Benford (round-to-nearest per-mille)
     assert list(BENFORD_PM) == [
@@ -1338,7 +1324,7 @@ def test_pps_python_model_and_identity(spark):
     guarantee uniform sampling lacks)."""
     import pyarrow.parquet as pq
 
-    from gmall_flink_realtime4_spark.plans.round6_ext_queries import PPS_N
+    from gmall_flink_realtime4_spark.plans.corpus_queries import PPS_N
 
     rows = sorted(
         pq.read_table(f"{SF}/documents.parquet").to_pylist(),
@@ -1378,9 +1364,7 @@ def test_pps_prefix_sum_is_distributed(spark):
     rows — the only unpartitioned window runs on the rows/{bucket}
     offsets frame. Selection is map-side: no join against any
     materialized point set."""
-    from gmall_flink_realtime4_spark.plans.round6_ext_queries import (
-        PPS_BUCKET,
-    )
+    from gmall_flink_realtime4_spark.plans.corpus_queries import PPS_BUCKET
 
     plan = _plan(spark, "llm_sample_pps")
     assert f"div {PPS_BUCKET}" in plan  # bucketed partition key present
@@ -1393,7 +1377,7 @@ def test_incremental_ks_count_partials_merge(spark):
     over the merge equals the registered query — the accumulate-then-
     finalize twin (sum algebra; the checksum/anomaly-partials pattern)."""
     from gmall_flink_realtime4_spark import tables as T
-    from gmall_flink_realtime4_spark.plans.round6_ext_queries import (
+    from gmall_flink_realtime4_spark.plans.dq_queries import (
         ks_count_partials,
         ks_finalize,
     )
@@ -1422,7 +1406,7 @@ def test_incremental_benford_partials_merge(spark):
     """First-digit count partials from 3 disjoint order slices union +
     re-sum to the one-shot counts exactly (plain sum algebra)."""
     from gmall_flink_realtime4_spark import tables as T
-    from gmall_flink_realtime4_spark.plans.round6_ext_queries import (
+    from gmall_flink_realtime4_spark.plans.dq_queries import (
         benford_digit_partials,
     )
 
@@ -1503,9 +1487,7 @@ def test_dau_wau_python_model(spark):
 
     import pyarrow.parquet as pq
 
-    from gmall_flink_realtime4_spark.plans.round6_ext_queries import (
-        WAU_DAYS,
-    )
+    from gmall_flink_realtime4_spark.plans.olap_queries import WAU_DAYS
 
     t = pq.read_table(f"{SF}/events.parquet", columns=["user_id", "ts"])
     by_day: dict = {}
@@ -1556,7 +1538,7 @@ def test_incremental_vocab_drift_partials_merge(spark):
     bucketing — equals the registered report exactly (the streaming
     accumulate-then-finalize twin the r6 verdict asked for)."""
     from gmall_flink_realtime4_spark import tables as T
-    from gmall_flink_realtime4_spark.plans.round6_ext_queries import (
+    from gmall_flink_realtime4_spark.plans.dq_queries import (
         vocab_drift_finalize,
         vocab_drift_term_partials,
     )
@@ -1586,7 +1568,7 @@ def test_incremental_langid_confusion_partials_merge(spark):
     finalize equals the registered P/R/F1 report exactly — including
     classes that only ever appear on one axis (honest-zero rows)."""
     from gmall_flink_realtime4_spark import tables as T
-    from gmall_flink_realtime4_spark.plans.round6_ext_queries import (
+    from gmall_flink_realtime4_spark.plans.dq_queries import (
         langid_confusion_partials,
         langid_eval_finalize,
     )
@@ -1619,7 +1601,7 @@ def test_incremental_lsh_curve_partials_merge(spark):
     cross-batch candidate/truth pairs (doc_id % 3 splits co-shingled
     docs across batches by construction)."""
     from gmall_flink_realtime4_spark import tables as T
-    from gmall_flink_realtime4_spark.plans.round6_ext_queries import (
+    from gmall_flink_realtime4_spark.plans.dedup_queries import (
         lsh_curve_finalize,
         lsh_curve_shingle_partials,
     )

@@ -10,14 +10,16 @@ from fractions import Fraction
 
 from pyspark.sql import functions as F
 
-from gmall_flink_realtime4_spark.plans.round7_ext_queries import (
+from gmall_flink_realtime4_spark.plans.corpus_queries import (
     RES_K,
-    cooccurrence_lift,
-    pareto_frontier_2d,
-    pca_power_step,
-    readability,
     reservoir_sample,
 )
+from gmall_flink_realtime4_spark.plans.olap_queries import (
+    cooccurrence_lift,
+    pareto_frontier_2d,
+)
+from gmall_flink_realtime4_spark.plans.retrieval_queries import pca_power_step
+from gmall_flink_realtime4_spark.plans.text_queries import readability
 
 SF = "/root/testdata/sf0.001"
 
@@ -296,7 +298,7 @@ def test_incremental_skyline_partials_merge(spark):
     batch dominates away (state is the aggregate, never the frontier)."""
     from gmall_flink_realtime4_spark import tables as T
     from gmall_flink_realtime4_spark.plans.catalog import queries
-    from gmall_flink_realtime4_spark.plans.round7_ext_queries import (
+    from gmall_flink_realtime4_spark.plans.olap_queries import (
         skyline_agg_partials,
         skyline_finalize,
     )
@@ -326,7 +328,7 @@ def test_incremental_cooccurrence_membership_merge(spark):
     pairs emerge from the merged membership state."""
     from gmall_flink_realtime4_spark import tables as T
     from gmall_flink_realtime4_spark.plans.catalog import queries
-    from gmall_flink_realtime4_spark.plans.round7_ext_queries import (
+    from gmall_flink_realtime4_spark.plans.olap_queries import (
         cooccurrence_finalize,
         cooccurrence_ut_partials,
     )
@@ -372,7 +374,7 @@ def test_incremental_reservoir_survivor_merge(spark):
     own batch's top-k)."""
     from gmall_flink_realtime4_spark import tables as T
     from gmall_flink_realtime4_spark.plans.catalog import queries
-    from gmall_flink_realtime4_spark.plans.round7_ext_queries import (
+    from gmall_flink_realtime4_spark.plans.corpus_queries import (
         reservoir_finalize,
         reservoir_partials,
     )
@@ -398,7 +400,7 @@ def test_incremental_pca_partials_merge(spark):
     finalize equals the registered power step bit-for-bit."""
     from gmall_flink_realtime4_spark import tables as T
     from gmall_flink_realtime4_spark.plans.catalog import queries
-    from gmall_flink_realtime4_spark.plans.round7_ext_queries import (
+    from gmall_flink_realtime4_spark.plans.retrieval_queries import (
         pca_dim_partials,
         pca_finalize,
     )

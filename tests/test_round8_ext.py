@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from gmall_flink_realtime4_spark.plans.round8_ext_queries import (
+from gmall_flink_realtime4_spark.plans.text_queries import (
     QUALITY_MODEL,
     quality_classify,
     quality_features,
@@ -154,7 +154,7 @@ def test_incremental_corpus_final_whole_dag(spark):
     per-batch keeper or per-batch contamination set would diverge)."""
     from gmall_flink_realtime4_spark import tables as T
     from gmall_flink_realtime4_spark.plans.catalog import queries
-    from gmall_flink_realtime4_spark.plans.llm_pipeline_queries import (
+    from gmall_flink_realtime4_spark.plans.corpus_queries import (
         DECON_EVAL_MOD,
         corpus_final_feat_partials,
         corpus_final_finalize,
@@ -257,7 +257,7 @@ def test_incremental_corpus_final_foreach_batch_e2e(spark, tmp_path):
     on the streaming engine, not just on sliced frames."""
     from gmall_flink_realtime4_spark import tables as T
     from gmall_flink_realtime4_spark.plans.catalog import queries
-    from gmall_flink_realtime4_spark.plans.llm_pipeline_queries import (
+    from gmall_flink_realtime4_spark.plans.corpus_queries import (
         corpus_final_feat_partials,
         corpus_final_finalize,
         corpus_final_shingle_partials,
@@ -314,7 +314,7 @@ def test_incremental_corpus_final_soak_restart(spark, tmp_path):
     EFFECT to crash replay."""
     from gmall_flink_realtime4_spark import tables as T
     from gmall_flink_realtime4_spark.plans.catalog import queries
-    from gmall_flink_realtime4_spark.plans.llm_pipeline_queries import (
+    from gmall_flink_realtime4_spark.plans.corpus_queries import (
         corpus_final_feat_partials,
         corpus_final_finalize,
         corpus_final_shingle_partials,

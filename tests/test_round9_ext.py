@@ -6,17 +6,15 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from gmall_flink_realtime4_spark.plans.round9_ext_queries import (
+from gmall_flink_realtime4_spark.plans.text_queries import (
     QUALITY_MODEL,
     TRAIN_FEATS,
     TRAIN_PAIRS,
+    quality_features,
     quality_train_design,
     quality_train_finalize,
     quality_train_gram,
     quality_train_partials,
-)
-from gmall_flink_realtime4_spark.plans.round8_ext_queries import (
-    quality_features,
 )
 from tests.test_round8_ext import EDGE_TEXTS, _py_features
 

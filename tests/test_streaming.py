@@ -123,10 +123,7 @@ def test_kmv_sketch_windowed_stream_parity(spark, tmp_path):
     values via collect_set) — the mergeable-sketch alternative to the
     tagged dedup-union when exact distinct isn't required. Streaming
     windowed agg == identical batch plan."""
-    from gmall_flink_realtime4_spark.plans.llm_scale_queries import (
-        _KMV_M,
-        _hexval_sql,
-    )
+    from gmall_flink_realtime4_spark.operators.hashing import KMV_M, hexval_sql
 
     K = 16
 
@@ -140,9 +137,9 @@ def test_kmv_sketch_windowed_stream_parity(spark, tmp_path):
             F.window("ts", "1 day").alias("w"), "event_type"
         ).agg(F.array_sort(F.collect_set("hx")).alias("arr"))
         kth = F.element_at("arr", F.least(F.size("arr"), F.lit(K)))
-        v = F.expr(_hexval_sql("element_at(arr, least(size(arr), {}))".format(K), "instr"))
+        v = F.expr(hexval_sql("element_at(arr, least(size(arr), {}))".format(K), "instr"))
         est = F.when(F.size("arr") < K, F.size("arr").cast("bigint")).otherwise(
-            F.expr(f"cast(({K - 1} * {_KMV_M}) as bigint)") / v
+            F.expr(f"cast(({K - 1} * {KMV_M}) as bigint)") / v
         )
         return agged.select(
             F.col("w.start").alias("stt"),
@@ -702,7 +699,7 @@ def test_incremental_checksum_partials_merge(spark, tmp_path):
     is the property that makes the migration checksum computable as a
     continuously-maintained aggregate (commutative + associative digests:
     arrival order and batch boundaries cannot matter)."""
-    from gmall_flink_realtime4_spark.plans.analytics_ext_queries import (
+    from gmall_flink_realtime4_spark.plans.dq_queries import (
         checksum_finalize,
         checksum_partials,
     )
@@ -740,9 +737,7 @@ def test_incremental_countmin_sketch_stream(spark, tmp_path):
     partials equals the one-shot whole-corpus sketch — bucket assignment
     depends only on the token, so counters are commutative/associative
     and batch boundaries cannot matter."""
-    from gmall_flink_realtime4_spark.plans.round5_ext_queries import (
-        countmin_sketch,
-    )
+    from gmall_flink_realtime4_spark.plans.olap_queries import countmin_sketch
 
     docs = T.load(spark, SF, "documents")
 
@@ -1008,7 +1003,7 @@ def test_incremental_anomaly_partials_merge(spark, tmp_path):
     mergeable (event_type, day, ct) partials, and finalizing the folded
     partials must equal the one-shot batch query exactly (counts are
     commutative + associative; the z expression runs only at finalize)."""
-    from gmall_flink_realtime4_spark.plans.analytics_ext_queries import (
+    from gmall_flink_realtime4_spark.plans.olap_queries import (
         anomaly_daily_partials,
         anomaly_finalize,
     )
@@ -1185,7 +1180,7 @@ def test_incremental_vocab_drift_stream_e2e(spark, tmp_path):
     vocabulary, which only exists corpus-wide and is therefore rebuilt
     from MERGED counts at finalize time."""
     from gmall_flink_realtime4_spark.plans.catalog import queries
-    from gmall_flink_realtime4_spark.plans.round6_ext_queries import (
+    from gmall_flink_realtime4_spark.plans.dq_queries import (
         vocab_drift_finalize,
         vocab_drift_term_partials,
     )
@@ -1218,7 +1213,7 @@ def test_incremental_reservoir_stream_e2e(spark, tmp_path):
     determinism that a true random reservoir cannot give a replayed
     stream."""
     from gmall_flink_realtime4_spark.plans.catalog import queries
-    from gmall_flink_realtime4_spark.plans.round7_ext_queries import (
+    from gmall_flink_realtime4_spark.plans.corpus_queries import (
         reservoir_finalize,
         reservoir_partials,
     )

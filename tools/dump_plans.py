@@ -1,18 +1,21 @@
-"""Dump .explain('formatted') for named queries to plans/<round>/<q>_<tag>.txt.
+"""Dump .explain('formatted') for registered queries, one file per query.
 
-Usage: python tools/dump_plans.py <tag> [sf_dir] [query...]
-  tag     suffix for the output file (before/after)
+Usage: python tools/dump_plans.py <out_dir> [sf_dir] [query... | all]
+  out_dir directory the <query>.txt files are written to (created)
   sf_dir  defaults to /root/testdata/sf0.1
-  query   default: the bench HEADLINE set
-The round directory defaults to r13; override with SPARK_GRAFT_PLANS_ROUND.
+  query   default: the bench HEADLINE set; ``all`` = every registered query
 
 The explain is captured from the UNEXECUTED frame (AdaptiveSparkPlan
 isFinalPlan=false) — the static shape the judge checks claims against.
+Session-global counters are masked (expression ids ``#123``, RDD ids
+``RDD[45]``, ``plan_id=6``), so two dumps of the same plan diff clean:
+``diff -r a/ b/`` after dumping two checkouts is the plan-identity check.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -20,22 +23,33 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from gmall_flink_realtime4_spark.plans.catalog import queries  # noqa: E402
 from gmall_flink_realtime4_spark.session import get_spark  # noqa: E402
 
+_MASKS = (
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+)
+
+
+def mask_ids(txt: str) -> str:
+    """Replace the session-global ids an explain string carries."""
+    for pat, rep in _MASKS:
+        txt = pat.sub(rep, txt)
+    return txt
+
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    out_dir = sys.argv[1]
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     qs = queries()
-    if len(sys.argv) > 3:
-        names = sys.argv[3:]
-    else:
+    names = sys.argv[3:]
+    if names == ["all"]:
+        names = sorted(qs)
+    elif not names:
         import bench
 
         names = bench.HEADLINE
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r13"),
-    )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("dump_plans")
     for name in names:
@@ -43,9 +57,9 @@ def main() -> None:
         txt = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        path = os.path.join(out_dir, f"{name}_{tag}.txt")
+        path = os.path.join(out_dir, f"{name}.txt")
         with open(path, "w") as f:
-            f.write(txt)
+            f.write(mask_ids(txt))
         print(f"wrote {path} ({len(txt.splitlines())} lines)")
 
 
