@@ -1,113 +1,115 @@
-"""Shingling and MinHash-LSH steps shared by the dedup and corpus queries.
+"""Word-3-gram shingling and the MinHash-LSH steps shared by the dedup,
+corpus, text and sketch queries.
 
-One canonical shingle construction (``shingles``, ``shingles_sized`` and
-their DuckDB twin ``SHINGLE_SQL``) and the K = B x R MinHash pipeline:
-``minhash_bands`` (signatures -> band keys), ``minhash_candidates``
-(bucket-colliding pairs) and ``minhash_verify`` (exact Jaccard). A fix to
-tokenization or the n<3 guard lands here once; the streaming-incremental
-twin runs the same steps.
+The word-3-gram construction (split on spaces, index ``0..size-3``, join
+three tokens, drop short shingles) exists once per engine, here:
+
+- ``trigram_array`` / ``is_trigram`` — the Spark Column builder (every
+  3-gram of a token array, in position order, with multiplicity) and its
+  validity predicate. Queries that score arrays per row or key the rows by
+  something other than the document use these directly.
+- ``shingles`` — the per-document frame builder, ``(doc_id, n_sh,
+  shingle)``: distinct shingles per doc plus the doc's distinct-shingle
+  count. Callers that do not need ``n_sh`` drop it and Catalyst prunes
+  the size away.
+- ``shingle_sql`` — the DuckDB CTE builder every oracle splices in.
+
+Then the K = B x R MinHash pipeline: ``minhash_bands`` (signatures ->
+band keys), ``minhash_candidates`` (bucket-colliding pairs) and
+``minhash_verify`` (exact Jaccard). A fix to tokenization or the n<3
+guard lands here once; the streaming-incremental twin runs the same
+builder and steps as the batch query.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 
 # MinHash parameters: K hash functions in B bands of R rows (K = B*R).
 MINHASH_K, MINHASH_B, MINHASH_R = 12, 4, 3
 
-SHINGLE_SQL = """
-toks AS (
-    SELECT doc_id, string_split(text, ' ') AS t FROM documents
-), idx AS (
-    SELECT doc_id, t, unnest(range(1, greatest(len(t) - 1, 1))) AS i FROM toks
-), sh AS (
-    SELECT DISTINCT doc_id,
-           t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-    FROM idx
-)"""
+
+def trigram_array(t: Column) -> Column:
+    """Every word 3-gram of the token array ``t``, in position order and
+    with multiplicity. Lambda bodies run interpreted, so the expression
+    ``t`` is evaluated on every element access: pass a named column (one
+    split per row), not an inline ``split``. A doc shorter than 3 tokens
+    yields one short element (``sequence(0, 0)``); ``is_trigram`` rejects
+    it."""
+    return F.transform(
+        F.sequence(F.lit(0), F.greatest(F.size(t) - 3, F.lit(0))),
+        lambda i: F.concat_ws(
+            " ",
+            F.try_element_at(t, i + 1),
+            F.try_element_at(t, i + 2),
+            F.try_element_at(t, i + 3),
+        ),
+    )
+
+
+def is_trigram(s: Column) -> Column:
+    """True for an element of ``trigram_array`` that really joins three
+    tokens — the n<3 guard."""
+    return F.size(F.split(s, " ")) == 3
 
 
 def shingles(d: DataFrame) -> DataFrame:
-    """Distinct 3-word shingles per doc (same construction as the
-    ngram-jaccard query so the two ops share one candidate space)."""
-    toks = d.select("doc_id", F.split("text", " ").alias("t"))
-    return (
-        toks.select(
-            "doc_id",
-            F.explode(
-                F.array_distinct(
-                    F.transform(
-                        F.sequence(F.lit(0), F.greatest(F.size("t") - 3, F.lit(0))),
-                        lambda i: F.concat_ws(
-                            " ",
-                            F.try_element_at(F.col("t"), i + 1),
-                            F.try_element_at(F.col("t"), i + 2),
-                            F.try_element_at(F.col("t"), i + 3),
-                        ),
-                    )
-                )
-            ).alias("shingle"),
-        )
-        .filter(F.size(F.split("shingle", " ")) == 3)
-    )
+    """Distinct word 3-gram shingles per document with the document's
+    distinct-shingle count: (doc_id, n_sh BIGINT, shingle).
 
+    The exact pair scorers (ngram-jaccard, containment) key their pair
+    aggregation on (doc_a, doc_b, n_a, n_b) from ``n_sh``, so they need no
+    per-doc sizes groupBy and no size joins of the pair frame. n_sh is
+    functionally determined by doc_id, so the wider key changes no groups.
+    Everyone else drops it; the size projection is then pruned away.
 
-def shingles_sized(d: DataFrame) -> DataFrame:
-    """``shingles`` plus a MAP-SIDE per-doc distinct-shingle count:
-    (doc_id, n_sh BIGINT, shingle).
-
-    The exact pair-scoring queries (ngram-jaccard, containment) need each
-    side's set size next to every intersection row. Computing it here —
-    ``size()`` of the same distinct array the explode consumes, one narrow
-    projection, zero shuffles — lets those queries GROUP the pair join by
-    (doc_a, doc_b, n_a, n_b) directly and drop the whole ``sizes`` branch
-    they used to carry: a per-doc groupBy shuffle of the shingle frame plus
-    TWO shuffle joins of the pair frame (the largest intermediate in either
-    query) against it. n_sh is functionally determined by doc_id, so the
-    wider grouping key changes no groups; the 8-byte column rides a shuffle
-    that already carries the ~20-byte shingle string. Same construction as
-    ``shingles``, so the candidate space is bit-identical.
-
-    SHAPE MATTERS (two measured dead ends, both row-identical):
-    (1) The array must be projected as a NAMED COLUMN in its own step so
-    it evaluates ONCE — putting ``size(arr_expr)`` and
-    ``explode(arr_expr)`` as siblings in one projection evaluates the
-    expression twice (Project and Generate are different operators, no
-    cross-operator CSE): hidden at sf0.1 (~0.6 s derivation) but ~2x the
-    whole query at x30. (2) The generator must be ``explode_outer``, not
-    ``explode`` — InferFiltersFromGenerate skips outer generators, while
-    plain explode over a named column made Catalyst infer a non-empty
-    filter and predicate-pushdown substitute the WHOLE array
-    construction below the loader's spread repartition onto the
-    single-task parquet scan (sf0.1: 3.8 s vs 0.65 s). outer == inner
-    here because the array is never empty (sequence(0, >=0) yields >= 1
-    index; degenerate short shingles from tiny docs are dropped by the
-    post-explode row filter, the same filter ``shingles`` uses).
-    n_sh = size(arr) is exact for every SURVIVING row: docs with >= 3
-    tokens generate only valid 3-token shingles (the index sequence
-    stops at size-3), and shorter docs' rows are all dropped, so their
-    n_sh never surfaces.
+    Shape (CLAUDE.md, "Derived-array explode shape"):
+    (a) the distinct array is a NAMED column in its own projection, so it
+    evaluates once; (b) it is exploded with ``explode_outer`` — plain
+    explode lets InferFiltersFromGenerate add a non-empty filter that
+    pushdown substitutes below the loader's spread repartition. outer ==
+    inner here: ``sequence(0, >=0)`` never yields an empty array;
+    (c) short shingles from docs under 3 tokens go by a POST-explode row
+    filter (codegen), not an array lambda; (d) ``n_sh`` is projected
+    BEFORE the Generate, so the Generate carries [doc_id, n_sh], not the
+    array (a size next to the generator would make every shingle row copy
+    its doc's array). n_sh is exact for every surviving row: docs with
+    >= 3 tokens yield only valid shingles, and all rows of shorter docs
+    are dropped.
     """
     toks = d.select("doc_id", F.split("text", " ").alias("t"))
-    arr = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(F.size("t") - 3, F.lit(0))),
-            lambda i: F.concat_ws(
-                " ",
-                F.try_element_at(F.col("t"), i + 1),
-                F.try_element_at(F.col("t"), i + 2),
-                F.try_element_at(F.col("t"), i + 3),
-            ),
-        )
+    arr = toks.select(
+        "doc_id", F.array_distinct(trigram_array(F.col("t"))).alias("shs")
     )
-    step = toks.select("doc_id", arr.alias("shs"))
-    return step.select(
-        "doc_id",
-        F.size("shs").cast("bigint").alias("n_sh"),
-        F.explode_outer("shs").alias("shingle"),
-    ).filter(F.size(F.split("shingle", " ")) == 3)
+    sized = arr.select(
+        "doc_id", F.size("shs").cast("bigint").alias("n_sh"), "shs"
+    )
+    return sized.select(
+        "doc_id", "n_sh", F.explode_outer("shs").alias("shingle")
+    ).filter(is_trigram(F.col("shingle")))
+
+
+def shingle_sql(
+    key: str = "doc_id", distinct: bool = True, src: str = "documents"
+) -> str:
+    """DuckDB twin of the word-3-gram construction: the CTE chain
+    ``toks, idx, sh`` ending in ``sh(<key>, shingle)`` over relation
+    ``src`` (which needs ``<key>`` and ``text``). ``distinct`` keeps one
+    row per (key, shingle), as ``shingles`` does; without it every
+    occurrence is a row, as ``trigram_array`` gives. Docs under 3 tokens
+    get an empty index range, so no short shingle is ever built. Splice
+    after ``WITH``."""
+    return f"""toks AS (
+    SELECT {key}, string_split(text, ' ') AS t FROM {src}
+), idx AS (
+    SELECT {key}, t, unnest(range(1, greatest(len(t) - 1, 1))) AS i FROM toks
+), sh AS (
+    SELECT {"DISTINCT " if distinct else ""}{key},
+           t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
+    FROM idx
+)"""
 
 
 def minhash_candidates(sh: DataFrame) -> DataFrame:
@@ -192,7 +194,11 @@ def minhash_verify(cand: DataFrame, sh: DataFrame) -> DataFrame:
         .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
-    sh_cand = sh.join(cand_ids, "doc_id", "left_semi").localCheckpoint()
+    sh_cand = (
+        sh.select("doc_id", "shingle")
+        .join(cand_ids, "doc_id", "left_semi")
+        .localCheckpoint()
+    )
     sizes = sh_cand.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     sa, sb2 = sh_cand.alias("sa"), sh_cand.alias("sb")
     inter = (

@@ -3,10 +3,10 @@
 The ONE copy of the PQ exact-integer kernel — subspace constants, the
 offset-int quantize pass, subspace split, exact squared-L2, the
 broadcast-codebook min-struct argmin, and the floored-integer-mean Lloyd
-trainer — imported by BOTH the batch plans
-(``plans.retrieval_queries``: llm_ann_pq_encode / ivf_trained_recall /
-pq_adc_recall) and the streaming twin
-(``streaming.incremental.pq_train_partials``). Promoted out of the plans
+trainer (Lloyd sums + centroid assembly) — imported by BOTH the batch
+plans (``plans.retrieval_queries``: llm_ann_pq_encode /
+ivf_trained_recall / pq_adc_recall) and the streaming twin
+(``streaming.incremental.pq_train_partials`` / ``pq_train_finalize``). Promoted out of the plans
 module (r12, ADVICE) so the streaming layer no longer reaches into plan
 internals: a rename/refactor here breaks both importers loudly at import
 time instead of silently at twin call time. Same pattern as
@@ -108,22 +108,27 @@ def argmin_codes(
 
 def pq_trained_codebook_int(assign: DataFrame) -> DataFrame:
     """One Lloyd step per subspace over an OFFSET-INT assignment frame
-    (vec_id, m, cid, xint): (m, cid, qarr) trained codewords.
+    (vec_id, m, cid, xint): (m, cid, qarr) trained codewords — the two
+    halves below, which the streaming twin runs per batch and at finalize.
 
-    Centroid component = integer-floored mean of the assigned members at
-    the offset scale: q = sum(xi) div n — xi > 0 by construction (both
-    PQ_OFF_INT and PQ_RES_OFF offsets), so Spark's truncating `div` and
-    DuckDB's flooring `//` agree. Sums and counts come from ONE
-    map-combined hash agg over (m, cid, pos) — PQ_M*PQ_K*PQ_D groups
-    total, no corpus joins (n is the member count replicated per pos, so
-    no separate count frame). sum as decimal(28,0): at 1e12 members a
-    cell sum reaches ~4e21, past BIGINT but comfortably inside 28 digits.
     Seed-assigned cells are never empty (every seed cid assigns d2=0 to
     itself, modulo exact-duplicate subvectors — the lower cid absorbs
     both and the empty cell drops on BOTH engines); a LATER Lloyd step
     can starve a cell (standard cell death), identically on both engines
     since the assignment is deterministic."""
-    comp = (
+    return pq_lloyd_centroids(pq_lloyd_sums(assign))
+
+
+def pq_lloyd_sums(assign: DataFrame) -> DataFrame:
+    """Lloyd-step sufficient statistics of an assignment frame
+    (vec_id, m, cid, xint): (m, cid, pos, s, n) component SUMS and member
+    COUNTS from ONE map-combined hash agg over (m, cid, pos) —
+    PQ_M*PQ_K*PQ_D groups total, no corpus joins (n is the member count
+    replicated per pos, so no separate count frame). Both are
+    sum-algebras, so partials over disjoint slices merge by addition.
+    s as decimal(28,0): at 1e12 members a cell sum reaches ~4e21, past
+    BIGINT but comfortably inside 28 digits."""
+    return (
         assign.select(
             "m", "cid", F.posexplode(F.col("xint")).alias("pos", "xi")
         )
@@ -133,8 +138,17 @@ def pq_trained_codebook_int(assign: DataFrame) -> DataFrame:
             F.count(F.lit(1)).alias("n"),
         )
     )
+
+
+def pq_lloyd_centroids(sums: DataFrame) -> DataFrame:
+    """(m, cid, pos, s, n) Lloyd sums -> (m, cid, qarr) codewords.
+
+    Centroid component = integer-floored mean of the assigned members at
+    the offset scale: q = s div n — xi > 0 by construction (both
+    PQ_OFF_INT and PQ_RES_OFF offsets), so Spark's truncating `div` and
+    DuckDB's flooring `//` agree. The array is assembled in pos order."""
     return (
-        comp.select("m", "cid", "pos", F.expr("s div n").alias("q"))
+        sums.select("m", "cid", "pos", F.expr("s div n").alias("q"))
         .groupBy("m", "cid")
         .agg(
             F.transform(

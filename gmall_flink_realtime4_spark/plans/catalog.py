@@ -46,78 +46,65 @@ REGISTRY: dict[str, QuerySpec] = {}
 # prefix froze (and any new query), then fill to exactly 50 with the
 # queries whose freshest CORRECTNESS_r* row is oldest.
 GATE_PRIORITY: list[str] = [
-    # ROUND-13 ROTATION (the r12 verdict's recipe, executed): prefix =
-    # changed-plan re-entries + the 40 r10-fresh names (registry keys in
-    # CORRECTNESS_r10 absent from r11/r12, in r10 key order) + oldest
-    # r11-fresh names to fill 50.
+    # Rotation after the r13 prefix (CORRECTNESS_r13) froze.
     #
-    # CHANGED-PLAN re-entries (the r4-r12 convention — every query whose
-    # plan changed after the r12 gate prefix froze, or changes this
-    # round, leads the head so the driver re-verifies it):
-    # - llm_dedup_simhash / llm_dedup_simhash_pairs: late-r12
-    #   single-shuffle packed-vote rewrite (r12 verdict item 1);
-    # - llm_dedup_edit_distance_verify: late-r12 minhash_candidates
-    #   factoring (also r10-fresh, so it leads the r10 fill below);
-    # - r13 changed plans are appended here in the same commit as the
-    #   change lands (two-phase top-k SALT retune: the 5 ANN-family
-    #   consumers; CC propagate restructure: llm_dedup_clusters;
-    #   referential-integrity shared-scan probe fold; quality-score
-    #   spread revert; skyline frontier checkpoint; BPE trainer job
-    #   restructure — the last three displace the 3 tail names, whose
-    #   plans are untouched and whose r10/r11 rows stand).
-    "llm_dedup_simhash",
-    "llm_dedup_simhash_pairs",
-    # r13 changed plans (see above)
-    "llm_ann_cosine_topk",
-    "llm_ann_ivf",
-    "llm_ann_ivf_trained_recall",
-    "llm_ann_pq_adc_recall",
-    "llm_lsh_tuning_curve",
-    "llm_dedup_clusters",
-    "llm_text_quality_score",
-    "f_skyline_pareto_suppliers",
-    "llm_bpe_train_merges",
-    "llm_bpe_encode_corpus",
-    # the 40 r10-fresh names, r10 key order (includes the changed-plan
-    # llm_dedup_edit_distance_verify and dq_referential_integrity)
-    "llm_ann_pq_encode",
-    "llm_chunk_dedup",
-    "llm_text_repetition",
+    # CHANGED-PLAN head: every query whose plan changed since then. The
+    # one word-3-gram builder per engine (operators/minhash.py) changed
+    # the masked plans of the first seven and the checkpointed
+    # (build-phase) shingle plans of the next three; the broadcast hints
+    # of dq_referential_integrity narrowed to the dimension parents.
+    "llm_dedup_minhash_lsh",
+    "llm_dedup_ngram_jaccard",
+    "llm_dedup_containment",
+    "llm_dedup_containment_lsh",
+    "llm_decontaminate",
     "llm_corpus_final",
+    "llm_ngram_heavy_hitters",
+    "llm_dedup_clusters",
     "llm_dedup_edit_distance_verify",
-    "dwd_base_log_page",
-    "dwd_base_log_start",
-    "dwd_base_log_err",
-    "dwd_base_log_display",
-    "dwd_base_log_action",
-    "dim_app_router",
-    "dim_app_materialize",
-    "dws_sliding_window_events",
-    "llm_corpus_rollup",
-    "dws_user_event_funnel",
-    "dws_session_window_events",
-    "dws_time_hierarchy_rollup",
-    "dws_user_retention_cohort",
-    "dws_gap_fill_locf_daily_orders",
-    "dim_scd2_user_event_intervals",
-    "dwd_trade_order_detail",
-    "dwd_trade_order_cancel_detail",
-    "dwd_trade_order_pay_suc_detail",
-    "dws_trade_trademark_category_user_refund_window",
-    "dq_audit_warehouse",
-    "llm_mix_domains",
-    "llm_text_rare_token_ratio",
-    "dq_checksum_partition",
-    "llm_dedup_embedding_cosine",
-    "dws_event_anomaly_zscore",
-    "f_unpivot_event_day",
+    "llm_lsh_tuning_curve",
     "dq_referential_integrity",
-    "dws_user_path_transitions",
-    "dq_null_profile",
-    "dwd_trade_cart_add",
-    "dwd_interaction_comment_info",
-    "dwd_trade_order_refund",
-    "dwd_base_db_router",
+    # Fill: the queries whose freshest CORRECTNESS row is oldest — the
+    # two r10-fresh names, then r11-fresh names in r11 key order.
+    "dws_traffic_source_keyword_page_view_window",
+    "dws_traffic_vc_ch_ar_is_new_page_view_window",
+    "dws_traffic_home_detail_page_view_window",
+    "dws_user_user_login_window",
+    "dws_user_user_register_window",
+    "dws_trade_cart_add_uu_window",
+    "dws_trade_payment_suc_window",
+    "dws_trade_order_window",
+    "dws_trade_sku_order_window",
+    "dws_trade_province_order_window",
+    "p1_json_parse_validity_filter",
+    "f_date_formats",
+    "f_conditional_cast_math",
+    "f_asof_join_latest_order",
+    "f_json_props_extract",
+    "llm_multimodal_decode",
+    "llm_multimodal_frame_sample",
+    "llm_multimodal_pixel_stats",
+    "llm_sample_stratified",
+    "llm_pack_sequences",
+    "llm_sketch_histogram_quantiles",
+    "llm_dedup_embedding_cells",
+    "llm_embedding_kmeans_step",
+    "llm_neardup_recall",
+    "llm_multimodal_image_dedup",
+    "llm_multimodal_image_neardup_pairs",
+    "llm_sample_domain_cap",
+    "llm_embedding_quantize_int8",
+    "f_zorder_layout_audit",
+    "dq_table_stats_profile",
+    "dq_sketch_join_cardinality",
+    "llm_quality_train_step",
+    "llm_quality_classifier",
+    "llm_sketch_kmv_distinct",
+    "dws_event_type_pagerank",
+    "llm_sketch_hll_distinct",
+    "llm_bm25_topk",
+    "llm_winnow_fingerprints",
+    "dq_distribution_drift_ks",
 ]
 
 

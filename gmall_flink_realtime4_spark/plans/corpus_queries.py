@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from .. import tables as T
 from ..operators.hashing import KMV_M, hexval_sql
-from ..operators.minhash import shingles
+from ..operators.minhash import shingle_sql, shingles
 from ..operators.stopwords import STOP_SQL
 from .catalog import query
 
@@ -267,14 +267,7 @@ DECON_MIN_SHARED = 5  # shared distinct 3-grams to flag contamination
 @query(
     "llm_decontaminate",
     oracle=f"""
-WITH toks AS (
-    SELECT doc_id, string_split(text, ' ') AS t FROM documents
-), idx AS (
-    SELECT doc_id, t, unnest(range(1, greatest(len(t) - 1, 1))) AS i FROM toks
-), sh AS (
-    SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-    FROM idx
-), ev AS (
+WITH {shingle_sql()}, ev AS (
     SELECT doc_id AS eval_id, shingle FROM sh
     WHERE doc_id % {DECON_EVAL_MOD} = 0
 ), tr AS (
@@ -343,14 +336,7 @@ WITH feat AS (
     SELECT fp, MIN(doc_id) AS keeper_doc_id FROM kept GROUP BY 1
 ), deduped AS (
     SELECT k.* FROM kept k JOIN keepers p ON k.doc_id = p.keeper_doc_id
-), toks AS (
-    SELECT doc_id, string_split(text, ' ') AS t FROM documents
-), idx AS (
-    SELECT doc_id, t, unnest(range(1, greatest(len(t) - 1, 1))) AS i FROM toks
-), sh AS (
-    SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-    FROM idx
-), contaminated AS (
+), {shingle_sql()}, contaminated AS (
     SELECT tr.doc_id
     FROM (SELECT doc_id, shingle FROM sh
           WHERE doc_id % {DECON_EVAL_MOD} <> 0) tr
@@ -435,7 +421,7 @@ def corpus_final_shingle_partials(d: DataFrame) -> DataFrame:
     training doc may share shingles with an eval doc from a different
     batch) and therefore computed only at finalize — the same membership
     discipline as lsh_curve_shingle_partials."""
-    return shingles(d)
+    return shingles(d).drop("n_sh")
 
 
 def corpus_final_finalize(kept: DataFrame, sh: DataFrame) -> DataFrame:

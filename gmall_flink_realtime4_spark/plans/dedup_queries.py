@@ -38,11 +38,10 @@ from ..operators.minhash import (
     MINHASH_B,
     MINHASH_K,
     MINHASH_R,
-    SHINGLE_SQL,
     minhash_candidates,
     minhash_verify,
+    shingle_sql,
     shingles,
-    shingles_sized,
 )
 from .catalog import query
 
@@ -79,16 +78,8 @@ def llm_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "llm_dedup_ngram_jaccard",
-    oracle="""
-WITH toks AS (
-    SELECT doc_id, string_split(text, ' ') AS t FROM documents
-), idx AS (
-    SELECT doc_id, t, unnest(range(1, greatest(len(t) - 1, 1))) AS i FROM toks
-), sh AS (
-    SELECT DISTINCT doc_id,
-           t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-    FROM idx
-), sizes AS (
+    oracle=f"""
+WITH {shingle_sql()}, sizes AS (
     SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1
 ), inter AS (
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter_ct
@@ -113,11 +104,11 @@ def llm_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate join; common-shingle skew is bounded by per-doc distinct.
 
     Round 9 plan: each posting row carries its doc's distinct-shingle count
-    (``shingles_sized`` — computed map-side in the projection that builds
-    the array), so the pair groupBy keys on (doc_a, doc_b, na, nb) and the
-    Jaccard denominator is in hand the moment inter_ct is — the old plan's
-    ``sizes`` groupBy plus TWO shuffle joins of the pair frame (the largest
-    intermediate) against it are gone. Both self-join sides are the same
+    (``shingles``' ``n_sh``, projected map-side before the explode), so the
+    pair groupBy keys on (doc_a, doc_b, na, nb) and the Jaccard denominator
+    is in hand the moment inter_ct is — the old plan's ``sizes`` groupBy
+    plus TWO shuffle joins of the pair frame (the largest intermediate)
+    against it are gone. Both self-join sides are the same
     shingle-partitioned exchange, so Catalyst's ReuseExchange materializes
     the posting list ONCE (plan-guarded: single documents scan + a
     ReusedExchange) — which also retires the old localCheckpoint (CLAUDE.md
@@ -134,9 +125,9 @@ def llm_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # skew-join splitting, and hot shingles are the real hazard at
     # scale (measured x30: 17.9 s with the pin vs ~11 s letting AQE
     # skew-split). ENSURE_REQUIREMENTS + AQE is the right trade at
-    # every scale once the derivation itself is cheap (shingles_sized
+    # every scale once the derivation itself is cheap (``shingles``
     # shape note).
-    sh = shingles_sized(d)
+    sh = shingles(d)
     # fact-fact self-join: pin shuffle_hash (the repo's r7 rule) — with a
     # real scan lineage Catalyst would BROADCAST the corpus-sized posting
     # list at small SF (the old checkpoint only hid the stats), which dies
@@ -181,7 +172,7 @@ def _minhash_oracle() -> str:
         for j in range(MINHASH_B)
     )
     return f"""
-WITH {SHINGLE_SQL},
+WITH {shingle_sql()},
 mh AS (
     SELECT doc_id,
            {mins}
@@ -742,14 +733,7 @@ CONTAIN_PM_MIN = 800  # containment >= 0.8 (per-mille, exact integer)
 @query(
     "llm_dedup_containment",
     oracle=f"""
-WITH toks AS (
-    SELECT doc_id, string_split(text, ' ') AS t FROM documents
-), idx AS (
-    SELECT doc_id, t, unnest(range(1, greatest(len(t) - 1, 1))) AS i FROM toks
-), sh AS (
-    SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-    FROM idx
-), sizes AS (
+WITH {shingle_sql()}, sizes AS (
     SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_sh FROM sh GROUP BY 1
 ), inter AS (
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -782,7 +766,7 @@ def llm_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     are integer per-mille, exact on both engines.
 
     Round 9 plan (the jaccard rewrite, same reasoning): every posting row
-    carries its doc's distinct-shingle count map-side (``shingles_sized``),
+    carries its doc's distinct-shingle count map-side (``shingles``),
     the pair groupBy keys on (doc_a, doc_b, n_sh_a, n_sh_b), and the old
     ``sizes`` groupBy + two shuffle joins of the pair frame against it are
     gone. The self-join's two sides share one shingle-partitioned exchange
@@ -793,7 +777,7 @@ def llm_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # no user repartition on the posting shuffle — it would disable AQE
     # skew-join splitting on hot shingles (see the jaccard twin's comment)
-    sh = shingles_sized(d)
+    sh = shingles(d)
     # fact-fact self-join: shuffle_hash pin, same reasoning as the jaccard
     # twin (Catalyst would broadcast the corpus-sized posting list at small
     # SF once the checkpoint no longer hides the scan stats).
@@ -840,15 +824,9 @@ WITH cand AS (
         SELECT doc_a AS doc_id FROM cand
         UNION ALL SELECT doc_b AS doc_id FROM cand
     )
-), toks AS (
-    SELECT d.doc_id, string_split(d.text, ' ') AS t
-    FROM documents d JOIN cd ON d.doc_id = cd.doc_id
-), idx AS (
-    SELECT doc_id, t, unnest(range(1, greatest(len(t) - 1, 1))) AS i FROM toks
-), sh AS (
-    SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-    FROM idx
-), sizes AS (
+), cdocs AS (
+    SELECT d.doc_id, d.text FROM documents d JOIN cd ON d.doc_id = cd.doc_id
+), {shingle_sql(src="cdocs")}, sizes AS (
     SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_sh FROM sh GROUP BY 1
 ), inter AS (
     SELECT c.doc_a, c.doc_b, CAST(COUNT(*) AS BIGINT) AS n_common
@@ -929,7 +907,7 @@ def containment_lsh(
         .distinct()
     )
     d = T.load(spark, sf_dir, "documents").join(F.broadcast(cd), "doc_id", "left_semi")
-    sh = shingles(d)
+    sh = shingles(d).drop("n_sh")
     # the shingle frame also fans out (sizes + both sides of the
     # intersection join); it is candidate-pruned — proportional to the
     # LSH candidate set, not the corpus — so materializing it caps the
@@ -1493,7 +1471,7 @@ def _lsh_curve_oracle() -> str:
         for j in range(b)
     )
     return f"""
-WITH {SHINGLE_SQL},
+WITH {shingle_sql()},
 mh AS (
     SELECT doc_id, {mins} FROM sh GROUP BY 1
 ), bands AS (
@@ -1587,7 +1565,7 @@ def llm_lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     cap exceeds the corpus, so the sample IS the corpus and the curve
     is exact."""
     d = T.load(spark, sf_dir, "documents")
-    sh = shingles(d).localCheckpoint()  # mh + truth (x2 sides) + sizes
+    sh = shingles(d).drop("n_sh").localCheckpoint()  # mh + truth x2 + sizes
     return _lsh_curve_from_shingles(sh)
 
 
@@ -1597,7 +1575,7 @@ def lsh_curve_shingle_partials(docs_batch: DataFrame) -> DataFrame:
     within-document, so partials are union-mergeable with no re-dedup —
     streaming state is the shingle fingerprint table (the
     incremental_minhash_pairs state shape), never document text."""
-    return shingles(docs_batch)
+    return shingles(docs_batch).drop("n_sh")
 
 
 def lsh_curve_finalize(parts: DataFrame) -> DataFrame:

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from .. import tables as T
 from ..operators.hashing import HEX, KMV_K, KMV_M, hexv, hexval_sql
+from ..operators.minhash import is_trigram, shingle_sql, trigram_array
 from ..tables import MONEY
 from .catalog import query
 
@@ -1568,8 +1569,8 @@ def hll_finalize(partials: DataFrame, exact: DataFrame) -> DataFrame:
 def _hll_oracle() -> str:
     est = hll_estimate_col().format(d="//")
     return f"""
-WITH {_SHINGLE_SQL_SRC}, h AS (
-    SELECT source AS grp, md5(shingle) AS hx FROM shs
+WITH {shingle_sql(key="source", distinct=False)}, h AS (
+    SELECT source AS grp, md5(shingle) AS hx FROM sh
 ), br AS (
     SELECT grp,
            {hexv("hx", 1, 2, "strpos")} % {HLL_M} AS bucket,
@@ -1591,7 +1592,7 @@ WITH {_SHINGLE_SQL_SRC}, h AS (
     SELECT grp, buckets_active, CAST({est} AS BIGINT) AS est
     FROM den
 ), exact AS (
-    SELECT source AS grp, COUNT(DISTINCT shingle) AS ex FROM shs GROUP BY 1
+    SELECT source AS grp, COUNT(DISTINCT shingle) AS ex FROM sh GROUP BY 1
 )
 SELECT e.grp AS source,
        CAST(x.ex AS BIGINT) AS exact_distinct,
@@ -1600,46 +1601,6 @@ SELECT e.grp AS source,
        e.buckets_active
 FROM est e JOIN exact x ON e.grp = x.grp
 """
-
-
-# the minhash family's shingle construction (SHINGLE_SQL) with the
-# source column carried through — HLL needs no per-doc DISTINCT (MAX
-# absorbs duplicates), so the sh CTE's dedup is skipped
-_SHINGLE_SQL_SRC = """toks AS (
-    SELECT source, string_split(text, ' ') AS t FROM documents
-), idx AS (
-    SELECT source, t, unnest(range(1, greatest(len(t) - 1, 1))) AS i
-    FROM toks
-), shs AS (
-    SELECT source, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-    FROM idx
-)"""
-
-
-def _source_shingles(d: DataFrame) -> DataFrame:
-    """(grp=source, key=shingle) rows — the `shingles` construction
-    (operators.minhash) minus the per-doc distinct, which HLL does not
-    need. Map-only: split -> transform -> explode, no join, no shuffle."""
-    toks = d.select("source", F.split("text", " ").alias("t"))
-    return (
-        toks.select(
-            F.col("source").alias("grp"),
-            F.explode(
-                F.transform(
-                    F.sequence(
-                        F.lit(0), F.greatest(F.size("t") - 3, F.lit(0))
-                    ),
-                    lambda i: F.concat_ws(
-                        " ",
-                        F.try_element_at(F.col("t"), i + 1),
-                        F.try_element_at(F.col("t"), i + 2),
-                        F.try_element_at(F.col("t"), i + 3),
-                    ),
-                )
-            ).alias("key"),
-        )
-        .filter(F.size(F.split("key", " ")) == 3)
-    )
 
 
 @query(
@@ -1664,17 +1625,21 @@ def llm_sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     group sits in HLL's estimating regime (the omitted linear-counting
     branch is never the operative path here)."""
     d = T.load(spark, sf_dir, "documents")
-    # two scans on purpose, NOT a checkpoint: the fan-out consumers each
-    # re-run the split+explode (cheap codegen) rather than materialize the
-    # exploded shingle-string frame, which is ~100x the source bytes — the
-    # opposite call from the codec/signature checkpoints, for the same
-    # reason (recompute cost vs materialized size)
-    partials = hll_register_partials(_source_shingles(d))
-    exact = (
-        _source_shingles(d)
-        .groupBy("grp")
-        .agg(F.countDistinct("key").alias("ex"))
-    )
+    # (source, shingle) occurrence rows: no per-doc distinct, MAX absorbs
+    # duplicates. Two scans on purpose, NOT a checkpoint: the fan-out
+    # consumers each re-run the split+explode (cheap codegen) rather than
+    # materialize the exploded shingle-string frame, which is ~100x the
+    # source bytes — the opposite call from the codec/signature
+    # checkpoints, for the same reason (recompute cost vs materialized size)
+    def keyed() -> DataFrame:
+        toks = d.select("source", F.split("text", " ").alias("t"))
+        return toks.select(
+            F.col("source").alias("grp"),
+            F.explode(trigram_array(F.col("t"))).alias("key"),
+        ).filter(is_trigram(F.col("key")))
+
+    partials = hll_register_partials(keyed())
+    exact = keyed().groupBy("grp").agg(F.countDistinct("key").alias("ex"))
     return hll_finalize(partials, exact)
 
 

@@ -35,6 +35,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from .. import tables as T
+from ..operators.minhash import is_trigram, shingle_sql, trigram_array
 from ..operators.stopwords import (
     LANG_STOPWORDS,
     STOP_SQL,
@@ -221,13 +222,7 @@ REP_FLAG_PM = 100  # flag docs with > 10% duplicate 3-grams
 @query(
     "llm_text_repetition",
     oracle=f"""
-WITH toks AS (
-    SELECT doc_id, string_split(text, ' ') AS t FROM documents
-), idx AS (
-    SELECT doc_id, t, unnest(range(1, greatest(len(t) - 1, 1))) AS i FROM toks
-), sh AS (
-    SELECT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle FROM idx
-), agg AS (
+WITH {shingle_sql(distinct=False)}, agg AS (
     SELECT doc_id,
            CAST(COUNT(*) AS BIGINT) AS total_ngrams,
            CAST(COUNT(DISTINCT shingle) AS BIGINT) AS distinct_ngrams
@@ -256,19 +251,7 @@ def llm_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     BY road; only the OUTPUT must match.)
     """
     d = T.load(spark, sf_dir, "documents")
-    t = F.split("text", " ")
-    sh_arr = F.filter(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(F.size(t) - 3, F.lit(0))),
-            lambda i: F.concat_ws(
-                " ",
-                F.try_element_at(t, i + 1),
-                F.try_element_at(t, i + 2),
-                F.try_element_at(t, i + 3),
-            ),
-        ),
-        lambda s: F.size(F.split(s, " ")) == 3,
-    )
+    sh_arr = F.filter(trigram_array(F.split("text", " ")), is_trigram)
     out = d.select(
         "doc_id",
         F.size(sh_arr).cast("bigint").alias("total_ngrams"),
@@ -288,38 +271,6 @@ def llm_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Shared 3-gram occurrence construction (NON-distinct, unlike the jaccard
-# shingle helper) — mirrors llm_dedup_ngram_jaccard's proven index/guard.
-# ---------------------------------------------------------------------------
-_TRIGRAM_CTE = """
-WITH toks AS (
-    SELECT doc_id, string_split(text, ' ') AS t FROM documents
-), idx AS (
-    SELECT doc_id, t, unnest(range(1, greatest(len(t) - 1, 1))) AS i FROM toks
-), g AS (
-    SELECT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS ngram FROM idx
-)"""
-
-
-def _trigram_occurrences(d: DataFrame) -> DataFrame:
-    """Every 3-gram occurrence per doc (with multiplicity)."""
-    return d.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.greatest(F.size(F.split("text", " ")) - 3, F.lit(0))),
-                lambda i: F.concat_ws(
-                    " ",
-                    F.try_element_at(F.split(F.col("text"), " "), i + 1),
-                    F.try_element_at(F.split(F.col("text"), " "), i + 2),
-                    F.try_element_at(F.split(F.col("text"), " "), i + 3),
-                ),
-            )
-        ).alias("ngram"),
-    ).filter(F.size(F.split("ngram", " ")) == 3)
-
-
-# ---------------------------------------------------------------------------
 # Corpus-wide n-gram heavy hitters — boilerplate detection (the "top
 # repeated 3-grams" report used to find headers/footers/templates).
 # ---------------------------------------------------------------------------
@@ -329,11 +280,12 @@ HH_TOP_K = 50
 
 @query(
     "llm_ngram_heavy_hitters",
-    oracle=f"""{_TRIGRAM_CTE}, a AS (
-    SELECT ngram,
+    oracle=f"""
+WITH {shingle_sql(distinct=False)}, a AS (
+    SELECT shingle AS ngram,
            CAST(COUNT(*) AS BIGINT)               AS n_occurrences,
            CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs
-    FROM g GROUP BY 1 HAVING COUNT(*) >= {HH_MIN_SUPPORT}
+    FROM sh GROUP BY 1 HAVING COUNT(*) >= {HH_MIN_SUPPORT}
 ), r AS (
     SELECT *, row_number() OVER (ORDER BY n_occurrences DESC, ngram) AS rnk
     FROM a
@@ -353,9 +305,12 @@ def llm_ngram_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ever sees the (tiny) surviving head — the pattern that keeps a global
     top-K safe when the distinct-n-gram space is billions at 100 TB.
     """
-    d = T.load(spark, sf_dir, "documents")
+    toks = T.load(spark, sf_dir, "documents").select(
+        "doc_id", F.split("text", " ").alias("t")
+    )
     a = (
-        _trigram_occurrences(d)
+        toks.select("doc_id", F.explode(trigram_array(F.col("t"))).alias("ngram"))
+        .filter(is_trigram(F.col("ngram")))
         .groupBy("ngram")
         .agg(
             F.count(F.lit(1)).alias("n_occurrences"),

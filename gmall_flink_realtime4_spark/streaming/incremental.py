@@ -40,7 +40,13 @@ from pyspark.errors import AnalysisException
 
 from ..operators.graph import connected_components
 from ..operators.minhash import minhash_bands, minhash_verify, shingles
-from ..operators.pq import argmin_codes, pq_fullint, pq_subint
+from ..operators.pq import (
+    argmin_codes,
+    pq_fullint,
+    pq_lloyd_centroids,
+    pq_lloyd_sums,
+    pq_subint,
+)
 from ..plans.dedup_queries import (
     DUP_CLUSTER_THRESHOLD_PM,
     WINNOW_MIN_SHARED,
@@ -369,10 +375,10 @@ def bm25_finalize(
 
 def pq_train_partials(emb_batch: DataFrame, codebook: DataFrame) -> DataFrame:
     """One micro-batch's PQ-training contribution: the (m, cid, pos, s, n)
-    sufficient statistics of a Lloyd step — component SUMS and member
-    COUNTS of the batch's vectors under their nearest-codeword assignment
-    against the GIVEN (broadcast) codebook. The streaming accumulate side
-    of `operators.pq.pq_trained_codebook_int`.
+    Lloyd sums (``operators.pq.pq_lloyd_sums``) of the batch's vectors
+    under their nearest-codeword assignment against the GIVEN (broadcast)
+    codebook. The streaming accumulate side of
+    `operators.pq.pq_trained_codebook_int`.
 
     The codebook is an INPUT, like bm25's query frame: a Lloyd step's
     assignment depends only on (vector, current codebook), so per-batch
@@ -381,39 +387,20 @@ def pq_train_partials(emb_batch: DataFrame, codebook: DataFrame) -> DataFrame:
     One streaming pass accumulates one step's statistics; the NEXT step
     re-broadcasts the finalized codebook (multi-step training is
     multi-pass, honestly — the batch query does the same, one
-    checkpointed broadcast per iteration). s as decimal(28,0): the same
-    overflow headroom as the batch trainer (~4e21 at 1e12 members)."""
-    assign = argmin_codes(pq_subint(pq_fullint(emb_batch)), codebook)
-    return (
-        assign.select(
-            "m", "cid", F.posexplode(F.col("xint")).alias("pos", "xi")
-        )
-        .groupBy("m", "cid", "pos")
-        .agg(
-            F.sum(F.col("xi").cast("decimal(28,0)")).alias("s"),
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-        )
-    )
+    checkpointed broadcast per iteration)."""
+    return pq_lloyd_sums(argmin_codes(pq_subint(pq_fullint(emb_batch)), codebook))
 
 
 def pq_train_finalize(parts: DataFrame) -> DataFrame:
     """Merge accumulated training partials into the trained codebook
-    (m, cid, qarr): fold s and n by SUM per (m, cid, pos) — exactly the
-    one map-combined hash agg the batch trainer runs — then the floored
-    integer mean and the position-sorted array assembly. Equal to
+    (m, cid, qarr): fold s and n by SUM per (m, cid, pos), then the same
+    centroid assembly the batch trainer runs
+    (``operators.pq.pq_lloyd_centroids``). Equal to
     `pq_trained_codebook_int` over the concatenated corpus
     (tests/test_round11_ext.py::test_incremental_pq_training_soak_restart).
     """
-    comp = parts.groupBy("m", "cid", "pos").agg(
-        F.sum("s").alias("s"), F.sum("n").alias("n")
-    )
-    return (
-        comp.select("m", "cid", "pos", F.expr("s div n").alias("q"))
-        .groupBy("m", "cid")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "q"))),
-                lambda sq: sq.q,
-            ).alias("qarr")
+    return pq_lloyd_centroids(
+        parts.groupBy("m", "cid", "pos").agg(
+            F.sum("s").alias("s"), F.sum("n").alias("n")
         )
     )

@@ -214,10 +214,17 @@ def test_streaming_incremental_heavy_hitter_counts(spark, tmp_path):
     distributive agg relies on at 100 TB."""
     import pyspark.sql.functions as FF
 
-    from gmall_flink_realtime4_spark.plans.text_queries import (
-        _trigram_occurrences,
+    from gmall_flink_realtime4_spark.operators.minhash import (
+        is_trigram,
+        trigram_array,
     )
     from gmall_flink_realtime4_spark.streaming.runner import stream_parquet_source
+
+    def trigram_occurrences(d):
+        toks = d.select("doc_id", FF.split("text", " ").alias("t"))
+        return toks.select(
+            FF.explode(trigram_array(FF.col("t"))).alias("ngram")
+        ).filter(is_trigram(FF.col("ngram")))
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     src = str(tmp_path / "src")
@@ -233,7 +240,7 @@ def test_streaming_incremental_heavy_hitter_counts(spark, tmp_path):
 
     def per_batch(batch_df, batch_id):
         (
-            _trigram_occurrences(batch_df)
+            trigram_occurrences(batch_df)
             .groupBy("ngram")
             .agg(FF.count(FF.lit(1)).alias("cnt"))
             .write.mode("append")
@@ -252,7 +259,7 @@ def test_streaming_incremental_heavy_hitter_counts(spark, tmp_path):
         .agg(FF.sum("cnt").alias("cnt"))
     )
     batch = (
-        _trigram_occurrences(docs)
+        trigram_occurrences(docs)
         .groupBy("ngram")
         .agg(FF.count(FF.lit(1)).alias("cnt"))
     )
@@ -524,15 +531,16 @@ def test_chunk_dedup_no_window_skew_hazard(spark):
 def test_gate_priority_names_all_resolve():
     """Every GATE_PRIORITY name must exist in the registry — _ordered_names
     silently drops unknown names, so a typo would silently rotate a query
-    out of the driver's 50-entry gated prefix."""
+    out of the driver's 50-entry gated prefix — and the list names exactly
+    50 distinct queries, so the prefix is the list."""
     from gmall_flink_realtime4_spark.plans import load_all
     from gmall_flink_realtime4_spark.plans.catalog import GATE_PRIORITY, REGISTRY
 
     load_all()
     missing = [n for n in GATE_PRIORITY if n not in REGISTRY]
     assert not missing, missing
-    # and the prefix actually fits the driver's 50-query gate
-    assert len(GATE_PRIORITY) <= 50
+    # and the prefix fills the driver's 50-query gate exactly, no repeats
+    assert len(GATE_PRIORITY) == len(set(GATE_PRIORITY)) == 50
 
 
 def test_every_registered_query_has_oracle():

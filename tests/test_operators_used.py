@@ -18,12 +18,15 @@ never count:
 - ``operators/`` and ``functions/`` import nothing from ``plans/``;
 - every public package function (registered queries aside) is referenced
   somewhere in the package, ``tests/``, ``tools/``, ``perfbench/`` or
-  ``bench.py``.
+  ``bench.py``;
+- the word-3-gram construction is written once per engine, in
+  ``operators/minhash.py``.
 """
 
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -173,3 +176,92 @@ def test_every_public_function_is_referenced():
             ):
                 unreferenced.append(f"{path.relative_to(PKG)}::{fn.name}")
     assert not unreferenced, f"public functions nothing references: {unreferenced}"
+
+
+# The SQL shingle join of three 1-based tokens (DuckDB list indexing).
+_SQL_TRIGRAM = re.compile(
+    r"t\[i\]\s*\|\|\s*' '\s*\|\|\s*t\[i\s*\+\s*1\]"
+    r"\s*\|\|\s*' '\s*\|\|\s*t\[i\s*\+\s*2\]"
+)
+# Functions whose SQL joins three tokens for another primitive. The
+# winnowing oracle hashes the ORDERED k-gram sequence inside a list lambda
+# (positions and repeats kept, then a sliding-window min): a positional
+# hash list, not a shingle row set, so the CTE builder cannot express it.
+_SQL_TRIGRAM_EXEMPT = {("plans/dedup_queries.py", "_winnow_oracle")}
+
+
+def _call_name(node: ast.AST) -> str | None:
+    if not isinstance(node, ast.Call):
+        return None
+    f = node.func
+    return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+
+
+def _is_spark_trigram(node: ast.AST) -> bool:
+    """``transform(sequence(...), lambda i: ... try_element_at(_, i + 3))``."""
+    if _call_name(node) != "transform" or len(node.args) < 2:
+        return False
+    if _call_name(node.args[0]) != "sequence":
+        return False
+    return any(
+        _call_name(n) == "try_element_at"
+        and len(n.args) == 2
+        and isinstance(n.args[1], ast.BinOp)
+        and isinstance(n.args[1].op, ast.Add)
+        and getattr(n.args[1].right, "value", None) == 3
+        for n in ast.walk(node.args[1])
+    )
+
+
+def _docstring_ids(tree: ast.Module) -> set[int]:
+    ids = set()
+    for node in ast.walk(tree):
+        body = getattr(node, "body", None)
+        if (
+            isinstance(body, list)
+            and body
+            and isinstance(body[0], ast.Expr)
+            and isinstance(body[0].value, ast.Constant)
+        ):
+            ids.add(id(body[0].value))
+    return ids
+
+
+def test_word_trigram_construction_exists_once_per_engine():
+    """Tokenization and the n<3 guard change in one place per engine."""
+    home = "operators/minhash.py"
+    spark, sql = [], []
+    for path, tree in sorted(_package_modules().items()):
+        rel = path.relative_to(PKG).as_posix()
+        exempt = {
+            id(n)
+            for fn in ast.walk(tree)
+            if isinstance(fn, ast.FunctionDef)
+            and (rel, fn.name) in _SQL_TRIGRAM_EXEMPT
+            for n in ast.walk(fn)
+        }
+        docs = _docstring_ids(tree)
+        for node in ast.walk(tree):
+            if _is_spark_trigram(node):
+                spark.append(f"{rel}:{node.lineno}")
+            elif (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and id(node) not in docs | exempt
+            ):
+                sql += [f"{rel}:{node.lineno}"] * len(
+                    _SQL_TRIGRAM.findall(node.value)
+                )
+    problems = []
+    for engine, sites in (("Spark", spark), ("SQL", sql)):
+        at_home = [s for s in sites if s.startswith(f"{home}:")]
+        surplus = at_home[1:] + [s for s in sites if s not in at_home]
+        if not at_home or surplus:
+            problems.append(
+                f"{engine}: {len(at_home)} in {home},"
+                f" {len(surplus)} surplus copies {surplus}"
+            )
+    assert not problems, (
+        "the word-3-gram construction must exist once per engine, in"
+        f" {home}: " + "; ".join(problems)
+    )

@@ -757,20 +757,31 @@ def test_incremental_hll_register_partials_merge(spark):
     lossless with no distinct pass (the streaming accumulate-then-finalize
     twin)."""
     from gmall_flink_realtime4_spark import tables as T
+    from gmall_flink_realtime4_spark.operators.minhash import (
+        is_trigram,
+        trigram_array,
+    )
     from gmall_flink_realtime4_spark.plans.olap_queries import (
-        _source_shingles,
         hll_finalize,
         hll_register_partials,
     )
+
+    def source_shingles(docs):
+        toks = docs.select(
+            F.col("source").alias("grp"), F.split("text", " ").alias("t")
+        )
+        return toks.select(
+            "grp", F.explode(trigram_array(F.col("t"))).alias("key")
+        ).filter(is_trigram(F.col("key")))
 
     d = T.load(spark, SF, "documents")
     parts = None
     for bid in range(3):
         b = hll_register_partials(
-            _source_shingles(d.filter(F.col("doc_id") % 3 == bid))
+            source_shingles(d.filter(F.col("doc_id") % 3 == bid))
         )
         parts = b if parts is None else parts.unionByName(b)
-    sh = _source_shingles(d)
+    sh = source_shingles(d)
     exact = sh.groupBy("grp").agg(F.countDistinct("key").alias("ex"))
     cols = [
         "exact_distinct", "hll_estimate", "err_permille", "buckets_active"

@@ -48,6 +48,7 @@ import pyspark.sql.functions as F  # noqa: E402
 
 from gmall_flink_realtime4_spark.plans.catalog import queries  # noqa: E402
 from gmall_flink_realtime4_spark.session import get_spark  # noqa: E402
+from tools.isopair import warm_up  # noqa: E402
 
 SRC = "/root/testdata/sf0.1"
 QUERIES = [
@@ -453,17 +454,7 @@ def main() -> None:
     # shuffle hash-agg, broadcast join, codegen, Arrow workers) without
     # favoring any registered query; run_list[0] absorbs whatever residual
     # session warm-up remains (noted in SCALE.md).
-    li = spark.read.parquet(f"{scaled}/lineitem.parquet")
-    nat = spark.read.parquet(f"{scaled}/nation.parquet")
-    (
-        li.groupBy("l_suppkey")
-        .agg(F.sum("l_quantity").alias("q"))
-        .join(F.broadcast(nat), F.col("l_suppkey") % 25 == F.col("n_nationkey"))
-        .count()
-    )
-    spark.range(spark.sparkContext.defaultParallelism * 4).repartition(
-        spark.sparkContext.defaultParallelism
-    ).mapInPandas(lambda it: it, "id long").count()
+    warm_up(spark, scaled)
     results = {}
     for name in run_list:
         t0 = time.perf_counter()

@@ -50,24 +50,13 @@ def main() -> None:
     builder = builder.config("spark.eventLog.rolling.enabled", "false")
     spark = apply_runtime_confs(builder.getOrCreate())
 
-    import pyspark.sql.functions as F
-
     from gmall_flink_realtime4_spark.plans.catalog import queries
+    from tools.isopair import warm_up
 
     qs = queries()
-    # the bench/isopair query-neutral warm-up, then ONE untimed rep so
-    # the censused run measures steady-state tasks, not JIT/codegen
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    nat = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    (
-        li.groupBy("l_suppkey")
-        .agg(F.sum("l_quantity").alias("q"))
-        .join(F.broadcast(nat), F.col("l_suppkey") % 25 == F.col("n_nationkey"))
-        .count()
-    )
-    spark.range(spark.sparkContext.defaultParallelism * 4).repartition(
-        spark.sparkContext.defaultParallelism
-    ).mapInPandas(lambda it: it, "id long").count()
+    # the query-neutral warm-up, then ONE untimed rep so the censused run
+    # measures steady-state tasks, not JIT/codegen
+    warm_up(spark, sf_dir)
     qs[name](spark, sf_dir).count()
     # job-group the censused rep so warm-up stages can be excluded
     spark.sparkContext.setJobGroup("census", name)
