@@ -5,6 +5,11 @@ sync-cache, Redis+async — DwsTradeSkuOrderWindow* variants, J5/J6) collapse
 into ONE Spark mapping: a chain of broadcast hash joins. Caching, async I/O
 and timeouts vanish — the dim snapshot ships to every executor once per
 batch.
+
+``candidate_pairs`` is the candidate step of every near-dup family: the
+document pairs that share a key (a MinHash band bucket, an aHash band
+value, a winnowing fingerprint), for a batch query and its
+streaming-incremental twin alike.
 """
 
 from __future__ import annotations
@@ -122,3 +127,53 @@ def dim_enrich(
             F.broadcast(dim_df), out[fact_key] == dim_df[dim_key], how
         ).drop(dim_df[dim_key])
     return out
+
+
+def candidate_pairs(
+    new: DataFrame,
+    keys: Sequence[str],
+    old: DataFrame | None = None,
+    carry: Sequence[str] = (),
+) -> DataFrame:
+    """Document pairs sharing a key value: one row per (pair, shared key
+    value) with ``doc_a < doc_b``, the ``keys`` columns, then ``<c>_a`` and
+    ``<c>_b`` for each carried column ``c``, each following its document.
+
+    ``new`` and ``old`` are ``(doc_id, *keys, *carry)`` frames with one
+    row per (doc_id, key value). Every output row has a side in ``new``:
+
+    - ``new`` joined with itself on the keys and ``doc_id <`` — with
+      ``old=None`` this is the whole batch self-join;
+    - ``new`` joined with ``old`` on the keys, oriented by doc id.
+
+    Contract: no doc id is in both ``new`` and ``old`` (a streaming twin's
+    doc ids are unique across micro-batches). Then the first join emits a
+    pair once per shared key and the second cannot emit it again, so no
+    ``distinct`` is needed. A doc id sent again in a later batch would
+    pair with itself here.
+    """
+    a = new.alias("a")
+    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    lo = F.col("a.doc_id") < F.col("b.doc_id")
+    pairs = a.join(new.alias("b"), [*on, lo]).select(
+        F.col("a.doc_id").alias("doc_a"),
+        F.col("b.doc_id").alias("doc_b"),
+        *[F.col(f"a.{k}").alias(k) for k in keys],
+        *[F.col(f"{s}.{c}").alias(f"{c}_{s}") for c in carry for s in "ab"],
+    )
+    if old is None:
+        return pairs
+
+    def follow(c: str, side: str) -> Column:
+        # doc_a is new's doc (alias a) exactly when lo holds
+        other = "b" if side == "a" else "a"
+        return F.when(lo, F.col(f"{side}.{c}")).otherwise(F.col(f"{other}.{c}"))
+
+    return pairs.unionByName(
+        a.join(old.alias("b"), on).select(
+            F.least("a.doc_id", "b.doc_id").alias("doc_a"),
+            F.greatest("a.doc_id", "b.doc_id").alias("doc_b"),
+            *[F.col(f"a.{k}").alias(k) for k in keys],
+            *[follow(c, s).alias(f"{c}_{s}") for c in carry for s in "ab"],
+        )
+    )

@@ -15,16 +15,21 @@ three tokens, drop short shingles) exists once per engine, here:
 - ``shingle_sql`` — the DuckDB CTE builder every oracle splices in.
 
 Then the K = B x R MinHash pipeline: ``minhash_bands`` (signatures ->
-band keys), ``minhash_candidates`` (bucket-colliding pairs) and
-``minhash_verify`` (exact Jaccard). A fix to tokenization or the n<3
-guard lands here once; the streaming-incremental twin runs the same
-builder and steps as the batch query.
+band keys), ``minhash_candidates`` (bucket-colliding pairs, through the
+shared ``joins.candidate_pairs``) and ``minhash_verify`` (exact Jaccard).
+Each step takes the batch frame and, for the streaming-incremental twin
+(`streaming.incremental.incremental_minhash_pairs`), its state: the
+twin passes its batch bands and band state to ``minhash_candidates``
+and its doc state plus batch to ``minhash_verify``, so a fix to
+tokenization, banding, pair orientation or the score lands here once.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
+
+from .joins import candidate_pairs
 
 
 # MinHash parameters: K hash functions in B bands of R rows (K = B*R).
@@ -112,37 +117,6 @@ def shingle_sql(
 )"""
 
 
-def minhash_candidates(sh: DataFrame) -> DataFrame:
-    """Checkpointed LSH band-collision candidate pairs
-    (doc_a, doc_b, shared_bands) from a shingle frame.
-
-    Factored out of ``llm_dedup_minhash_lsh`` (r12 optimization) so
-    downstream scorers that only need the CANDIDATE PAIR SET —
-    ``llm_dedup_containment_lsh`` scores containment over exactly these
-    pairs — can stop at the band self-join instead of paying the full
-    minhash query's exact-Jaccard verify (intersection join + two size
-    joins + a second shingle derivation) just to throw the scores away.
-    The verify never filters a pair (its inter join is LEFT and the size
-    joins hit every candidate doc, which by construction has shingles),
-    so the pair set out of the full query is bit-identical to this one.
-    """
-    bands = minhash_bands(sh)
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("shared_bands"))
-        # LSH-recall-sized (tiny vs corpus); feeds the verify join AND the
-        # final score join — materialize so the band self-join runs once.
-        .localCheckpoint()
-    )
-
-
 def minhash_bands(sh: DataFrame) -> DataFrame:
     """(doc_id, band, bucket) LSH band keys from a shingle frame — the
     shared construction for the batch query and the streaming-incremental
@@ -179,53 +153,69 @@ def minhash_bands(sh: DataFrame) -> DataFrame:
     ).select("doc_id", "bb.band", "bb.bucket")
 
 
-def minhash_verify(cand: DataFrame, sh: DataFrame) -> DataFrame:
-    """Exact-Jaccard verification of LSH candidate pairs against a
-    shingle frame; returns the final (doc_a, doc_b, shared_bands,
-    inter_ct, jaccard_permille) columns. Shared by the batch query and
-    the streaming-incremental twin.
+def minhash_candidates(
+    bands: DataFrame, old: DataFrame | None = None
+) -> DataFrame:
+    """Checkpointed LSH band-collision candidate pairs (doc_a, doc_b,
+    shared_bands) from ``minhash_bands`` frames: pairs within ``bands``,
+    plus, when the streaming twin passes its band state as ``old``, the
+    pairs between ``bands`` and ``old`` (``joins.candidate_pairs``).
 
-    The verify touches only candidate docs: semi-join prune the shingle
-    frame BEFORE the intersection join (same pattern as containment-LSH),
-    then materialize the pruned shingles — sizes and both intersection
-    sides read the pruned frame, so the corpus is never re-scanned."""
+    Scorers that only need the CANDIDATE PAIR SET (containment-LSH, the
+    edit-distance verify) stop here instead of paying for the exact
+    Jaccard verify, which never drops a pair (see ``minhash_verify``).
+    A doc has one bucket per band, so each shared band is one join row
+    and the count needs no ``distinct``.
+    """
+    return (
+        candidate_pairs(bands, ["band", "bucket"], old)
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).alias("shared_bands"))
+        # LSH-recall-sized (tiny vs corpus); feeds the candidate-doc prune
+        # AND the pair join of its scorer — materialize so the band
+        # self-join runs once.
+        .localCheckpoint()
+    )
+
+
+def minhash_verify(cand: DataFrame, docs: DataFrame) -> DataFrame:
+    """Exact-Jaccard verification of LSH candidate pairs; returns the
+    final (doc_a, doc_b, shared_bands, inter_ct, jaccard_permille)
+    columns. ``docs`` is a (doc_id, text) frame holding every candidate
+    doc (the corpus, or the twin's doc state plus its batch).
+
+    The verify touches only candidate docs: ``docs`` is semi-join pruned
+    to them BEFORE shingling (a semi-join above the shingle Generate would
+    not push down through it), and the pruned shingles are materialized
+    for the two sides of the intersection join. The doc sizes ride along
+    as ``shingles``' ``n_sh``, so there is no per-doc recount and no size
+    join. The intersection join is inner: a band collision means equal
+    band minhashes, so the shingle that attains them is in both docs (md5
+    collisions aside) and every candidate keeps ``inter_ct >= 1``."""
     cand_ids = (
         cand.select(F.col("doc_a").alias("doc_id"))
         .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
-    sh_cand = (
-        sh.select("doc_id", "shingle")
-        .join(cand_ids, "doc_id", "left_semi")
-        .localCheckpoint()
+    sh = shingles(docs.join(cand_ids, "doc_id", "left_semi")).localCheckpoint()
+    sa = sh.select(
+        F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"), "shingle"
     )
-    sizes = sh_cand.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    sa, sb2 = sh_cand.alias("sa"), sh_cand.alias("sb")
-    inter = (
-        cand.select("doc_a", "doc_b")
-        .join(sa, F.col("sa.doc_id") == F.col("doc_a"))
-        .join(
-            sb2,
-            (F.col("sb.doc_id") == F.col("doc_b"))
-            & (F.col("sb.shingle") == F.col("sa.shingle")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("inter_ct"))
+    sb = sh.select(
+        F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"), "shingle"
     )
-    na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"))
-    nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"))
     return (
-        cand.join(inter, ["doc_a", "doc_b"], "left")
-        .join(na, "doc_a")
-        .join(nb, "doc_b")
+        cand.join(sa, "doc_a")
+        .join(sb, ["doc_b", "shingle"])
+        .groupBy("doc_a", "doc_b", "shared_bands", "na", "nb")
+        .agg(F.count(F.lit(1)).alias("inter_ct"))
         .select(
             "doc_a",
             "doc_b",
             "shared_bands",
-            F.coalesce("inter_ct", F.lit(0)).alias("inter_ct"),
-            F.expr(
-                "(1000 * coalesce(inter_ct, 0))"
-                " div (na + nb - coalesce(inter_ct, 0))"
-            ).alias("jaccard_permille"),
+            "inter_ct",
+            F.expr("(1000 * inter_ct) div (na + nb - inter_ct)").alias(
+                "jaccard_permille"
+            ),
         )
     )

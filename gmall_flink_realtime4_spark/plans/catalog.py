@@ -49,19 +49,24 @@ GATE_PRIORITY: list[str] = [
     # Rotation after the r13 prefix (CORRECTNESS_r13) froze.
     #
     # CHANGED-PLAN head: every query whose plan changed since then. The
-    # one word-3-gram builder per engine (operators/minhash.py) changed
-    # the masked plans of the first seven and the checkpointed
-    # (build-phase) shingle plans of the next three; the broadcast hints
-    # of dq_referential_integrity narrowed to the dimension parents.
+    # one pair path per near-dup family (operators/joins.py::
+    # candidate_pairs) changed the masked plans of the first four and the
+    # checkpointed (build-phase) candidate/verify plans of the next two.
     "llm_dedup_minhash_lsh",
+    "llm_dedup_containment_lsh",
+    "llm_winnow_fingerprints",
+    "llm_text_repetition",
+    "llm_dedup_clusters",
+    "llm_dedup_edit_distance_verify",
+    # The one word-3-gram builder per engine (operators/minhash.py)
+    # changed the masked plans of the next five and the build-phase
+    # shingle plan of llm_lsh_tuning_curve; the broadcast hints of
+    # dq_referential_integrity narrowed to the dimension parents.
     "llm_dedup_ngram_jaccard",
     "llm_dedup_containment",
-    "llm_dedup_containment_lsh",
     "llm_decontaminate",
     "llm_corpus_final",
     "llm_ngram_heavy_hitters",
-    "llm_dedup_clusters",
-    "llm_dedup_edit_distance_verify",
     "llm_lsh_tuning_curve",
     "dq_referential_integrity",
     # Fill: the queries whose freshest CORRECTNESS row is oldest — the
@@ -103,8 +108,6 @@ GATE_PRIORITY: list[str] = [
     "dws_event_type_pagerank",
     "llm_sketch_hll_distinct",
     "llm_bm25_topk",
-    "llm_winnow_fingerprints",
-    "dq_distribution_drift_ks",
 ]
 
 

@@ -34,14 +34,17 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from .. import tables as T
 from ..operators.hashing import HEX, hexv, hexval_sql
+from ..operators.joins import candidate_pairs
 from ..operators.minhash import (
     MINHASH_B,
     MINHASH_K,
     MINHASH_R,
+    minhash_bands,
     minhash_candidates,
     minhash_verify,
     shingle_sql,
     shingles,
+    trigram_array,
 )
 from .catalog import query
 
@@ -218,9 +221,8 @@ def llm_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-width md5 hex == numeric min, identical in Spark and DuckDB.
     """
     d = T.load(spark, sf_dir, "documents")
-    sh = shingles(d)
-    cand = minhash_candidates(sh)
-    return minhash_verify(cand, sh)
+    cand = minhash_candidates(minhash_bands(shingles(d)))
+    return minhash_verify(cand, d)
 
 
 # ---------------------------------------------------------------------------
@@ -589,7 +591,7 @@ def llm_dedup_edit_distance_verify(spark: SparkSession, sf_dir: str) -> DataFram
     # band self-join (see minhash_candidates) instead of computing exact
     # Jaccard scores that are immediately dropped.
     cand = minhash_candidates(
-        shingles(T.load(spark, sf_dir, "documents"))
+        minhash_bands(shingles(T.load(spark, sf_dir, "documents")))
     ).select("doc_a", "doc_b")
     d = T.load(spark, sf_dir, "documents").select(
         "doc_id",
@@ -885,21 +887,21 @@ def containment_lsh(
     def _persist(df: DataFrame) -> DataFrame:
         return df.localCheckpoint(eager=True) if persist else df
 
-    # The candidate frame fans out to THREE consumers (semi-join prune,
-    # intersection join, final score join). Without persistence each
+    # The candidate frame fans out to two consumers (the semi-join prune
+    # and the intersection join). Without persistence each
     # consumer re-derives the whole 16-Exchange minhash pipeline — at
     # 100 TB that is several full corpus re-scans (r03 plan census showed
     # 92 Exchanges / 44 scans for this one query). The frame is tiny
     # (candidate pairs only) and ``minhash_candidates`` already
     # checkpoints it: lineage is cut, every consumer reads the
     # materialized blocks. r12 optimization: stop at the BAND SELF-JOIN —
-    # the full minhash query's exact-Jaccard verify (intersection join,
-    # two size joins, a second shingle derivation) never filters a pair,
+    # the full minhash query's exact-Jaccard verify (intersection join and
+    # a second shingle derivation) never filters a pair,
     # so its doc_a/doc_b set is bit-identical to the candidate set and
     # computing the scores only to drop them here was pure waste
     # (measured sf0.1: the verify phase was ~40% of this query's wall).
     cand = minhash_candidates(
-        shingles(T.load(spark, sf_dir, "documents"))
+        minhash_bands(shingles(T.load(spark, sf_dir, "documents")))
     ).select("doc_a", "doc_b")
     cd = (
         cand.select(F.col("doc_a").alias("doc_id"))
@@ -907,39 +909,26 @@ def containment_lsh(
         .distinct()
     )
     d = T.load(spark, sf_dir, "documents").join(F.broadcast(cd), "doc_id", "left_semi")
-    sh = shingles(d).drop("n_sh")
-    # the shingle frame also fans out (sizes + both sides of the
-    # intersection join); it is candidate-pruned — proportional to the
-    # LSH candidate set, not the corpus — so materializing it caps the
-    # query at ONE documents scan instead of one per consumer
-    sh = _persist(sh)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    inter = (
-        F.broadcast(cand)
-        .join(sh.select(F.col("doc_id").alias("doc_a"), "shingle"), "doc_a")
-        .alias("l")
-        .join(
-            sh.select(F.col("doc_id").alias("doc_b"), F.col("shingle").alias("shb")).alias("r"),
-            (F.col("l.doc_b") == F.col("r.doc_b")) & (F.col("l.shingle") == F.col("r.shb")),
-        )
-        .groupBy(F.col("l.doc_a").alias("doc_a"), F.col("l.doc_b").alias("doc_b"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_common"))
-    )
+    # the shingle frame fans out to both sides of the intersection join;
+    # it is candidate-pruned — proportional to the LSH candidate set, not
+    # the corpus — so materializing it caps the query at ONE documents
+    # scan instead of one per side. The doc sizes ride along as n_sh, and
+    # the join is inner: every LSH candidate shares the shingle attaining
+    # its colliding band's minhashes (see minhash_verify), so no pair has
+    # n_common = 0 and none is dropped.
+    sh = _persist(shingles(d))
     scored = (
-        cand.join(inter, ["doc_a", "doc_b"], "left")
-        .withColumn("n_common", F.coalesce("n_common", F.lit(0)).cast("bigint"))
+        F.broadcast(cand)
         .join(
-            F.broadcast(
-                sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_sh_a"))
-            ),
+            sh.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_sh_a"), "shingle"),
             "doc_a",
         )
         .join(
-            F.broadcast(
-                sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_sh_b"))
-            ),
-            "doc_b",
+            sh.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_sh_b"), "shingle"),
+            ["doc_b", "shingle"],
         )
+        .groupBy("doc_a", "doc_b", "n_sh_a", "n_sh_b")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_common"))
         .withColumn("contain_a_pm", F.expr("(1000 * n_common) div n_sh_a"))
         .withColumn("contain_b_pm", F.expr("(1000 * n_common) div n_sh_b"))
     )
@@ -1336,23 +1325,20 @@ JOIN sizes sb ON sb.doc_id = p.doc_b
 
 def winnow_fingerprint_rows(d: DataFrame) -> DataFrame:
     """(doc_id, f) winnowing fingerprints — one codegen'd projection from
-    text to the selected hash set (k-gram md5 -> 44-bit int -> sliding
-    window-of-{WINNOW_W} minima -> distinct), then explode. Map-only."""
+    text to the selected hash set (word 3-grams via ``trigram_array`` ->
+    md5 -> 44-bit int -> sliding window-of-{WINNOW_W} minima -> distinct),
+    then explode. Map-only. The text is split once, into the named column
+    ``t``; docs of >= 6 tokens give ``trigram_array`` only real 3-grams."""
     hexpoly = hexv("x", 1, 11, "instr")
+    toks = d.filter(F.size(F.split("text", " ")) >= 6).select(
+        "doc_id", F.split("text", " ").alias("t")
+    )
     return (
-        d.filter(F.size(F.split("text", " ")) >= 6)
-        .select(
+        toks.select(
             "doc_id",
-            F.expr(
-                "transform("
-                " transform(sequence(1, size(split(text, ' ')) - 2),"
-                "   i -> md5(concat_ws(' ',"
-                "        element_at(split(text, ' '), i),"
-                "        element_at(split(text, ' '), i + 1),"
-                "        element_at(split(text, ' '), i + 2)))),"
-                f" x -> {hexpoly})"
-            ).alias("h"),
+            F.transform(trigram_array(F.col("t")), F.md5).alias("hm"),
         )
+        .select("doc_id", F.expr(f"transform(hm, x -> {hexpoly})").alias("h"))
         .select(
             "doc_id",
             F.explode(
@@ -1378,38 +1364,43 @@ def llm_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: fingerprint selection never shuffles (array math in one
     projection, ~2/(w+1) the density of full shingling); the fingerprint
-    frame is localCheckpoint'ed because FOUR consumers read it (df cap,
-    both pair-join sides, sizes) and it is ~100x SMALLER than the text it
-    came from — the opposite call from the HLL shingle frame, same
-    recompute-vs-bytes rule. The df cap (MOSS's over-common cut) bounds
-    every join bucket to {WINNOW_MAX_DF} docs, so the pair join is
-    AQE-splittable with no quadratic hot key."""
+    frame is localCheckpoint'ed because it feeds the df cap, both pair-join
+    sides and the sizes, and it is ~100x SMALLER than the text it came
+    from — the opposite call from the HLL shingle frame, same
+    recompute-vs-bytes rule. The df cap (MOSS's over-common cut) drops a
+    fingerprint in more than {WINNOW_MAX_DF} docs before the pair join, so
+    every join bucket is bounded and the join is AQE-splittable with no
+    quadratic hot key. The cap is retroactive (a fingerprint crossing it
+    as the corpus grows would retract pairs it once supported), so only
+    this batch query applies it; the sizes count every fingerprint."""
     d = T.load(spark, sf_dir, "documents")
     fp = winnow_fingerprint_rows(d).localCheckpoint()
-    return winnow_pairs(fp, max_df=WINNOW_MAX_DF)
-
-
-def winnow_pairs(fp: DataFrame, max_df: int | None) -> DataFrame:
-    """Candidate pairs from a (doc_id, f) fingerprint frame — shared by
-    the batch query (``max_df=WINNOW_MAX_DF``, the MOSS over-common cut)
-    and the streaming twin (``max_df=None``: the cap is RETROACTIVE — a
-    fingerprint crossing it would retract already-emitted pairs — so the
-    incremental form runs capless; see streaming/incremental.py)."""
-    cond = F.col("nd") >= WINNOW_MIN_SHARED
-    if max_df is not None:
-        cond = cond & (F.col("nd") <= max_df)
-    keep = fp.groupBy("f").agg(F.count(F.lit(1)).alias("nd")).filter(
-        cond
-    ).select("f")
-    sizes = fp.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_fp")
+    keep = (
+        fp.groupBy("f")
+        .agg(F.count(F.lit(1)).alias("nd"))
+        .filter(F.col("nd").between(WINNOW_MIN_SHARED, WINNOW_MAX_DF))
+        .select("f")
     )
-    a = fp.join(keep, "f")
-    b = fp.withColumnRenamed("doc_id", "doc_b")
+    return winnow_pairs(fp.join(keep, "f"), winnow_sizes(fp))
+
+
+def winnow_sizes(fp: DataFrame) -> DataFrame:
+    """(doc_id, n_fp): each doc's fingerprint count, before any df cap."""
+    return fp.groupBy("doc_id").agg(F.count(F.lit(1)).cast("bigint").alias("n_fp"))
+
+
+def winnow_pairs(
+    new: DataFrame, sizes: DataFrame, old: DataFrame | None = None
+) -> DataFrame:
+    """Candidate pairs from (doc_id, f) fingerprint frames: pairs within
+    ``new`` plus, for the streaming twin, pairs between ``new`` and its
+    fingerprint state ``old`` (``joins.candidate_pairs``), kept when they
+    share >= {WINNOW_MIN_SHARED} prints, scored against ``sizes``
+    (``winnow_sizes`` of every fingerprint the pairs can reach). Shared by
+    the batch query (df-capped ``new``) and the capless streaming twin."""
     pairs = (
-        a.join(b, "f")
-        .filter(F.col("doc_id") < F.col("doc_b"))
-        .groupBy(F.col("doc_id").alias("doc_a"), "doc_b")
+        candidate_pairs(new, ["f"], old)
+        .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).cast("bigint").alias("shared_fp"))
         .filter(F.col("shared_fp") >= WINNOW_MIN_SHARED)
     )

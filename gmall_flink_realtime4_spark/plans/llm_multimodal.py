@@ -46,6 +46,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import tables as T
+from ..operators.joins import candidate_pairs
 from .catalog import query
 
 _HEX = "0123456789abcdef"
@@ -924,6 +925,67 @@ def ahash_image(media: DataFrame) -> DataFrame:
     return media.mapInPandas(fn, schema=AHASH_SCHEMA)
 
 
+# Near-dup banding of the 48-bit fingerprint: 4 bands of 12 bits; pairs
+# within hamming radius AHASH_HAM_MAX always share a band (pigeonhole).
+AHASH_BANDS = 4
+AHASH_BAND_BITS = 12
+AHASH_HAM_MAX = 3
+
+
+def ahash_bands(fp: DataFrame) -> DataFrame:
+    """(doc_id, ahash, k, bv): the band values ``bv`` (band ``k``) of every
+    (doc_id, ahash) fingerprint."""
+    return fp.select(
+        "doc_id",
+        "ahash",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(k).alias("k"),
+                        F.expr(
+                            f"(ahash div {1 << (AHASH_BAND_BITS * k)})"
+                            f" % {1 << AHASH_BAND_BITS}"
+                        ).alias("bv"),
+                    )
+                    for k in range(AHASH_BANDS)
+                ]
+            )
+        ).alias("b"),
+    ).select("doc_id", "ahash", "b.k", "b.bv")
+
+
+def ahash_pairs(new: DataFrame, old: DataFrame | None = None) -> DataFrame:
+    """Image near-dup pairs (doc_a, doc_b, hamming, is_exact) from
+    (doc_id, ahash) fingerprint frames: band candidates within ``new``
+    plus, for the streaming twin, between ``new`` and its fingerprint
+    state ``old`` (``joins.candidate_pairs``), then the Hamming verify.
+    A pair sharing several bands is one candidate after the distinct."""
+    cand = (
+        candidate_pairs(
+            ahash_bands(new),
+            ["k", "bv"],
+            None if old is None else ahash_bands(old),
+            carry=["ahash"],
+        )
+        .select(
+            "doc_a", "doc_b", F.col("ahash_a").alias("ha"), F.col("ahash_b").alias("hb")
+        )
+        .distinct()
+    )
+    ham = F.expr("bit_count(ha ^ hb)")
+    return (
+        cand.withColumn("hamming", ham.cast("bigint"))
+        .filter(F.col("hamming") <= AHASH_HAM_MAX)
+        .select(
+            "doc_a",
+            "doc_b",
+            "hamming",
+            (F.col("hamming") == 0).alias("is_exact"),
+        )
+    )
+
+
 RESAMPLE_SCHEMA = (
     "doc_id bigint, ok boolean, n_in bigint, n_out bigint,"
     " in_rate bigint, out_rate bigint, media_bytes binary"
@@ -1179,12 +1241,9 @@ def llm_multimodal_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the radius is exactly 100% — same banding contract as llm_dedup_simhash.
 # The fingerprint frame is checkpointed (codec once); the band self-join
 # is an AQE-splittable equi join whose fan-out tracks true collisions.
+# The banding and verify are ``ahash_bands``/``ahash_pairs`` next to
+# ``ahash_image``; the streaming twin runs the same two.
 # ---------------------------------------------------------------------------
-AHASH_BANDS = 4
-AHASH_BAND_BITS = 12
-AHASH_HAM_MAX = 3
-
-
 @query(
     "llm_multimodal_image_neardup_pairs",
     oracle=f"""
@@ -1239,49 +1298,5 @@ def llm_multimodal_image_neardup_pairs(
         .select("doc_id", "ahash")
         .localCheckpoint()  # codec once; both join sides read the frame
     )
-    bands = fp.select(
-        "doc_id",
-        "ahash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(k).alias("k"),
-                        F.expr(
-                            f"(ahash div {1 << (AHASH_BAND_BITS * k)})"
-                            f" % {1 << AHASH_BAND_BITS}"
-                        ).alias("bv"),
-                    )
-                    for k in range(AHASH_BANDS)
-                ]
-            )
-        ).alias("b"),
-    ).select("doc_id", "ahash", "b.k", "b.bv")
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.k") == F.col("b.k"))
-            & (F.col("a.bv") == F.col("b.bv"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.ahash").alias("ha"),
-            F.col("b.ahash").alias("hb"),
-        )
-        .distinct()
-    )
-    ham = F.expr("bit_count(ha ^ hb)")
-    return (
-        cand.withColumn("hamming", ham.cast("bigint"))
-        .filter(F.col("hamming") <= AHASH_HAM_MAX)
-        .select(
-            "doc_a",
-            "doc_b",
-            "hamming",
-            (F.col("hamming") == 0).alias("is_exact"),
-        )
-    )
+    return ahash_pairs(fp)
+

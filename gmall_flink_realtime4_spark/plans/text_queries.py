@@ -251,11 +251,16 @@ def llm_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     BY road; only the OUTPUT must match.)
     """
     d = T.load(spark, sf_dir, "documents")
-    sh_arr = F.filter(trigram_array(F.split("text", " ")), is_trigram)
-    out = d.select(
+    # split once into a named column, then the 3-gram array once: both
+    # feed more than one expression
+    toks = d.select("doc_id", F.split("text", " ").alias("t"))
+    arr = toks.select(
+        "doc_id", F.filter(trigram_array(F.col("t")), is_trigram).alias("shs")
+    )
+    out = arr.select(
         "doc_id",
-        F.size(sh_arr).cast("bigint").alias("total_ngrams"),
-        F.size(F.array_distinct(sh_arr)).cast("bigint").alias("distinct_ngrams"),
+        F.size("shs").cast("bigint").alias("total_ngrams"),
+        F.size(F.array_distinct("shs")).cast("bigint").alias("distinct_ngrams"),
     )
     rep = F.expr(
         "cast((1000 * (total_ngrams - distinct_ngrams))"

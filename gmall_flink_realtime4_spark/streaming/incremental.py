@@ -1,9 +1,26 @@
-"""Streaming-incremental near-dup detection — the foreachBatch twin of
-`plans.dedup_queries.llm_dedup_minhash_lsh`.
+"""Streaming-incremental twins: the foreachBatch forms of the near-dup
+queries (MinHash-LSH, image aHash, winnowing) and the accumulate/finalize
+halves of the mergeable ones (clusters, BM25, PQ training).
+
+One candidate-and-verify path per near-dup family serves the batch query
+and its twin: ``minhash_candidates``/``minhash_verify``
+(`operators.minhash`), ``ahash_pairs`` (`plans.llm_multimodal`) and
+``winnow_pairs`` (`plans.dedup_queries`). Each takes the new rows and,
+from a twin, the state rows as ``old``; the pair join and its doc-id
+orientation live once, in ``operators.joins.candidate_pairs``. A twin
+does only its own work: fingerprint the batch, ``_read_state``, call the
+family path, write its ``batch_id`` state partition.
+
+Contract: doc ids are unique across micro-batches (a replay reuses its
+batch id, so it does not count as a resend). The family paths rely on it
+to emit each pair once without a ``distinct``; a doc id sent again under
+a new batch id would also double its state rows and corrupt the sizes of
+every later pair.
 
 A production corpus grows continuously; re-running batch MinHash-LSH over
 the whole corpus per ingest is O(corpus) every time. The incremental form
-is O(batch x collision-rate) per micro-batch:
+(``incremental_minhash_pairs``) is O(batch x collision-rate) per
+micro-batch:
 
 - STATE (parquet, one sub-directory per micro-batch id): the
   (doc_id, band, bucket) band-key table and the (doc_id, text) doc table
@@ -12,10 +29,10 @@ is O(batch x collision-rate) per micro-batch:
   sides — recomputed only for a batch's CANDIDATE docs (the doc state is
   semi-join-pruned by candidate ids before any tokenize/explode, so
   per-batch verify cost tracks collisions, not corpus size).
-- PER BATCH: band keys of the batch docs join against state ∪ batch —
-  every emitted pair has >= 1 batch side, so a pair is emitted in exactly
-  one batch (the batch where its LATER doc arrives) and the union of all
-  emissions equals the one-shot batch result
+- PER BATCH: band keys of the batch docs pair within the batch and
+  against the band state — every emitted pair has >= 1 batch side, so a
+  pair is emitted in exactly one batch (the batch where its LATER doc
+  arrives) and the union of all emissions equals the one-shot batch result
   (`tests/test_streaming.py::test_incremental_minhash_pairs_matches_batch`).
 - RETRY SAFETY: state writes go to deterministic ``batch_id=<n>``
   sub-directories in overwrite mode, so a foreachBatch replay rewrites
@@ -39,7 +56,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.errors import AnalysisException
 
 from ..operators.graph import connected_components
-from ..operators.minhash import minhash_bands, minhash_verify, shingles
+from ..operators.minhash import (
+    minhash_bands,
+    minhash_candidates,
+    minhash_verify,
+    shingles,
+)
 from ..operators.pq import (
     argmin_codes,
     pq_fullint,
@@ -49,15 +71,11 @@ from ..operators.pq import (
 )
 from ..plans.dedup_queries import (
     DUP_CLUSTER_THRESHOLD_PM,
-    WINNOW_MIN_SHARED,
     winnow_fingerprint_rows,
+    winnow_pairs,
+    winnow_sizes,
 )
-from ..plans.llm_multimodal import (
-    AHASH_BAND_BITS,
-    AHASH_BANDS,
-    AHASH_HAM_MAX,
-    ahash_image,
-)
+from ..plans.llm_multimodal import ahash_image, ahash_pairs
 from ..plans.retrieval_queries import (
     bm25_query_frame,
     bm25_score_topk,
@@ -98,45 +116,12 @@ def incremental_minhash_pairs(
 
     prev_bands = _read_state(spark, bands_path, batch_id)
     prev_docs = _read_state(spark, docs_path, batch_id)
-    bands_all = (
-        bands_b if prev_bands is None else prev_bands.unionByName(bands_b)
-    )
     docs_all = batch if prev_docs is None else prev_docs.unionByName(batch)
 
-    left, right = bands_b.alias("l"), bands_all.alias("r")
-    # normalize pair direction, then de-dup (a new-new pair matches in
-    # both orientations; a new-old pair in one) BEFORE counting bands
-    cand = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.doc_id") != F.col("r.doc_id")),
-        )
-        .select(
-            F.least(F.col("l.doc_id"), F.col("r.doc_id")).alias("doc_a"),
-            F.greatest(F.col("l.doc_id"), F.col("r.doc_id")).alias("doc_b"),
-            F.col("l.band").alias("band"),
-        )
-        .distinct()
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("shared_bands"))
-        .localCheckpoint(eager=True)
-    )
-    # prune the doc state to candidate docs BEFORE shingling: the verify
-    # cost must track collisions, not corpus size (a semi-join above the
-    # shingle Generate would not push down through it)
-    cand_ids = (
-        cand.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    docs_cand = docs_all.join(cand_ids, "doc_id", "left_semi")
     # verify BEFORE the state writes (docs_all lazily reads the state
     # parquet) and materialize the result for the same reason
-    out = minhash_verify(cand, shingles(docs_cand)).localCheckpoint(
-        eager=True
-    )
+    cand = minhash_candidates(bands_b, prev_bands)
+    out = minhash_verify(cand, docs_all).localCheckpoint(eager=True)
 
     # deterministic per-batch locations, overwrite mode: a replay
     # rewrites identical bytes (idempotent), never double-appends
@@ -190,8 +175,8 @@ def incremental_ahash_pairs(
     fingerprints: STATE is just (doc_id, ahash) — no payload retention at
     all (the codec runs once per image, in its arrival batch, and the raw
     bytes never re-enter the pipeline). Per batch: fingerprint the batch
-    (map-only Arrow codec), band the batch against state ∪ batch on the
-    4x12-bit band keys, verify candidates with xor/bit_count. Every
+    (map-only Arrow codec), then the batch query's ``ahash_pairs`` over
+    (batch, state): 4x12-bit band candidates, xor/bit_count verify. Every
     emitted pair has >= 1 batch side, so each pair is emitted exactly once
     (in its LATER doc's batch) and the union of emissions equals the
     one-shot batch query. Same replay-safe batch_id-partitioned overwrite
@@ -206,56 +191,8 @@ def incremental_ahash_pairs(
         .localCheckpoint(eager=True)
     )
     prev = _read_state(spark, fps_path, batch_id)
-    fp_all = fp_b if prev is None else prev.unionByName(fp_b)
-
-    def bands(df: DataFrame) -> DataFrame:
-        return df.select(
-            "doc_id",
-            "ahash",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(k).alias("k"),
-                            F.expr(
-                                f"(ahash div {1 << (AHASH_BAND_BITS * k)})"
-                                f" % {1 << AHASH_BAND_BITS}"
-                            ).alias("bv"),
-                        )
-                        for k in range(AHASH_BANDS)
-                    ]
-                )
-            ).alias("b"),
-        ).select("doc_id", "ahash", "b.k", "b.bv")
-
-    left, right = bands(fp_b).alias("l"), bands(fp_all).alias("r")
-    cand = (
-        left.join(
-            right,
-            (F.col("l.k") == F.col("r.k"))
-            & (F.col("l.bv") == F.col("r.bv"))
-            & (F.col("l.doc_id") != F.col("r.doc_id")),
-        )
-        .select(
-            F.least(F.col("l.doc_id"), F.col("r.doc_id")).alias("doc_a"),
-            F.greatest(F.col("l.doc_id"), F.col("r.doc_id")).alias("doc_b"),
-            F.least(F.col("l.ahash"), F.col("r.ahash")).alias("ha"),
-            F.greatest(F.col("l.ahash"), F.col("r.ahash")).alias("hb"),
-        )
-        .distinct()
-    )
-    ham = F.expr("bit_count(ha ^ hb)")
-    out = (
-        cand.withColumn("hamming", ham.cast("bigint"))
-        .filter(F.col("hamming") <= AHASH_HAM_MAX)
-        .select(
-            "doc_a",
-            "doc_b",
-            "hamming",
-            (F.col("hamming") == 0).alias("is_exact"),
-        )
-        .localCheckpoint(eager=True)  # materialize before the state write
-    )
+    # materialize before the state write
+    out = ahash_pairs(fp_b, prev).localCheckpoint(eager=True)
     fp_b.write.mode("overwrite").parquet(f"{fps_path}/batch_id={batch_id}")
     return out
 
@@ -269,14 +206,15 @@ def incremental_winnow_pairs(
     """Streaming-incremental winnowing near-dup candidates — the
     foreachBatch twin of `plans.dedup_queries.llm_winnow_fingerprints`.
 
-    STATE is (doc_id, f) fingerprint rows plus the (doc_id, n_fp) size
-    table — no payload retention (fingerprint selection runs once per doc
-    in its arrival batch; text never re-enters the pipeline). Per batch:
-    the batch's fingerprints join state ∪ batch, so every emitted pair has
-    >= 1 batch side and is emitted exactly once, in its LATER doc's batch;
-    shared_fp / n_fp_* / overlap_pm are fixed at that moment, so the union
-    of emissions equals the one-shot CAPLESS batch run
-    (``winnow_pairs(fp, max_df=None)``).
+    STATE is (doc_id, f) fingerprint rows — no payload retention
+    (fingerprint selection runs once per doc in its arrival batch; text
+    never re-enters the pipeline), and the (doc_id, n_fp) sizes derive
+    from it. Per batch: the batch query's ``winnow_pairs`` over (batch,
+    state), so every emitted pair has >= 1 batch side and is emitted
+    exactly once, in its LATER doc's batch; shared_fp / n_fp_* /
+    overlap_pm are fixed at that moment, so the union of emissions equals
+    the one-shot CAPLESS batch run (``winnow_pairs(fp, winnow_sizes(fp))``
+    without the batch query's df cap).
 
     The MOSS df cap is deliberately NOT applied here: the cap is
     retroactive — a fingerprint crossing ``WINNOW_MAX_DF`` as the corpus
@@ -293,47 +231,9 @@ def incremental_winnow_pairs(
     ).localCheckpoint(eager=True)
     prev = _read_state(spark, fps_path, batch_id)
     fp_all = fp_b if prev is None else prev.unionByName(fp_b)
-
-    sizes = fp_all.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_fp")
-    )
-    left, right = fp_b.alias("l"), fp_all.alias("r")
-    pairs = (
-        left.join(
-            right,
-            (F.col("l.f") == F.col("r.f"))
-            & (F.col("l.doc_id") != F.col("r.doc_id")),
-        )
-        .select(
-            F.least(F.col("l.doc_id"), F.col("r.doc_id")).alias("doc_a"),
-            F.greatest(F.col("l.doc_id"), F.col("r.doc_id")).alias("doc_b"),
-            F.col("l.f").alias("f"),
-        )
-        .distinct()  # new-new pairs match in both orientations
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("shared_fp"))
-        .filter(F.col("shared_fp") >= WINNOW_MIN_SHARED)
-    )
-    sa = sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed(
-        "n_fp", "n_fp_a"
-    )
-    sb = sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed(
-        "n_fp", "n_fp_b"
-    )
-    out = (
-        pairs.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            "shared_fp",
-            "n_fp_a",
-            "n_fp_b",
-            F.expr("(1000 * shared_fp) div least(n_fp_a, n_fp_b)").alias(
-                "overlap_pm"
-            ),
-        )
-        .localCheckpoint(eager=True)  # materialize before the state write
+    # materialize before the state write
+    out = winnow_pairs(fp_b, winnow_sizes(fp_all), prev).localCheckpoint(
+        eager=True
     )
     fp_b.write.mode("overwrite").parquet(f"{fps_path}/batch_id={batch_id}")
     return out

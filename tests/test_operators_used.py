@@ -20,7 +20,10 @@ never count:
   somewhere in the package, ``tests/``, ``tools/``, ``perfbench/`` or
   ``bench.py``;
 - the word-3-gram construction is written once per engine, in
-  ``operators/minhash.py``.
+  ``operators/minhash.py``;
+- the streaming near-dup twins write no pair join and no doc-id
+  orientation of their own: each calls its family's pair path, built on
+  ``operators.joins.candidate_pairs``.
 """
 
 from __future__ import annotations
@@ -197,20 +200,41 @@ def _call_name(node: ast.AST) -> str | None:
     return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
 
 
+# One token access of a word n-gram in Spark SQL text:
+# ``element_at(<tokens>, i)`` or ``element_at(<tokens>, i + k)`` (also
+# ``try_element_at``); group 1 is k.
+_SQL_TOKEN_AT = re.compile(
+    r"element_at\((?:[^()]|\([^()]*\))*?,\s*i(?:\s*\+\s*(\d+))?\s*\)"
+)
+
+
 def _is_spark_trigram(node: ast.AST) -> bool:
-    """``transform(sequence(...), lambda i: ... try_element_at(_, i + 3))``."""
-    if _call_name(node) != "transform" or len(node.args) < 2:
-        return False
-    if _call_name(node.args[0]) != "sequence":
-        return False
-    return any(
-        _call_name(n) == "try_element_at"
-        and len(n.args) == 2
-        and isinstance(n.args[1], ast.BinOp)
-        and isinstance(n.args[1].op, ast.Add)
-        and getattr(n.args[1].right, "value", None) == 3
-        for n in ast.walk(node.args[1])
-    )
+    """Three consecutive token accesses ``i + k``, ``i + k + 1``,
+    ``i + k + 2`` by ``element_at``/``try_element_at``: in the lambda of a
+    Python ``transform(sequence(...), lambda i: ...)``, or in one string of
+    Spark SQL."""
+    ks = set()
+    if isinstance(node, ast.Constant) and isinstance(node.value, str):
+        ks = {int(k or 0) for k in _SQL_TOKEN_AT.findall(node.value)}
+    elif (
+        _call_name(node) == "transform"
+        and len(node.args) >= 2
+        and _call_name(node.args[0]) == "sequence"
+    ):
+        for n in ast.walk(node.args[1]):
+            if _call_name(n) not in ("element_at", "try_element_at"):
+                continue
+            i = n.args[1] if len(n.args) == 2 else None
+            if isinstance(i, ast.Name):
+                ks.add(0)
+            elif (
+                isinstance(i, ast.BinOp)
+                and isinstance(i.op, ast.Add)
+                and isinstance(i.left, ast.Name)
+                and isinstance(getattr(i.right, "value", None), int)
+            ):
+                ks.add(i.right.value)
+    return any({k + 1, k + 2} <= ks for k in ks)
 
 
 def _docstring_ids(tree: ast.Module) -> set[int]:
@@ -242,12 +266,14 @@ def test_word_trigram_construction_exists_once_per_engine():
         }
         docs = _docstring_ids(tree)
         for node in ast.walk(tree):
+            if id(node) in docs:
+                continue
             if _is_spark_trigram(node):
                 spark.append(f"{rel}:{node.lineno}")
             elif (
                 isinstance(node, ast.Constant)
                 and isinstance(node.value, str)
-                and id(node) not in docs | exempt
+                and id(node) not in exempt
             ):
                 sql += [f"{rel}:{node.lineno}"] * len(
                     _SQL_TRIGRAM.findall(node.value)
@@ -264,4 +290,37 @@ def test_word_trigram_construction_exists_once_per_engine():
     assert not problems, (
         "the word-3-gram construction must exist once per engine, in"
         f" {home}: " + "; ".join(problems)
+    )
+
+
+def _mentions_doc_id(node: ast.AST) -> bool:
+    return any(
+        isinstance(n, ast.Constant)
+        and isinstance(n.value, str)
+        and "doc_id" in n.value
+        for n in ast.walk(node)
+    )
+
+
+def test_streaming_twins_have_no_pair_join():
+    """A change to banding, pair orientation or a score lands once: the
+    near-dup twins call the batch queries' pair paths instead of joining
+    doc pairs (a join comparing two doc-id columns) or orienting them
+    (``least``/``greatest`` over doc ids) themselves."""
+    path = PKG / "streaming" / "incremental.py"
+    found = []
+    for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+        name = _call_name(node)
+        if name in ("least", "greatest") and _mentions_doc_id(node):
+            found.append(f"{name}:{node.lineno}")
+        elif name == "join" and any(
+            isinstance(c, ast.Compare)
+            and sum(map(_mentions_doc_id, [c.left, *c.comparators])) >= 2
+            for a in node.args
+            for c in ast.walk(a)
+        ):
+            found.append(f"join:{node.lineno}")
+    assert not found, (
+        "streaming/incremental.py pairs docs itself; call the family's pair"
+        f" path (operators.joins.candidate_pairs underneath): {found}"
     )

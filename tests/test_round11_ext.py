@@ -350,6 +350,7 @@ def test_incremental_winnow_soak_restart(spark, tmp_path):
     from gmall_flink_realtime4_spark.plans.dedup_queries import (
         winnow_fingerprint_rows,
         winnow_pairs,
+        winnow_sizes,
     )
     from gmall_flink_realtime4_spark.streaming.incremental import (
         incremental_winnow_pairs,
@@ -357,7 +358,8 @@ def test_incremental_winnow_soak_restart(spark, tmp_path):
 
     cols = ["doc_a", "doc_b", "shared_fp", "n_fp_a", "n_fp_b", "overlap_pm"]
     d = T.load(spark, SF, "documents")
-    expected = _rows(winnow_pairs(winnow_fingerprint_rows(d), max_df=None), cols)
+    fp = winnow_fingerprint_rows(d)
+    expected = _rows(winnow_pairs(fp, winnow_sizes(fp)), cols)
 
     state = str(tmp_path / "wn_state")
     sink = str(tmp_path / "wn_pairs")

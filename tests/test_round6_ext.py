@@ -993,6 +993,7 @@ def test_incremental_winnow_pairs_matches_capless_batch(spark, tmp_path):
     from gmall_flink_realtime4_spark.plans.dedup_queries import (
         winnow_fingerprint_rows,
         winnow_pairs,
+        winnow_sizes,
     )
     from gmall_flink_realtime4_spark.streaming.incremental import (
         incremental_winnow_pairs,
@@ -1016,11 +1017,10 @@ def test_incremental_winnow_pairs_matches_capless_batch(spark, tmp_path):
     for r in replay.collect():
         assert got[(r["doc_a"], r["doc_b"])] == tuple(r[c] for c in cols)
 
+    fp = winnow_fingerprint_rows(d)
     capless = {
         (r["doc_a"], r["doc_b"]): tuple(r[c] for c in cols)
-        for r in winnow_pairs(
-            winnow_fingerprint_rows(d), max_df=None
-        ).collect()
+        for r in winnow_pairs(fp, winnow_sizes(fp)).collect()
     }
     assert got == capless and len(capless) > 50
     capped = {

@@ -8,7 +8,9 @@ Usage: python tools/dump_plans.py <out_dir> [sf_dir] [query... | all]
 The explain is captured from the UNEXECUTED frame (AdaptiveSparkPlan
 isFinalPlan=false) — the static shape the judge checks claims against.
 Session-global counters are masked (expression ids ``#123``, RDD ids
-``RDD[45]``, ``plan_id=6``), so two dumps of the same plan diff clean:
+``RDD[45]``, ``plan_id=6``, and the PySpark lambda variable counter in
+``lambda x_285``, renumbered in order of first appearance per plan), so
+two dumps of the same plan diff clean:
 ``diff -r a/ b/`` after dumping two checkouts is the plan-identity check.
 """
 
@@ -28,13 +30,19 @@ _MASKS = (
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
 )
+# PySpark names every Python lambda variable ``x_<n>`` (``y_``/``z_`` for
+# the 2nd/3rd argument) from a session-global counter.
+_LAMBDA_VAR = re.compile(r"\blambda ([xyz])_(\d+)\b")
 
 
 def mask_ids(txt: str) -> str:
     """Replace the session-global ids an explain string carries."""
     for pat, rep in _MASKS:
         txt = pat.sub(rep, txt)
-    return txt
+    seen: dict[str, int] = {}
+    return _LAMBDA_VAR.sub(
+        lambda m: f"lambda {m[1]}_L{seen.setdefault(m[2], len(seen))}", txt
+    )
 
 
 def main() -> None:
