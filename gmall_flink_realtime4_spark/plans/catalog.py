@@ -48,9 +48,19 @@ REGISTRY: dict[str, QuerySpec] = {}
 GATE_PRIORITY: list[str] = [
     # Rotation after the r13 prefix (CORRECTNESS_r13) froze.
     #
-    # CHANGED-PLAN head: every query whose plan changed since then. The
-    # one pair path per near-dup family (operators/joins.py::
-    # candidate_pairs) changed the masked plans of the first four and the
+    # CHANGED-PLAN head: every query whose plan changed since then. Each
+    # accumulate-then-finalize query now runs its twin's partials and
+    # finalize, on the one KMV sketch per engine (operators/hashing.py):
+    # the masked plans of the first five changed, and the checkpointed
+    # (build-phase) supplier aggregate of the skyline gained the re-sum.
+    "dq_table_stats_profile",
+    "dq_vocab_drift",
+    "dq_langid_eval",
+    "llm_sketch_kmv_distinct",
+    "llm_quality_train_step",
+    "f_skyline_pareto_suppliers",
+    # The one pair path per near-dup family (operators/joins.py::
+    # candidate_pairs) changed the masked plans of the next four and the
     # checkpointed (build-phase) candidate/verify plans of the next two.
     "llm_dedup_minhash_lsh",
     "llm_dedup_containment_lsh",
@@ -100,13 +110,7 @@ GATE_PRIORITY: list[str] = [
     "llm_sample_domain_cap",
     "llm_embedding_quantize_int8",
     "f_zorder_layout_audit",
-    "dq_table_stats_profile",
     "dq_sketch_join_cardinality",
-    "llm_quality_train_step",
-    "llm_quality_classifier",
-    "llm_sketch_kmv_distinct",
-    "dws_event_type_pagerank",
-    "llm_sketch_hll_distinct",
     "llm_bm25_topk",
 ]
 

@@ -420,7 +420,7 @@ def corpus_final_shingle_partials(d: DataFrame) -> DataFrame:
     frames union-merge exactly; contamination PAIRS are cross-batch (a
     training doc may share shingles with an eval doc from a different
     batch) and therefore computed only at finalize — the same membership
-    discipline as lsh_curve_shingle_partials."""
+    discipline as the lsh tuning-curve twin (``lsh_curve_finalize``)."""
     return shingles(d).drop("n_sh")
 
 
@@ -943,51 +943,41 @@ def llm_sample_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the corpus ever runs — the oracle's single ORDER BY is the spec,
     and phase-1 pruning is exact because a global top-K row is
     necessarily in its own salt's top-K
-    (test_reservoir_two_phase_equals_global pins it).
+    (test_reservoir_two_phase_equals_global pins it). Phase 1 is the
+    streaming twin's partial and phase 2 its merge, so the query is
+    ``reservoir_finalize(reservoir_partials(documents))``.
     """
-    return reservoir_sample(T.load(spark, sf_dir, "documents", spread=False))
+    d = T.load(spark, sf_dir, "documents", spread=False)
+    return reservoir_finalize(reservoir_partials(d))
 
 
-def reservoir_sample(
-    d: DataFrame, k: int = RES_K, salt: int = RES_SALT
+# Accumulate-then-finalize: phase 1 is the mergeable partial, phase 2 the
+# merge; union-of-batches == one-shot is pinned in tests/test_round7_ext.py.
+def reservoir_partials(
+    docs_batch: DataFrame, k: int = RES_K, salt: int = RES_SALT
 ) -> DataFrame:
-    """Two-phase deterministic top-k core over any (doc_id, source) frame
-    — split out so the equivalence test can prove two-phase == global on
-    synthetic corpora with adversarial salt skew."""
-    h = d.select(
+    """Phase 1: the per-salt (doc_id mod ``salt``) top-k survivors
+    (doc_id, source, u) by the md5 rank, so even a huge batch never
+    funnels through one reducer. The distributed-reservoir merge
+    property: a global top-k row is necessarily in its own salt's — and
+    its own batch's — top-k, so survivors are a lossless state bounded
+    at salt x k rows per batch."""
+    h = docs_batch.select(
         "doc_id",
         "source",
         F.md5(F.col("doc_id").cast("string")).alias("hx"),
     ).withColumn("u", F.expr(hexval_sql("hx", "instr")))
     w1 = Window.partitionBy(F.expr(f"doc_id % {salt}")).orderBy("u", "doc_id")
-    survivors = (
+    return (
         h.withColumn("r1", F.row_number().over(w1))
         .filter(F.col("r1") <= k)
         .select("doc_id", "source", "u")
     )
-    w2 = Window.orderBy("u", "doc_id")
-    return (
-        survivors.withColumn("rnk", F.row_number().over(w2).cast("bigint"))
-        .filter(F.col("rnk") <= k)
-        .select("rnk", "doc_id", "u", "source")
-    )
-
-
-# Streaming accumulate-then-finalize twin: the partial is mergeable by
-# construction; union-of-batches == one-shot is pinned in
-# tests/test_round7_ext.py.
-def reservoir_partials(docs_batch: DataFrame, k: int = RES_K) -> DataFrame:
-    """Per-batch top-k survivors (doc_id, source, u) by the md5 rank —
-    the distributed-reservoir merge property: a global top-k row is
-    necessarily in its own batch's top-k, so per-batch survivors are a
-    lossless state bounded at k rows per batch. Reuses the salted
-    two-phase core, so even a huge batch never funnels through one
-    reducer."""
-    return reservoir_sample(docs_batch, k=k).select("doc_id", "source", "u")
 
 
 def reservoir_finalize(parts: DataFrame, k: int = RES_K) -> DataFrame:
-    """Final sample: rank the unioned survivor state (≤ k·batches rows)."""
+    """Phase 2: rank the unioned survivors (bounded by salt x k per
+    batch — the documented unpartitioned-Window exception)."""
     w = Window.orderBy("u", "doc_id")
     return (
         parts.withColumn("rnk", F.row_number().over(w).cast("bigint"))

@@ -1282,11 +1282,7 @@ WINNOW_MIN_SHARED = 2  # candidate pairs must share >= this many prints
 
 
 def _winnow_oracle() -> str:
-    hexpoly = " + ".join(
-        f"(strpos('0123456789abcdef', substr(x, {i + 1}, 1)) - 1) * "
-        f"CAST({16 ** (10 - i)} AS BIGINT)"
-        for i in range(11)
-    )
+    hexpoly = hexv("x", 1, 11, "strpos")
     return f"""
 WITH toks AS (
     SELECT doc_id, string_split(text, ' ') AS t FROM documents
@@ -1556,34 +1552,21 @@ def llm_lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     cap exceeds the corpus, so the sample IS the corpus and the curve
     is exact."""
     d = T.load(spark, sf_dir, "documents")
-    sh = shingles(d).drop("n_sh").localCheckpoint()  # mh + truth x2 + sizes
-    return _lsh_curve_from_shingles(sh)
-
-
-def lsh_curve_shingle_partials(docs_batch: DataFrame) -> DataFrame:
-    """Mergeable per-batch partials for the tuning curve: the distinct
-    (doc_id, shingle) rows of one document slice. Shingles are strictly
-    within-document, so partials are union-mergeable with no re-dedup —
-    streaming state is the shingle fingerprint table (the
-    incremental_minhash_pairs state shape), never document text."""
-    return shingles(docs_batch).drop("n_sh")
+    return lsh_curve_finalize(shingles(d).drop("n_sh"))
 
 
 def lsh_curve_finalize(parts: DataFrame) -> DataFrame:
-    """Tuning-curve report from accumulated shingle partials: checkpoint
-    the merged state once and run the identical signature/banding/truth
-    pipeline. Cross-batch candidate pairs appear exactly as in the
-    one-shot batch because both signatures and the exact-Jaccard truth
-    are functions of the merged shingle table alone —
+    """Tuning-curve report from (doc_id, shingle) rows — one corpus's, or
+    the union of per-batch ``shingles(batch)`` partials (shingles are
+    strictly within-document, so batches union with no re-dedup, and the
+    streaming state is the shingle table, never document text).
+    Checkpoint the rows once (mh + truth x2 + sizes read them) and run the
+    signature/banding/truth pipeline. Cross-batch candidate pairs appear
+    exactly as in the one-shot batch because both signatures and the
+    exact-Jaccard truth are functions of the merged shingle table alone —
     test_incremental_lsh_curve_partials_merge pins union-of-batches ==
     one-shot batch."""
-    return _lsh_curve_from_shingles(parts.localCheckpoint())
-
-
-def _lsh_curve_from_shingles(sh: DataFrame) -> DataFrame:
-    """Curve core over a (doc_id, shingle) frame that is already safe to
-    fan out (checkpointed by both callers: mh + truth x2 + sizes read
-    it)."""
+    sh = parts.localCheckpoint()
     mh = (
         sh.groupBy("doc_id")
         .agg(

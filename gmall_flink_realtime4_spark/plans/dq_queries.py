@@ -6,10 +6,12 @@ integrity, a KMV join-cardinality estimate, distribution (KS) and
 vocabulary drift, language-ID evaluation against the labeled language,
 and Benford first-digit conformance. Most audits also expose mergeable
 ``*_partials`` / ``*_finalize`` pairs so a streaming twin folds
-micro-batches into the one-shot result.
+micro-batches into the one-shot result; the registered query runs the
+same pair over the whole table, so batch and stream share one path.
 
-md5-hex values and KMV constants come from ``operators.hashing``; the
-language-ID predictor from ``operators.stopwords``.
+md5-hex values and the KMV sketch (``kmv_fold``, ``kmv_estimate``,
+``kmv_sql``) come from ``operators.hashing``; the language-ID predictor
+from ``operators.stopwords``.
 
 Determinism (catalog.py contract): comparisons and ratios are exact
 integer arithmetic; the only floating-point steps are correctly-rounded
@@ -23,7 +25,16 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from .. import tables as T
-from ..operators.hashing import KMV_K, KMV_M, hexval_sql
+from ..operators.hashing import (
+    KMV_K,
+    KMV_M,
+    hexval_sql,
+    kmv_estimate,
+    kmv_fold,
+    kmv_merge,
+    kmv_salt,
+    kmv_sql,
+)
 from ..operators.stopwords import LANG_STOPWORDS, hits_sql, langid_predict
 from .catalog import query
 
@@ -535,25 +546,12 @@ WITH s AS (
     FROM s GROUP BY 1
 ), h AS (
     SELECT DISTINCT col_name, md5(repr) AS hx FROM s WHERE repr IS NOT NULL
-), r AS (
-    SELECT col_name, hx,
-           row_number() OVER (PARTITION BY col_name ORDER BY hx) AS rn,
-           COUNT(*) OVER (PARTITION BY col_name) AS n
-    FROM h
-), kth AS (
-    SELECT col_name, n, {hexval_sql("hx", "strpos")} AS v
-    FROM r WHERE rn = LEAST(n, {KMV_K})
-), mm AS (
+), {kmv_sql("h", ["col_name"])}, mm AS (
     {minmax}
 )
 SELECT p.col_name, p.n_rows, p.n_nonnull, p.ndv_exact,
-       CAST(CASE WHEN k.n < {KMV_K} THEN k.n
-                 ELSE ({KMV_K - 1} * {KMV_M}) // greatest(k.v, 1) END
-            AS BIGINT) AS ndv_kmv_est,
-       CAST((1000 * abs(CASE WHEN k.n < {KMV_K} THEN k.n
-                             ELSE ({KMV_K - 1} * {KMV_M})
-                                  // greatest(k.v, 1) END
-                        - p.ndv_exact)) // greatest(p.ndv_exact, 1)
+       CAST(k.est AS BIGINT) AS ndv_kmv_est,
+       CAST((1000 * abs(k.est - p.ndv_exact)) // greatest(p.ndv_exact, 1)
             AS BIGINT) AS ndv_err_permille,
        mm.min_repr, mm.max_repr
 FROM prof p
@@ -572,57 +570,15 @@ def dq_table_stats_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical min-max, plus the deterministic KMV NDV estimate with its
     measured per-mille error — exact-vs-sketch honesty in one row per
     column, the statistics a cost-based optimizer and a partition-pruning
-    planner both feed on."""
+    planner both feed on.
+
+    The count and NDV columns are the streaming twin's own steps,
+    ``stats_profile_finalize(stats_profile_partials(orders))`` — one
+    stacked pass folds rows, non-nulls and the salted KMV hash sets
+    together, and ndv_exact is the merged distinct-hash count. Typed
+    min/max is batch-only (the twin omits it by design)."""
     o = T.load(spark, sf_dir, "orders", spread=False)
-    stacked = o.select(
-        F.expr(
-            "stack("
-            + str(len(_PROF_COLS))
-            + ", "
-            + ", ".join(f"'{c}', {sp}" for c, sp, _ in _PROF_COLS)
-            + ") as (col_name, repr)"
-        )
-    )
-    prof = stacked.groupBy("col_name").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        F.count("repr").cast("bigint").alias("n_nonnull"),
-        F.countDistinct("repr").cast("bigint").alias("ndv_exact"),
-    )
-    # salted k-min fold (the llm_sketch_kmv pattern, keyed by col_name)
-    h = stacked.filter(F.col("repr").isNotNull()).select(
-        "col_name", F.md5("repr").alias("hx")
-    )
-    salted = h.withColumn(
-        "salt", F.expr(f"instr('0123456789abcdef', substr(hx, 1, 1)) % 16")
-    )
-    partial = (
-        salted.groupBy("col_name", "salt")
-        .agg(F.array_sort(F.collect_set("hx")).alias("hs"))
-        .select(
-            "col_name",
-            F.slice("hs", 1, KMV_K).alias("kmin"),
-            F.size("hs").cast("bigint").alias("n_bucket"),
-        )
-    )
-    kth = (
-        partial.groupBy("col_name")
-        .agg(
-            F.sum("n_bucket").alias("n"),
-            F.slice(
-                F.array_sort(F.flatten(F.collect_list("kmin"))), 1, KMV_K
-            ).alias("kmin_all"),
-        )
-        .select(
-            "col_name",
-            "n",
-            F.expr(
-                hexval_sql(
-                    f"element_at(kmin_all, cast(least(n, {KMV_K}) as int))",
-                    "instr",
-                )
-            ).alias("v"),
-        )
-    )
+    prof = stats_profile_finalize(stats_profile_partials(o))
     # typed min/max: one single-row agg, unpivoted by a second stack
     mm_aggs = []
     for c, _, _ in _PROF_COLS:
@@ -657,13 +613,8 @@ def dq_table_stats_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             + ") as (col_name, min_repr, max_repr)"
         )
     )
-    est = F.when(F.col("n") < KMV_K, F.col("n")).otherwise(
-        F.expr(f"({KMV_K - 1} * {KMV_M}) div greatest(v, 1)")
-    )
     return (
-        prof.join(kth, "col_name")
-        .join(F.broadcast(mm), "col_name")
-        .withColumn("ndv_kmv_est", est.cast("bigint"))
+        prof.join(F.broadcast(mm), "col_name")
         .select(
             "col_name",
             "n_rows",
@@ -697,27 +648,12 @@ def dq_table_stats_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kmv_set_sketch(df: DataFrame, key: str) -> DataFrame:
-    """Global (ungrouped) salted k-min fold over DISTINCT md5(key):
-    one row out: (n = exact distinct count, kmin = 64 smallest hashes)."""
-    h = df.filter(F.col(key).isNotNull()).select(
-        F.md5(F.col(key).cast("string")).alias("hx")
-    )
-    salted = h.withColumn(
-        "salt", F.expr("instr('0123456789abcdef', substr(hx, 1, 1)) % 16")
-    )
-    partial = (
-        salted.groupBy("salt")
-        .agg(F.array_sort(F.collect_set("hx")).alias("hs"))
-        .select(
-            F.slice("hs", 1, KMV_K).alias("kmin"),
-            F.size("hs").cast("bigint").alias("n_bucket"),
+    """Global KMV sketch over DISTINCT md5(key): one row out,
+    (n = exact distinct count, kmin = 64 smallest hashes)."""
+    return kmv_fold(
+        df.filter(F.col(key).isNotNull()).select(
+            F.md5(F.col(key).cast("string")).alias("hx")
         )
-    )
-    return partial.agg(
-        F.sum("n_bucket").alias("n"),
-        F.slice(
-            F.array_sort(F.flatten(F.collect_list("kmin"))), 1, KMV_K
-        ).alias("kmin"),
     )
 
 
@@ -729,19 +665,14 @@ WITH a AS (
 ), b AS (
     SELECT DISTINCT md5(CAST(user_id AS VARCHAR)) AS hx
     FROM events WHERE user_id IS NOT NULL
-), ra AS (
-    SELECT hx, row_number() OVER (ORDER BY hx) AS rn, COUNT(*) OVER () AS n
-    FROM a
-), rb AS (
-    SELECT hx, row_number() OVER (ORDER BY hx) AS rn, COUNT(*) OVER () AS n
-    FROM b
-), ka AS (SELECT hx FROM ra WHERE rn <= {KMV_K}),
-   kb AS (SELECT hx FROM rb WHERE rn <= {KMV_K}),
+), {kmv_sql("a", name="tka")}, {kmv_sql("b", name="tkb")},
+   ka AS (SELECT hx FROM tka_r WHERE rn <= {KMV_K}),
+   kb AS (SELECT hx FROM tkb_r WHERE rn <= {KMV_K}),
    kth AS (
-    SELECT (SELECT hx FROM ra WHERE rn = LEAST(n, {KMV_K})) AS tha,
-           (SELECT hx FROM rb WHERE rn = LEAST(n, {KMV_K})) AS thb,
-           (SELECT n FROM ra LIMIT 1) AS n_a,
-           (SELECT n FROM rb LIMIT 1) AS n_b
+    SELECT (SELECT hx FROM tka) AS tha,
+           (SELECT hx FROM tkb) AS thb,
+           (SELECT n FROM tka) AS n_a,
+           (SELECT n FROM tkb) AS n_b
 ), th AS (
     SELECT n_a, n_b, LEAST(tha, thb) AS theta_hx,
            {hexval_sql("LEAST(tha, thb)", "strpos")} AS theta_v
@@ -862,71 +793,39 @@ def _profile_stacked(o: DataFrame) -> DataFrame:
 
 def stats_profile_partials(batch: DataFrame) -> DataFrame:
     """Fold one orders-shaped micro-batch to mergeable profile partials:
-    (col_name, salt, n_rows, n_nonnull, hashes). NULL reprs land in
-    salt=-1 with an empty hash set so row counts still sum per column."""
-    stacked = _profile_stacked(batch)
-    h = stacked.select(
-        "col_name",
-        "repr",
-        F.when(
-            F.col("repr").isNotNull(),
-            F.expr(
-                "instr('0123456789abcdef', substr(md5(repr), 1, 1)) % 16"
-            ),
-        )
-        .otherwise(F.lit(-1))
-        .alias("salt"),
+    (col_name, salt, n_rows, n_nonnull, hashes) — each KMV bucket's
+    sorted distinct hash set (``operators.hashing.kmv_salt``). NULL reprs
+    land in salt=-1 with an empty hash set so row counts still sum per
+    column."""
+    h = _profile_stacked(batch).select(
+        "col_name", "repr", F.md5("repr").alias("hx")
     )
-    return h.groupBy("col_name", "salt").agg(
+    salt = F.coalesce(kmv_salt(), F.lit(-1)).alias("salt")
+    return h.groupBy("col_name", salt).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
         F.count("repr").cast("bigint").alias("n_nonnull"),
-        F.array_sort(
-            F.array_distinct(
-                F.collect_list(F.when(F.col("repr").isNotNull(), F.md5("repr")))
-            )
-        ).alias("hashes"),
+        F.array_sort(F.collect_set("hx")).alias("hashes"),
     )
 
 
 def stats_profile_finalize(partials: DataFrame) -> DataFrame:
     """Fold accumulated partials (several rows per (col, salt) — one per
-    micro-batch) to the one-shot profile columns. Bucket sets union
-    losslessly because the salt partitions the hash space."""
-    bucket = partials.groupBy("col_name", "salt").agg(
+    micro-batch) to the profile's count and NDV columns. Bucket sets union
+    losslessly because the salt partitions the hash space; ``kmv_merge``
+    keeps the k smallest per column and counts the distinct hashes."""
+    buckets = partials.groupBy("col_name", "salt").agg(
         F.sum("n_rows").alias("n_rows"),
         F.sum("n_nonnull").alias("n_nonnull"),
         F.array_sort(
             F.array_distinct(F.flatten(F.collect_list("hashes")))
         ).alias("hs"),
     )
-    merged = bucket.groupBy("col_name").agg(
-        F.sum("n_rows").cast("bigint").alias("n_rows"),
-        F.sum("n_nonnull").cast("bigint").alias("n_nonnull"),
-        F.sum(F.size("hs")).cast("bigint").alias("n"),
-        F.slice(
-            F.array_sort(F.flatten(F.collect_list(F.slice("hs", 1, KMV_K)))),
-            1,
-            KMV_K,
-        ).alias("kmin_all"),
-    )
-    kth = merged.withColumn(
-        "v",
-        F.expr(
-            hexval_sql(
-                f"element_at(kmin_all, cast(least(n, {KMV_K}) as int))",
-                "instr",
-            )
-        ),
-    )
-    est = F.when(F.col("n") < KMV_K, F.col("n")).otherwise(
-        F.expr(f"({KMV_K - 1} * {KMV_M}) div greatest(v, 1)")
-    )
-    return kth.select(
+    return kmv_merge(buckets, ["col_name"], sums=("n_rows", "n_nonnull")).select(
         "col_name",
         "n_rows",
         "n_nonnull",
         F.col("n").alias("ndv_exact"),
-        est.cast("bigint").alias("ndv_kmv_est"),
+        kmv_estimate().alias("ndv_kmv_est"),
     )
 
 
@@ -1159,48 +1058,24 @@ def dq_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms + one '§other' bucket, plus the single most-shifted bucket
     (deterministic min-term argmax).
 
-    Scale shape: two corpus scans, both pushed — pass 1 builds the
-    vocabulary (map-combined term counts, heavy-hitters min-support
-    BEFORE the vocab-sized global rank, top-V checkpointed at 64 rows);
-    pass 2 folds every token into its top-V term or '§other' MAP-SIDE
-    via a broadcast membership lookup, so the second shuffle carries at
-    most (V+1) x |sources| rows. All distance math runs on that bounded
+    Scale shape: the streaming twin's own steps,
+    ``vocab_drift_finalize(vocab_drift_term_partials(documents))``. One
+    pushed corpus scan explodes the tokens once into map-combined
+    (source, term) counts — a vocabulary-sized frame; the top-V
+    vocabulary (heavy-hitters min-support BEFORE the vocab-sized global
+    rank) and the bucket fold (top-V term or '§other' via a broadcast
+    membership lookup, at most (V+1) x |sources| rows) both read that
+    frame, never the tokens. All distance math runs on the bounded
     grid. Distances are ppm-quantized before differencing (bit-stable
     across engines; per-bucket quantization bias < 1e-6, i.e. smaller
     than one count in a million tokens)."""
     d = T.load(spark, sf_dir, "documents")
-    tok = d.select("source", F.explode(F.split("text", " ")).alias("term"))
-    cv = (
-        tok.groupBy("term")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("cv"))
-        .filter(F.col("cv") >= VOCAB_DRIFT_MIN_SUPPORT)
-    )
-    rnk = F.row_number().over(Window.orderBy(F.col("cv").desc(), "term"))
-    topv = (
-        cv.withColumn("rnk", rnk)
-        .filter(F.col("rnk") <= VOCAB_DRIFT_V)
-        .select("term")
-        .localCheckpoint()  # 64 rows; pass 2 and the grid both read it
-    )
-    b = (
-        tok.join(
-            F.broadcast(topv.withColumnRenamed("term", "tv")),
-            tok["term"] == F.col("tv"),
-            "left",
-        )
-        .withColumn("bucket", F.coalesce("tv", F.lit(_OTHER)))
-        .groupBy("source", "bucket")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .localCheckpoint()  # (V+1) x |sources| rows, five consumers
-    )
-    return _vocab_drift_from_buckets(b)
+    return vocab_drift_finalize(vocab_drift_term_partials(d))
 
 
 def _vocab_drift_from_buckets(b: DataFrame) -> DataFrame:
-    """Drift report from the bounded (source, bucket, c) grid — shared by
-    the one-shot batch plan and the streaming accumulate-then-finalize
-    twin (``vocab_drift_finalize``); everything below runs on at most
-    (V+1) x |sources| rows."""
+    """Drift report from the bounded (source, bucket, c) grid; everything
+    below runs on at most (V+1) x |sources| rows."""
     ns = b.groupBy("source").agg(F.sum("c").cast("bigint").alias("n_s"))
     cb = b.groupBy("bucket").agg(F.sum("c").cast("bigint").alias("cb"))
     nn = b.select(F.sum("c").cast("bigint").alias("n"))
@@ -1281,12 +1156,12 @@ def vocab_drift_term_partials(docs_batch: DataFrame) -> DataFrame:
 
 
 def vocab_drift_finalize(parts: DataFrame) -> DataFrame:
-    """One-shot report from accumulated term-count partials: re-sum the
-    unioned batches, rebuild the global top-V vocabulary (min-support
-    before the vocab-sized rank, exactly the batch plan's pass 1), fold
-    every term row into its bucket via the same broadcast lookup, and
-    reuse the batch report core — union-of-batches == one-shot batch is
-    pinned by test_incremental_vocab_drift_partials_merge."""
+    """Drift report from accumulated term-count partials: re-sum the
+    unioned batches, build the global top-V vocabulary (min-support
+    before the vocab-sized rank), fold every term row into its bucket via
+    a broadcast lookup, and run the report core — union-of-batches ==
+    one-shot batch is pinned by
+    test_incremental_vocab_drift_partials_merge."""
     st = parts.groupBy("source", "term").agg(
         F.sum("c").cast("bigint").alias("c")
     )
@@ -1389,44 +1264,24 @@ def dq_langid_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     so a class the model never predicts (or that never occurs) still gets
     a row with honest zeros.
 
-    Scale shape: the per-doc predictor is one codegen'd projection
+    Scale shape: the streaming twin's own steps,
+    ``langid_eval_finalize(langid_confusion_partials(documents))``. The
+    per-doc predictor is one codegen'd projection
     (``operators.stopwords.langid_predict``, the ``llm_text_langid``
-    plan); everything above it is three map-combined aggs on the
-    lang-cardinality key (a handful of classes) joined on a broadcastable
-    frame. The F1 here is computed from the per-mille-floored P and R
-    (documented — quantize-then-combine, same on both engines)."""
-
-    pred = langid_predict(T.load(spark, sf_dir, "documents")).select(
-        "labeled_lang", "predicted_lang"
-    )
-    # three aggs + the class union all read the predictor output; it is
-    # doc-cardinality, so DON'T checkpoint — re-deriving the projection
-    # is cheaper than materializing a per-doc frame (the HLL rule)
-    classes = (
-        pred.select(F.col("labeled_lang").alias("lang"))
-        .union(pred.select("predicted_lang"))
-        .distinct()
-    )
-    lab = pred.groupBy(F.col("labeled_lang").alias("lang")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_labeled")
-    )
-    prd = pred.groupBy(F.col("predicted_lang").alias("lang")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_predicted")
-    )
-    cor = (
-        pred.filter(F.col("labeled_lang") == F.col("predicted_lang"))
-        .groupBy(F.col("labeled_lang").alias("lang"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_correct"))
-    )
-    return _langid_report(classes, lab, prd, cor)
+    plan) feeding ONE map-combined (labeled, predicted) count — at most
+    |classes|² rows; the class union and the labeled / predicted /
+    correct marginals all derive from that confusion frame. The F1 here
+    is computed from the per-mille-floored P and R (documented —
+    quantize-then-combine, same on both engines)."""
+    d = T.load(spark, sf_dir, "documents")
+    return langid_eval_finalize(langid_confusion_partials(d))
 
 
 def _langid_report(
     classes: DataFrame, lab: DataFrame, prd: DataFrame, cor: DataFrame
 ) -> DataFrame:
-    """P/R/F1 report tail over the class-keyed count frames — shared by
-    the one-shot batch plan and the streaming confusion-matrix twin
-    (``langid_eval_finalize``); runs on |classes| rows."""
+    """P/R/F1 report tail over the class-keyed count frames; runs on
+    |classes| rows."""
     m = (
         classes.join(lab, "lang", "left")
         .join(prd, "lang", "left")
@@ -1478,12 +1333,16 @@ def langid_confusion_partials(docs_batch: DataFrame) -> DataFrame:
 
 def langid_eval_finalize(parts: DataFrame) -> DataFrame:
     """P/R/F1 report from accumulated confusion partials: re-sum the
-    unioned batches and rebuild the class-keyed marginals — the diagonal
-    is n_correct, the row/column sums are n_labeled/n_predicted. Reuses
-    the batch report tail; union-of-batches == one-shot batch is pinned
-    by test_incremental_langid_confusion_partials_merge."""
-    conf = parts.groupBy("labeled_lang", "predicted_lang").agg(
-        F.sum("n").cast("bigint").alias("n")
+    unioned batches and build the class-keyed marginals — the diagonal
+    is n_correct, the row/column sums are n_labeled/n_predicted.
+    Union-of-batches == one-shot batch is pinned by
+    test_incremental_langid_confusion_partials_merge."""
+    # <= |classes|^2 rows feeding the class union and three marginals:
+    # checkpoint it, so the documents are scored once, not once per use
+    conf = (
+        parts.groupBy("labeled_lang", "predicted_lang")
+        .agg(F.sum("n").cast("bigint").alias("n"))
+        .localCheckpoint()
     )
     classes = (
         conf.select(F.col("labeled_lang").alias("lang"))

@@ -46,10 +46,10 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import tables as T
+from ..operators.hashing import HEX
 from ..operators.joins import candidate_pairs
 from .catalog import query
 
-_HEX = "0123456789abcdef"
 
 DECODE_SCHEMA = (
     "doc_id bigint, media_type string, byte_len bigint, content_md5 string,"
@@ -75,7 +75,7 @@ def media_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     ih = (
         F.lit(16)
         + (
-            F.expr(f"instr('{_HEX}', substr(md5(encode(text, 'utf-8')), 1, 1))")
+            F.expr(f"instr('{HEX}', substr(md5(encode(text, 'utf-8')), 1, 1))")
             - 1
         )
         * 4
@@ -101,9 +101,11 @@ def media_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _parse_ppm(b: bytes) -> dict:
-    """Binary pixmap (PPM P6): ASCII header ``P6 <w> <h> <maxval>`` with
-    whitespace separators and '#' comments, then the raw RGB plane."""
+def _ppm_header(b: bytes) -> tuple[int, int, int]:
+    """(width, height, plane offset) of a binary pixmap (PPM P6): ASCII
+    header ``P6 <w> <h> <maxval>`` with whitespace separators and '#'
+    comments; the raw RGB plane starts after the single whitespace byte
+    that ends the third token."""
     if not b.startswith(b"P6"):
         raise ValueError("not ppm")
     toks: list[bytes] = []
@@ -126,6 +128,12 @@ def _parse_ppm(b: bytes) -> dict:
     w, h, maxval = (int(t) for t in toks)
     if not (0 < w and 0 < h and 0 < maxval < 65536):
         raise ValueError("bad ppm dims")
+    return w, h, i + 1
+
+
+def _parse_ppm(b: bytes) -> dict:
+    """Decode metadata of a PPM P6 container (``_ppm_header``)."""
+    w, h, _ = _ppm_header(b)
     return {"width": w, "height": h, "n_frames": 1}
 
 
@@ -145,30 +153,38 @@ def _parse_bmp(b: bytes) -> dict:
     return {"width": int(w), "height": abs(int(h)), "n_frames": 1}
 
 
-def _parse_wav(b: bytes) -> dict:
+def _wav_chunks(b: bytes) -> tuple[tuple, int, bytes]:
     """RIFF/WAVE PCM: validates the RIFF size against the actual payload
-    length, then walks chunks for ``fmt `` and ``data``. Feature mapping
-    into the shared decode schema: width=channels, height=bits/sample,
-    n_frames=sample frames (data bytes / block align)."""
+    length, then walks the chunks once. Returns the ``fmt `` fields
+    (format, channels, rate, byte rate, block align, bits), the declared
+    ``data`` length and the data chunk bytes."""
     if len(b) < 44 or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
         raise ValueError("not wav")
     (riff_size,) = struct.unpack_from("<I", b, 4)
     if riff_size != len(b) - 8:
         raise ValueError("bad riff size")
-    i, fmt, data_len = 12, None, None
+    i, fmt, data_len, data = 12, None, None, None
     while i + 8 <= len(b):
         cid = b[i : i + 4]
         (sz,) = struct.unpack_from("<I", b, i + 4)
         if cid == b"fmt " and sz >= 16:
             fmt = struct.unpack_from("<HHIIHH", b, i + 8)
         elif cid == b"data":
-            data_len = sz
+            data_len, data = sz, b[i + 8 : i + 8 + sz]
         i += 8 + sz + (sz % 2)  # chunks are word-aligned
     if fmt is None or data_len is None:
         raise ValueError("missing wav chunks")
-    _, channels, _, _, block_align, bits = fmt
+    _, channels, _, _, block_align, _ = fmt
     if channels <= 0 or block_align <= 0:
         raise ValueError("bad wav fmt")
+    return fmt, data_len, data
+
+
+def _parse_wav(b: bytes) -> dict:
+    """Decode metadata of a PCM WAV (``_wav_chunks``), mapped into the
+    shared decode schema: width=channels, height=bits/sample,
+    n_frames=sample frames (data bytes / block align)."""
+    (_, channels, _, _, block_align, bits), data_len, _ = _wav_chunks(b)
     return {
         "width": int(channels),
         "height": int(bits),
@@ -277,7 +293,7 @@ def _decode_fake(payload: bytes, media_type: str) -> dict:
         "byte_len": n,
         "content_md5": md5,
         "width": 16 + n % 64,
-        "height": 16 + _HEX.index(md5[0]) * 4,
+        "height": 16 + HEX.index(md5[0]) * 4,
         "n_frames": 1 + n % 4 if media_type == "video" else 1,
     }
 
@@ -346,7 +362,7 @@ m AS (
                 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video'
            END AS media_type,
            16 + octet_length(encode(text)) % 64 AS iw,
-           16 + (strpos('{_HEX}', substr(md5(text), 1, 1)) - 1) * 4 AS ih
+           16 + (strpos('{HEX}', substr(md5(text), 1, 1)) - 1) * 4 AS ih
     FROM documents
 ), p AS (
     -- image rows are a real PPM container: ASCII header + text as pixels
@@ -364,7 +380,7 @@ m AS (
            CASE WHEN media_type = 'image' THEN iw
                 ELSE 16 + octet_length(encode(payload)) % 64 END AS width,
            CASE WHEN media_type = 'image' THEN ih
-                ELSE 16 + (strpos('{_HEX}', substr(md5(payload), 1, 1)) - 1) * 4
+                ELSE 16 + (strpos('{HEX}', substr(md5(payload), 1, 1)) - 1) * 4
            END AS height,
            CASE WHEN media_type = 'video'
                 THEN 1 + octet_length(encode(payload)) % 4 ELSE 1 END
@@ -434,8 +450,7 @@ def pixel_stats(media: DataFrame) -> DataFrame:
             for doc_id, payload in zip(pdf["doc_id"], pdf["media_bytes"]):
                 b = bytes(payload)
                 try:
-                    meta = _parse_ppm(b)  # header-derived dims (real parse)
-                    off = _ppm_plane_offset(b)
+                    w, h, off = _ppm_header(b)  # header-derived dims
                     if off > len(b):
                         raise ValueError("truncated ppm: no plane")
                     plane = np.frombuffer(b, dtype=np.uint8, offset=off)
@@ -443,8 +458,8 @@ def pixel_stats(media: DataFrame) -> DataFrame:
                     rows.append(
                         {
                             "doc_id": doc_id,
-                            "width": meta["width"],
-                            "height": meta["height"],
+                            "width": w,
+                            "height": h,
                             "n_plane_bytes": len(plane),
                             "pixel_sum": s,
                             "pixel_mean_milli": (1000 * s) // len(plane)
@@ -474,7 +489,7 @@ def pixel_stats(media: DataFrame) -> DataFrame:
 WITH m AS (
     SELECT doc_id, text,
            16 + octet_length(encode(text)) % 64 AS iw,
-           16 + (strpos('{_HEX}', substr(md5(text), 1, 1)) - 1) * 4 AS ih
+           16 + (strpos('{HEX}', substr(md5(text), 1, 1)) - 1) * 4 AS ih
     FROM documents WHERE CAST(doc_id % 3 AS INT) = 0
 )
 SELECT doc_id,
@@ -509,25 +524,6 @@ RESIZE_SCHEMA = (
 )
 
 
-def _ppm_plane_offset(b: bytes) -> int:
-    """Offset of the raw RGB plane inside a P6 container: after the third
-    header token's single terminating whitespace byte (comments allowed,
-    same tokenizer as ``_parse_ppm``)."""
-    toks_seen, i, n = 0, 2, len(b)
-    while toks_seen < 3 and i < n:
-        c = b[i : i + 1]
-        if c.isspace():
-            i += 1
-        elif c == b"#":
-            while i < n and b[i : i + 1] != b"\n":
-                i += 1
-        else:
-            while i < n and not b[i : i + 1].isspace():
-                i += 1
-            toks_seen += 1
-    return i + 1
-
-
 def resize_image(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
     """Nearest-neighbor image resize — binary in, binary out.
 
@@ -554,9 +550,7 @@ def resize_image(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
             for doc_id, payload in zip(pdf["doc_id"], pdf["media_bytes"]):
                 b = bytes(payload)
                 try:
-                    meta = _parse_ppm(b)
-                    w, h = meta["width"], meta["height"]
-                    off = _ppm_plane_offset(b)
+                    w, h, off = _ppm_header(b)
                     plane = np.frombuffer(b, dtype=np.uint8, offset=off)
                     if len(plane) != w * h * 3:
                         raise ValueError("plane length != w*h*3")
@@ -603,20 +597,10 @@ AUDIO_SCHEMA = (
 
 
 def _wav_pcm(b: bytes):
-    """(channels, sample_rate, bits, data_bytes) from a validated PCM WAV —
-    the ``_parse_wav`` chunk walk, but returning the raw data chunk for
-    sample-level features. 8-bit PCM is unsigned, 16-bit is signed LE."""
-    _parse_wav(b)  # full validation (riff size, fmt/data presence)
-    i, fmt, data = 12, None, None
-    while i + 8 <= len(b):
-        cid = b[i : i + 4]
-        (sz,) = struct.unpack_from("<I", b, i + 4)
-        if cid == b"fmt " and sz >= 16:
-            fmt = struct.unpack_from("<HHIIHH", b, i + 8)
-        elif cid == b"data":
-            data = b[i + 8 : i + 8 + sz]
-        i += 8 + sz + (sz % 2)
-    _, channels, rate, _, _, bits = fmt
+    """(channels, sample_rate, bits, data_bytes) from a validated PCM WAV
+    (``_wav_chunks``) for sample-level features. 8-bit PCM is unsigned,
+    16-bit is signed LE."""
+    (_, channels, rate, _, _, bits), _, data = _wav_chunks(b)
     if bits not in (8, 16):
         raise ValueError("unsupported pcm width")
     return int(channels), int(rate), int(bits), data
@@ -893,9 +877,7 @@ def ahash_image(media: DataFrame) -> DataFrame:
             for pos, payload in enumerate(pdf["media_bytes"]):
                 b = bytes(payload)
                 try:
-                    meta = _parse_ppm(b)  # real header parse
-                    off = _ppm_plane_offset(b)
-                    w, h = meta["width"], meta["height"]
+                    w, h, off = _ppm_header(b)  # real header parse
                     n = w * h
                     if n == 0 or n > 63 or len(b) - off != 3 * n:
                         raise ValueError("ahash: unsupported geometry")

@@ -14,7 +14,10 @@
   and HyperLogLog, each with exact-vs-estimate honesty columns and
   lossless partial merges.
 
-md5-hex values and KMV constants come from ``operators.hashing``.
+md5-hex values and the KMV sketch come from ``operators.hashing``. The
+skyline and co-occurrence queries run their streaming twins' partials
+and finalize (``finalize(partials(input))``), so batch and stream share
+one path.
 
 Determinism (catalog.py contract): money is DECIMAL inside aggregation
 and DOUBLE at the boundary; ratios are integer per-mille with
@@ -29,7 +32,14 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from .. import tables as T
-from ..operators.hashing import HEX, KMV_K, KMV_M, hexv, hexval_sql
+from ..operators.hashing import (
+    hexv,
+    hexval_sql,
+    kmv_estimate,
+    kmv_fold,
+    kmv_sql,
+    kmv_union,
+)
 from ..operators.minhash import is_trigram, shingle_sql, trigram_array
 from ..tables import MONEY
 from .catalog import query
@@ -41,87 +51,31 @@ from .catalog import query
 # so both engines compute the IDENTICAL estimate — unlike HLL, whose
 # register layouts differ per implementation).
 # ---------------------------------------------------------------------------
-KMV_SALT = 16  # k-min fold fanout: buckets per group in the partial agg
-
-
-def _kmv_group_sketch(e) -> DataFrame:
-    """Per-event_type KMV sketch via the k-min partial-aggregate fold:
-    hashes salted by their own leading hex digit into ``KMV_SALT`` buckets
-    (partitioning the hash space, so bucket k-mins merge losslessly and
-    bucket distinct counts are disjoint); each (group, salt) bucket folds
-    its distinct hashes to one sorted k-prefix via map-side-combinable
-    collect_set; the per-group merge sorts at most salt x k values.
-    Returns (event_type, n = exact distinct-hash count, kmin_all)."""
-    h = e.select(
-        "event_type", F.md5(F.col("user_id").cast("string")).alias("hx")
-    )
-    salted = h.withColumn(
-        "salt", F.expr(f"instr('{HEX}', substr(hx, 1, 1)) % {KMV_SALT}")
-    )
-    partial = (
-        salted.groupBy("event_type", "salt")
-        .agg(F.array_sort(F.collect_set("hx")).alias("hs"))
-        .select(
-            "event_type",
-            F.slice("hs", 1, KMV_K).alias("kmin"),
-            F.size("hs").cast("bigint").alias("n_bucket"),
-        )
-    )
-    return partial.groupBy("event_type").agg(
-        F.sum("n_bucket").alias("n"),
-        F.slice(
-            F.array_sort(F.flatten(F.collect_list("kmin"))), 1, KMV_K
-        ).alias("kmin_all"),
-    )
-
-
 @query(
     "llm_sketch_kmv_distinct",
     oracle=f"""
 WITH h AS (
     SELECT DISTINCT event_type, md5(CAST(user_id AS VARCHAR)) AS hx
     FROM events WHERE user_id IS NOT NULL
-), r AS (
-    SELECT event_type, hx,
-           row_number() OVER (PARTITION BY event_type ORDER BY hx) AS rn,
-           COUNT(*) OVER (PARTITION BY event_type) AS n
-    FROM h
-), kth AS (
-    SELECT event_type, n, {hexval_sql("hx", "strpos")} AS v
-    FROM r WHERE rn = LEAST(n, {KMV_K})
-), exact AS (
+), {kmv_sql("h", ["event_type"])}, exact AS (
     SELECT event_type, COUNT(DISTINCT user_id) AS ex
     FROM events WHERE user_id IS NOT NULL GROUP BY 1
 ), gh AS (
     SELECT DISTINCT hx FROM h
-), gr AS (
-    SELECT hx, row_number() OVER (ORDER BY hx) AS rn, COUNT(*) OVER () AS n
-    FROM gh
-), gkth AS (
-    SELECT n, {hexval_sql("hx", "strpos")} AS v
-    FROM gr WHERE rn = LEAST(n, {KMV_K})
-), gexact AS (
+), {kmv_sql("gh", name="gkth")}, gexact AS (
     SELECT COUNT(DISTINCT user_id) AS ex
     FROM events WHERE user_id IS NOT NULL
 )
 SELECT e.event_type,
        CAST(e.ex AS BIGINT) AS exact_distinct,
-       CAST(CASE WHEN k.n < {KMV_K} THEN k.n
-                 ELSE ({KMV_K - 1} * {KMV_M}) // greatest(k.v, 1) END AS BIGINT)
-           AS kmv_estimate,
-       CAST((1000 * abs(CASE WHEN k.n < {KMV_K} THEN k.n
-                 ELSE ({KMV_K - 1} * {KMV_M}) // greatest(k.v, 1) END - e.ex)) // e.ex
-            AS BIGINT) AS err_permille
+       CAST(k.est AS BIGINT) AS kmv_estimate,
+       CAST((1000 * abs(k.est - e.ex)) // e.ex AS BIGINT) AS err_permille
 FROM exact e JOIN kth k ON e.event_type = k.event_type
 UNION ALL
 SELECT '(all)' AS event_type,
        CAST(e.ex AS BIGINT) AS exact_distinct,
-       CAST(CASE WHEN k.n < {KMV_K} THEN k.n
-                 ELSE ({KMV_K - 1} * {KMV_M}) // greatest(k.v, 1) END AS BIGINT)
-           AS kmv_estimate,
-       CAST((1000 * abs(CASE WHEN k.n < {KMV_K} THEN k.n
-                 ELSE ({KMV_K - 1} * {KMV_M}) // greatest(k.v, 1) END - e.ex)) // e.ex
-            AS BIGINT) AS err_permille
+       CAST(k.est AS BIGINT) AS kmv_estimate,
+       CAST((1000 * abs(k.est - e.ex)) // e.ex AS BIGINT) AS err_permille
 FROM gexact e, gkth k
 """,
     tags=("llm-text", "sketch"),
@@ -145,7 +99,8 @@ def llm_sketch_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape — the k-min PARTIAL-AGGREGATE FOLD (r04, replacing the
     r02 per-group distinct-sort window, which single-threads on a hot
     event_type): hashes are salted by their own leading bits into
-    ``KMV_SALT`` buckets; each (group, salt) bucket folds its distinct
+    ``KMV_SALT`` buckets (``operators.hashing.kmv_fold``, the one fold
+    of every KMV sketch); each (group, salt) bucket folds its distinct
     hashes to ONE sorted k-prefix array via a map-side-combinable
     collect_set (buffer = bucket-local distinct set — sized by the salt
     fanout, never the group); the per-group merge then sorts at most
@@ -157,8 +112,8 @@ def llm_sketch_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     The ``(all)`` row is the mergeability proof: union(sketch_a, sketch_b)
     = k smallest of (kmin_a ∪ kmin_b), because every one of the global k
     smallest hashes is necessarily inside its own group's k-min set. The
-    merge input is G x k values (G = event types) and crucially DEDUPS
-    the hash multiset (one user active in several types appears in
+    merge (``kmv_union``) input is G x k values (G = event types) and
+    crucially DEDUPS the hash multiset (one user active in several types appears in
     several sketches). The oracle computes the identical estimate from
     the raw key universe; exact equality of the two paths is the proof.
     When the merged set holds fewer than k values it IS the exact union,
@@ -167,71 +122,43 @@ def llm_sketch_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     the CLAUDE.md localCheckpoint class — so it is checkpointed once.
     """
     e = T.load(spark, sf_dir, "events", spread=False).filter(F.col("user_id").isNotNull())
-    sketch = _kmv_group_sketch(e).localCheckpoint()
-    kth = sketch.select(
-        "event_type",
-        "n",
-        F.expr(
-            hexval_sql(
-                f"element_at(kmin_all, cast(least(n, {KMV_K}) as int))", "instr"
-            )
-        ).alias("v"),
-    )
+    sketch = kmv_fold(
+        e.select("event_type", F.md5(F.col("user_id").cast("string")).alias("hx")),
+        ["event_type"],
+    ).localCheckpoint()
+    err = F.expr("cast((1000 * abs(kmv_estimate - ex)) div ex as bigint)")
     exact = e.groupBy("event_type").agg(
         F.countDistinct("user_id").alias("ex")
     )
-    est = F.when(F.col("n") < KMV_K, F.col("n")).otherwise(
-        F.expr(f"({KMV_K - 1} * {KMV_M}) div greatest(v, 1)")
-    )
     per_type = (
-        exact.join(kth, "event_type")
-        .withColumn("kmv_estimate", est.cast("bigint"))
+        exact.join(sketch, "event_type")
+        .withColumn("kmv_estimate", kmv_estimate())
         .select(
             "event_type",
             F.col("ex").cast("bigint").alias("exact_distinct"),
             "kmv_estimate",
-            F.expr("cast((1000 * abs(kmv_estimate - ex)) div ex as bigint)").alias(
-                "err_permille"
-            ),
+            err.alias("err_permille"),
         )
     )
-    merged = sketch.select("kmin_all").agg(
-        F.slice(
-            F.array_sort(F.array_distinct(F.flatten(F.collect_list("kmin_all")))),
-            1,
-            KMV_K,
-        ).alias("km")
-    ).filter(
+    merged = (
+        kmv_union(sketch)
         # an ungrouped agg emits one row even on EMPTY input; the oracle's
-        # gkth CTE emits zero — filter the empty sketch out (element_at(km,
-        # 0) would also raise INVALID_INDEX_OF_ZERO) so both engines
-        # return an empty result set
-        F.size("km") > 0
-    ).select(
-        F.size("km").cast("bigint").alias("m"),
-        F.expr(
-            hexval_sql(
-                f"element_at(km, cast(least(size(km), {KMV_K}) as int))", "instr"
-            )
-        ).alias("v"),
-        F.lit(1).alias("jk"),
+        # gkth CTE emits zero — filter the empty sketch out so both
+        # engines return an empty result set
+        .filter(F.col("n") > 0)
+        .withColumn("jk", F.lit(1))
     )
     gexact = e.agg(F.countDistinct("user_id").alias("ex")).withColumn(
         "jk", F.lit(1)
     )
-    gest = F.when(F.col("m") < KMV_K, F.col("m")).otherwise(
-        F.expr(f"({KMV_K - 1} * {KMV_M}) div greatest(v, 1)")
-    )
     all_row = (
         gexact.join(merged, "jk")  # 1-row x 1-row equi join on a constant key
-        .withColumn("kmv_estimate", gest.cast("bigint"))
+        .withColumn("kmv_estimate", kmv_estimate())
         .select(
             F.lit("(all)").alias("event_type"),
             F.col("ex").cast("bigint").alias("exact_distinct"),
             "kmv_estimate",
-            F.expr("cast((1000 * abs(kmv_estimate - ex)) div ex as bigint)").alias(
-                "err_permille"
-            ),
+            err.alias("err_permille"),
         )
     )
     return per_type.unionByName(all_row)
@@ -1796,24 +1723,13 @@ def f_skyline_pareto_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     descending-revenue order — and joins back by broadcast. The oracle's
     quadratic NOT EXISTS is the spec, not the plan; the sort-filter
     collapse is exactly equivalent in 2-D (test_skyline_matches_quadratic
-    pins it on random frontiers).
+    pins it on random frontiers). The plan is the streaming twin's:
+    ``skyline_finalize(skyline_agg_partials(lineitem), supplier)`` — the
+    re-sum over one partial per supplier adds no exchange.
     """
     li = T.load(spark, sf_dir, "lineitem", spread=False)
     sup = T.load(spark, sf_dir, "supplier", spread=False).select("s_suppkey", "s_name")
-    agg = li.groupBy(F.col("l_suppkey").alias("s_suppkey")).agg(
-        F.sum(
-            F.col("l_extendedprice").cast(MONEY)
-            * (F.lit(1).cast(MONEY) - F.col("l_discount").cast(MONEY))
-        ).alias("rev"),
-        F.sum(F.col("l_quantity").cast(MONEY)).alias("qty"),
-    )
-    sky = pareto_frontier_2d(agg)
-    return sky.join(F.broadcast(sup), "s_suppkey").select(
-        "s_suppkey",
-        "s_name",
-        F.col("rev").cast("double").alias("revenue"),
-        F.col("qty").cast("double").alias("total_qty"),
-    )
+    return skyline_finalize(skyline_agg_partials(li), sup)
 
 
 def pareto_frontier_2d(pts: DataFrame) -> DataFrame:
@@ -1901,20 +1817,13 @@ def dws_event_cooccurrence_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     basket's sorted type-set array into its <= C(T,2) combinations (T =
     |event types|, a small constant) — never a basket self-join, so no
     shuffle ever carries more than the collapsed frame. Marginals and the
-    basket count broadcast back onto the tiny pair-count frame.
+    basket count broadcast back onto the tiny pair-count frame. The plan
+    is the streaming twin's, ``cooccurrence_finalize(
+    cooccurrence_ut_partials(events))``: the finalize re-distinct of an
+    already distinct frame is removed by the optimizer.
     """
     e = T.load(spark, sf_dir, "events", spread=False)
-    ut = (
-        e.filter(F.col("user_id").isNotNull() & F.col("event_type").isNotNull())
-        .select(
-            "user_id",
-            F.date_format("ts", "yyyy-MM-dd").alias("day"),
-            "event_type",
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-    return cooccurrence_lift(ut)
+    return cooccurrence_finalize(cooccurrence_ut_partials(e))
 
 
 def cooccurrence_lift(ut: DataFrame) -> DataFrame:
@@ -1970,12 +1879,11 @@ def cooccurrence_lift(ut: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming accumulate-then-finalize twins for the skyline and
-# co-occurrence queries (the partials discipline of the sketch and DQ
-# families, applied at birth; the reservoir and PCA twins sit with their
-# queries in corpus_queries / retrieval_queries). Each partial is
-# mergeable by construction; each union-of-batches == one-shot identity
-# is pinned in tests/test_round7_ext.py.
+# Accumulate-then-finalize twins of the skyline and co-occurrence
+# queries: each registered query above is finalize(partials(input)), and
+# a streaming twin folds micro-batch partials into the same finalize.
+# Each partial is mergeable by construction; each union-of-batches ==
+# one-shot identity is pinned in tests/test_round7_ext.py.
 # ---------------------------------------------------------------------------
 
 

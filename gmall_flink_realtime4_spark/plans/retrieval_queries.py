@@ -2386,16 +2386,46 @@ def llm_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan of documents survives to the final plan (corpus constants); the
     token scan runs once inside the checkpointed tf job."""
     d = T.load(spark, sf_dir, "documents")
-    q = bm25_query_frame(spark)
-    # tf feeds TWO consumers (the df agg + the score join) and is tiny
-    # next to the corpus (doc_id/dl/term/tf for query-vocab terms only)
-    # — checkpoint so the corpus token scan runs once, not twice
-    tf = bm25_tf_rows(d).localCheckpoint()
-    g = d.select(
+    tf, stats = bm25_index_partials(d)
+    return bm25_score_topk(tf.localCheckpoint(), stats, bm25_query_frame(spark))
+
+
+def bm25_index_partials(docs_batch: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """One micro-batch's BM25 index contribution: the (doc_id, dl, term,
+    tf) inverted-index rows for the query vocabulary (append-only — docs
+    are immutable, so a doc's rows are final in its arrival batch) and
+    the mergeable 1-row (n, a) corpus-stats partial. ``llm_bm25_topk``
+    scores the whole corpus's partials."""
+
+    tf = bm25_tf_rows(docs_batch)
+    stats = docs_batch.select(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum(F.size(F.split("text", " "))).cast("bigint").alias("a"),
     )
-    return bm25_score_topk(tf, g, q)
+    return tf, stats
+
+
+def bm25_finalize(
+    spark: SparkSession, tf_all: DataFrame, stats_all: DataFrame
+) -> DataFrame:
+    """Merge accumulated index partials into the one-shot BM25 top-K:
+    union'ed tf rows pass through unchanged (df is DERIVED from them, so
+    no df state exists to go stale), stats partials fold by SUM. Equal to
+    the batch query over the concatenated corpus
+    (tests/test_round6_ext.py::test_incremental_bm25_index_matches_batch).
+    tf feeds TWO consumers (the df agg + the score join) and is tiny next
+    to the corpus (query-vocabulary terms only), so both this merge and
+    the batch query checkpoint it: the token scan runs once, not twice.
+    The batch query skips only the stats re-sum (one partial row).
+    """
+
+    g = stats_all.agg(
+        F.sum("n").cast("bigint").alias("n"),
+        F.sum("a").cast("bigint").alias("a"),
+    )
+    return bm25_score_topk(
+        tf_all.localCheckpoint(), g, bm25_query_frame(spark)
+    )
 
 
 def bm25_tf_rows(d: DataFrame) -> DataFrame:
@@ -2564,24 +2594,14 @@ def pca_power_step(emb: DataFrame) -> DataFrame:
     return pca_assemble(pca_dim_frame(emb))
 
 
-# Streaming accumulate-then-finalize twin: the partial is mergeable by
-# construction; union-of-batches == one-shot is pinned in
-# tests/test_round7_ext.py.
-def pca_dim_partials(emb_batch: DataFrame) -> DataFrame:
-    """Mergeable per-batch partials for the power step: the per-dimension
-    (n_rows, a, s) sufficient statistics of one embedding slice. Every
-    term is row-local (r_n is a within-row sum), so partials re-sum
-    losslessly — streaming state is a 64-row decimal table per batch,
-    never vectors. Finalize = re-sum by pos + ``pca_assemble``;
-    union-of-batches == one-shot pinned by
-    test_incremental_pca_partials_merge."""
-    return pca_dim_frame(emb_batch)
-
-
 def pca_finalize(parts: DataFrame) -> DataFrame:
-    """Power-step output from accumulated dim partials (decimal sums
-    commute and stay in-range: the merged a/s are the same values the
-    one-shot aggregate produces)."""
+    """Power-step output from accumulated per-batch ``pca_dim_frame``
+    partials: the per-dimension (n_rows, a, s) sufficient statistics are
+    row-local, so they re-sum losslessly by pos (decimal sums commute and
+    stay in-range: the merged a/s are the same values the one-shot
+    aggregate produces) before the same ``pca_assemble``. Streaming state
+    is a 64-row decimal table per batch, never vectors; union-of-batches
+    == one-shot is pinned by test_incremental_pca_partials_merge."""
     dim = parts.groupBy("pos").agg(
         F.sum("n_rows").cast("bigint").alias("n_rows"),
         F.sum("a").cast("decimal(24,14)").alias("a"),

@@ -1466,36 +1466,23 @@ def quality_train_design(feats: DataFrame) -> DataFrame:
     )
 
 
-def _gram_aggs() -> list:
-    """The 28 aggregate expressions (27 exact-decimal sums + count) —
-    shared by the one-shot query and the per-batch streaming partials so
-    the two paths cannot drift."""
-    return (
-        [F.expr(f"SUM({a} * {b})").alias(f"s_{a}_{b}") for a, b in TRAIN_PAIRS]
-        + [F.expr(f"SUM({a} * y)").alias(f"s_{a}_y") for a in TRAIN_FEATS]
-        + [F.count(F.lit(1)).alias("n")]
-    )
-
-
-def _stack_cells(value_sql: str) -> str:
-    """stack() argument list unpivoting the 1-row aggregate into the
-    27-cell long form; ``value_sql`` formats each sum column (boundary
-    double cast for the query output, raw decimal for partials)."""
-    names = TRAIN_PAIRS + [(a, "y") for a in TRAIN_FEATS]
-    cols = [f"s_{a}_{b}" if b != "y" else f"s_{a}_y" for a, b in names]
-    return ", ".join(
-        f"'{a}', '{b}', {value_sql.format(c)}"
-        for (a, b), c in zip(names, cols)
-    )
-
-
 def quality_train_gram(x: DataFrame) -> DataFrame:
-    """One ungrouped (map-side-combinable) aggregate of the 28 scalars,
-    then the 27-row unpivot on the single result row."""
-    g = x.agg(*_gram_aggs())
+    """The 27 output cells of a design frame."""
+    return _gram_report(_gram_cells(x))
+
+
+def _gram_cells(x: DataFrame) -> DataFrame:
+    """One ungrouped (map-side-combinable) aggregate of the 28 scalars
+    (27 exact-decimal sums + count), then the 27-row unpivot on the
+    single result row; sums stay exact DECIMAL."""
+    cells = TRAIN_PAIRS + [(a, "y") for a in TRAIN_FEATS]
+    g = x.agg(
+        *[F.expr(f"SUM({a} * {b})").alias(f"s_{a}_{b}") for a, b in cells],
+        F.count(F.lit(1)).alias("n"),
+    )
+    stack = ", ".join(f"'{a}', '{b}', s_{a}_{b}" for a, b in cells)
     return g.selectExpr(
-        f"stack(27, {_stack_cells('CAST({} AS DOUBLE)')})"
-        " AS (row_feat, col_feat, sum_prod)",
+        f"stack(27, {stack}) AS (row_feat, col_feat, sum_prod_dec)",
         "CAST(n AS BIGINT) AS n_rows",
     )
 
@@ -1529,14 +1516,15 @@ def llm_quality_train_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     of it).
     """
     d = T.load(spark, sf_dir, "documents")
-    feats = quality_features(d, carry=("lang",)).drop("doc_id")
-    return quality_train_gram(quality_train_design(feats))
+    return _gram_report(quality_train_partials(d))
 
 
 # ---------------------------------------------------------------------------
-# Streaming twin — accumulate-then-finalize: sufficient statistics are
-# distributive, so the per-batch partial IS the same 28-scalar aggregate
-# (kept exact-decimal, no boundary cast); finalize merges by cell.
+# Accumulate-then-finalize: sufficient statistics are distributive, so the
+# per-batch partial IS the same 28-scalar aggregate (kept exact-decimal,
+# no boundary cast); finalize merges by cell. The registered query is the
+# DOUBLE boundary over the partials of the whole corpus; it skips only
+# finalize's re-sum (one partial row per cell), which measured slower.
 # ---------------------------------------------------------------------------
 
 
@@ -1544,22 +1532,27 @@ def quality_train_partials(docs: DataFrame) -> DataFrame:
     """Per-batch sufficient statistics in long form, sums still exact
     DECIMAL (the boundary double cast happens only at finalize, so batch
     splits can never introduce rounding the one-shot path lacks)."""
-    x = quality_train_design(
-        quality_features(docs, carry=("lang",)).drop("doc_id")
-    )
-    g = x.agg(*_gram_aggs())
-    return g.selectExpr(
-        f"stack(27, {_stack_cells('{}')})"
-        " AS (row_feat, col_feat, sum_prod_dec)",
-        "CAST(n AS BIGINT) AS n_rows",
+    return _gram_cells(
+        quality_train_design(quality_features(docs, carry=("lang",)).drop("doc_id"))
     )
 
 
 def quality_train_finalize(partials: DataFrame) -> DataFrame:
-    """Merge accumulated per-batch partials into the one-shot output:
-    integer-exact decimal sums merge associatively, then the same DOUBLE
-    boundary cast the registered query applies."""
-    return partials.groupBy("row_feat", "col_feat").agg(
-        F.sum("sum_prod_dec").cast("double").alias("sum_prod"),
-        F.sum("n_rows").cast("bigint").alias("n_rows"),
+    """Merge accumulated per-batch partials into the output: integer-exact
+    decimal sums merge associatively, then the DOUBLE boundary cast."""
+    return _gram_report(
+        partials.groupBy("row_feat", "col_feat").agg(
+            F.sum("sum_prod_dec").alias("sum_prod_dec"),
+            F.sum("n_rows").cast("bigint").alias("n_rows"),
+        )
+    )
+
+
+def _gram_report(cells: DataFrame) -> DataFrame:
+    """The DOUBLE boundary of the 27 exact-decimal cells."""
+    return cells.select(
+        "row_feat",
+        "col_feat",
+        F.col("sum_prod_dec").cast("double").alias("sum_prod"),
+        "n_rows",
     )

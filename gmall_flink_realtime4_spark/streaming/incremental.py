@@ -1,6 +1,8 @@
 """Streaming-incremental twins: the foreachBatch forms of the near-dup
 queries (MinHash-LSH, image aHash, winnowing) and the accumulate/finalize
-halves of the mergeable ones (clusters, BM25, PQ training).
+halves of the near-dup clusters and PQ training. The other
+accumulate-then-finalize twins sit next to their queries in ``plans/``,
+where each registered query runs its twin's ``*_partials``.
 
 One candidate-and-verify path per near-dup family serves the batch query
 and its twin: ``minhash_candidates``/``minhash_verify``
@@ -76,11 +78,6 @@ from ..plans.dedup_queries import (
     winnow_sizes,
 )
 from ..plans.llm_multimodal import ahash_image, ahash_pairs
-from ..plans.retrieval_queries import (
-    bm25_query_frame,
-    bm25_score_topk,
-    bm25_tf_rows,
-)
 
 
 def _read_state(
@@ -237,40 +234,6 @@ def incremental_winnow_pairs(
     )
     fp_b.write.mode("overwrite").parquet(f"{fps_path}/batch_id={batch_id}")
     return out
-
-
-def bm25_index_partials(docs_batch: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """One micro-batch's BM25 index contribution: the (doc_id, dl, term,
-    tf) inverted-index rows for the query vocabulary (append-only — docs
-    are immutable, so a doc's rows are final in its arrival batch) and
-    the mergeable 1-row (n, a) corpus-stats partial. The streaming
-    accumulate side of `plans.retrieval_queries.llm_bm25_topk`."""
-
-    tf = bm25_tf_rows(docs_batch)
-    stats = docs_batch.select(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(F.size(F.split("text", " "))).cast("bigint").alias("a"),
-    )
-    return tf, stats
-
-
-def bm25_finalize(
-    spark: SparkSession, tf_all: DataFrame, stats_all: DataFrame
-) -> DataFrame:
-    """Merge accumulated index partials into the one-shot BM25 top-K:
-    union'ed tf rows pass through unchanged (df is DERIVED from them, so
-    no df state exists to go stale), stats partials fold by SUM. Equal to
-    the batch query over the concatenated corpus
-    (tests/test_round6_ext.py::test_incremental_bm25_index_matches_batch).
-    """
-
-    g = stats_all.agg(
-        F.sum("n").cast("bigint").alias("n"),
-        F.sum("a").cast("bigint").alias("a"),
-    )
-    return bm25_score_topk(
-        tf_all.localCheckpoint(), g, bm25_query_frame(spark)
-    )
 
 
 def pq_train_partials(emb_batch: DataFrame, codebook: DataFrame) -> DataFrame:

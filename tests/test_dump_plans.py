@@ -27,3 +27,16 @@ def test_masked_explain_is_stable_across_lambda_counter(spark, sf_dir):
     second = _masked_explain(spark, sf_dir, "llm_text_repetition")
     assert "lambda x_" in first
     assert first == second
+
+
+def test_masked_checkpoint_call_site_is_session_independent():
+    # Spark records where a checkpointed RDD was created; the text depends
+    # on which query the session built first
+    site = (
+        "Arguments: [doc_id#{}L], MapPartitionsRDD[{}]"
+        " at localCheckpoint at {}, ExistingRDD"
+    )
+    first = mask_ids(site.format(12, 40, "<unknown>:0"))
+    later = mask_ids(site.format(97, 311, "NativeMethodAccessorImpl.java:0"))
+    assert first == later
+    assert "localCheckpoint" in first

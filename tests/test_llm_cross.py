@@ -129,9 +129,7 @@ def test_kmv_union_equals_single_global_sketch(spark):
         KMV_K,
         KMV_M,
         hexval_sql,
-    )
-    from gmall_flink_realtime4_spark.plans.olap_queries import (
-        _kmv_group_sketch,
+        kmv_fold,
     )
 
     union_row = next(
@@ -145,11 +143,12 @@ def test_kmv_union_equals_single_global_sketch(spark):
         .filter(FF.col("user_id").isNotNull())
         .withColumn("event_type", FF.lit("_all"))
     )
-    g = _kmv_group_sketch(e).select(
+    hx = FF.md5(FF.col("user_id").cast("string")).alias("hx")
+    g = kmv_fold(e.select("event_type", hx), ["event_type"]).select(
         "n",
         FF.expr(
             hexval_sql(
-                f"element_at(kmin_all, cast(least(n, {KMV_K}) as int))", "instr"
+                f"element_at(kmin, cast(least(n, {KMV_K}) as int))", "instr"
             )
         ).alias("v"),
     ).collect()[0]

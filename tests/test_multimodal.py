@@ -204,9 +204,12 @@ def test_resize_image_nearest_neighbor_exact(spark):
     when out dims == src dims. Non-PPM payloads land in the row-level
     error channel (ok=false, NULL payload) without failing the batch."""
     from gmall_flink_realtime4_spark.plans.llm_multimodal import (
-        _ppm_plane_offset,
+        _ppm_header,
         resize_image,
     )
+
+    def _ppm_plane_offset(b: bytes) -> int:
+        return _ppm_header(b)[2]
 
     src_w, src_h, out_w, out_h = 8, 6, 4, 3
     fixtures = [

@@ -23,7 +23,10 @@ never count:
   ``operators/minhash.py``;
 - the streaming near-dup twins write no pair join and no doc-id
   orientation of their own: each calls its family's pair path, built on
-  ``operators.joins.candidate_pairs``.
+  ``operators.joins.candidate_pairs``;
+- every public ``*_partials`` function is reached from a registered query
+  (the query runs its twin's steps; the twin owns only its merge);
+- the KMV sketch is written once per engine, in ``operators/hashing.py``.
 """
 
 from __future__ import annotations
@@ -323,4 +326,118 @@ def test_streaming_twins_have_no_pair_join():
     assert not found, (
         "streaming/incremental.py pairs docs itself; call the family's pair"
         f" path (operators.joins.candidate_pairs underneath): {found}"
+    )
+
+
+# Twins whose batch query keeps a head of its own, with the reason.
+_PARTIALS_EXEMPT = {
+    # composes shared operators/pq functions only; the batch trainer
+    # reuses one checkpointed ``subint`` across its Lloyd steps, where the
+    # partial would re-derive it per step
+    "pq_train_partials",
+}
+
+
+def test_every_partials_function_runs_in_a_registered_query():
+    """A batch query and its streaming twin share one path: the query
+    calls the twin's ``*_partials`` (directly or through package
+    functions), so the accumulate step cannot drift from the batch plan."""
+    calls: dict[str, set[str]] = {}
+    todo = []
+    for tree in _package_modules().values():
+        for fn in tree.body:
+            if isinstance(fn, ast.FunctionDef):
+                calls.setdefault(fn.name, set()).update(_referenced_names(fn))
+                if _is_registered_query(fn):
+                    todo.append(fn.name)
+    reached = set()
+    while todo:
+        name = todo.pop()
+        if name not in reached:
+            reached.add(name)
+            todo += [n for n in calls.get(name, ()) if n in calls]
+    orphans = sorted(
+        n
+        for n in calls
+        if n.endswith("_partials")
+        and not n.startswith("_")
+        and n not in reached
+        and n not in _PARTIALS_EXEMPT
+    )
+    assert not orphans, f"*_partials no registered query runs: {orphans}"
+
+
+def _rendered_strings(tree: ast.Module):
+    """(node, text) for every string in ``tree`` outside docstrings; an
+    f-string renders its fields as ``{<source>}``."""
+    docs = _docstring_ids(tree)
+    parts = {
+        id(v)
+        for n in ast.walk(tree)
+        if isinstance(n, ast.JoinedStr)
+        for v in n.values
+    }
+    for node in ast.walk(tree):
+        if id(node) in docs or id(node) in parts:
+            continue
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            yield node, node.value
+        elif isinstance(node, ast.JoinedStr):
+            yield node, "".join(
+                v.value
+                if isinstance(v, ast.Constant)
+                else "{" + ast.unparse(v.value) + "}"
+                for v in node.values
+            )
+
+
+# The KMV estimator ``(k - 1) * M div v`` (Spark) / ``// v`` (DuckDB).
+_KMV_EST = re.compile(r"KMV_K\s*-\s*1\}?\)?\s*\*\s*\{?KMV_M\}?\)?\s*(div|//)")
+# The ranked k-th CTE: the row ranked k (or the last one below k).
+_KMV_KTH = re.compile(r"\brn\s*=\s*LEAST\(\s*n\s*,", re.IGNORECASE)
+# The salt of the k-min fold: the hash's leading hex digit, mod a fanout.
+_KMV_SALT = re.compile(r"substr\(\s*[\w{}]+\s*,\s*1\s*,\s*1\s*\)\s*\)\s*%")
+
+
+def test_kmv_sketch_exists_once_per_engine():
+    """The Spark k-min fold (salt + k-prefix slices), the sketch union
+    and the estimator live in ``operators/hashing.py``'s ``kmv_*``
+    helpers, the DuckDB estimator and k-th CTE in its ``kmv_sql``
+    builder: every KMV query and oracle calls them."""
+    home = "operators/hashing.py"
+    found: dict[str, set[tuple[str, str]]] = {}
+    for path, tree in sorted(_package_modules().items()):
+        rel = path.relative_to(PKG).as_posix()
+        owner = {
+            id(n): getattr(top, "name", "<module>")
+            for top in tree.body
+            for n in ast.walk(top)
+        }
+        for node, text in _rendered_strings(tree):
+            site = (rel, owner[id(node)])
+            for m in _KMV_EST.finditer(text):
+                engine = "spark" if m[1] == "div" else "duckdb"
+                found.setdefault(f"{engine} estimator", set()).add(site)
+            if _KMV_KTH.search(text):
+                found.setdefault("duckdb k-th CTE", set()).add(site)
+            if _KMV_SALT.search(text):
+                found.setdefault("spark fold salt", set()).add(site)
+        for node in ast.walk(tree):
+            if _call_name(node) == "slice" and any(
+                isinstance(a, ast.Name) and a.id == "KMV_K" for a in node.args
+            ):
+                site = (rel, owner[id(node)])
+                found.setdefault("spark k-prefix", set()).add(site)
+    homes = {
+        "spark estimator": {(home, "kmv_estimate")},
+        "duckdb estimator": {(home, "kmv_sql")},
+        "duckdb k-th CTE": {(home, "kmv_sql")},
+        "spark fold salt": {(home, "kmv_salt")},
+        "spark k-prefix": {(home, "kmv_merge"), (home, "kmv_union")},
+    }
+    wrong = {k: sorted(found.get(k, set()) ^ v) for k, v in homes.items()}
+    wrong = {k: v for k, v in wrong.items() if v}
+    assert not wrong, (
+        "the KMV sketch must be written once per engine, in"
+        f" {home} (missing or surplus sites): {wrong}"
     )

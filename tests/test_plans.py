@@ -221,16 +221,15 @@ def test_kmv_sketch_is_partial_agg_fold_no_window(spark):
     import pyspark.sql.functions as F
 
     from gmall_flink_realtime4_spark import tables as T
-    from gmall_flink_realtime4_spark.plans.olap_queries import (
-        _kmv_group_sketch,
-    )
+    from gmall_flink_realtime4_spark.operators.hashing import kmv_fold
 
     # 1) the sketch generator itself (pre-checkpoint): the salted fold,
     # never a Window/row_number over the hash universe
     e = T.load(spark, SF, "events").filter(F.col("user_id").isNotNull())
+    hx = F.md5(F.col("user_id").cast("string")).alias("hx")
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        _kmv_group_sketch(e).explain("formatted")
+        kmv_fold(e.select("event_type", hx), ["event_type"]).explain("formatted")
     sk = buf.getvalue()
     assert "Window" not in sk
     assert "row_number" not in sk
@@ -799,3 +798,21 @@ def test_quality_train_step_single_pass_no_expand(spark):
     from tools.plan_audit import raw_fact_broadcasts
 
     assert raw_fact_broadcasts(plan) == []
+
+
+def test_winnow_df_cap_keep_aggregation_shuffles_once(spark):
+    """llm_winnow_fingerprints applies the MOSS df cap as a pre-filter on
+    both self-join sides, so its plan holds the ``keep`` aggregation
+    (fingerprint -> doc count) once per side. The FINAL adaptive plan must
+    run its shuffle once: the second side reads it as a ReusedExchange of
+    the fingerprint-keyed exchange."""
+    import re
+
+    from tools.plan_audit import _final_plan
+
+    final = _final_plan(queries()["llm_winnow_fingerprints"](spark, SF))
+    assert "isFinalPlan=true" in final
+    keyed = r"Exchange hashpartitioning\(f#\d+L?, \d+\)"
+    reused = r"ReusedExchange \[f#\d+L?, count#\d+L?\], " + keyed
+    assert len(re.findall(reused, final)) == 1
+    assert len(re.findall(r"\+- " + keyed, final)) == 1

@@ -1936,7 +1936,6 @@ def test_reservoir_merge_invariant_to_batching(spark, ids, k, n_batches, seed):
     from gmall_flink_realtime4_spark.plans.corpus_queries import (
         reservoir_finalize,
         reservoir_partials,
-        reservoir_sample,
     )
 
     rng = random.Random(seed)
@@ -1957,6 +1956,8 @@ def test_reservoir_merge_invariant_to_batching(spark, ids, k, n_batches, seed):
     ]
     want = [
         (r["rnk"], r["doc_id"], r["u"])
-        for r in reservoir_sample(d, k=k).orderBy("rnk").collect()
+        for r in reservoir_finalize(reservoir_partials(d, k=k), k=k)
+        .orderBy("rnk")
+        .collect()
     ]
     assert got == want and len(got) == min(k, len(ids))

@@ -128,7 +128,7 @@ def test_incremental_bm25_soak_restart(spark, tmp_path):
     every score (df, idf, and the length norm all shift). After the
     restart, finalize over the accumulated state must equal the one-shot
     llm_bm25_topk exactly."""
-    from gmall_flink_realtime4_spark.streaming.incremental import (
+    from gmall_flink_realtime4_spark.plans.retrieval_queries import (
         bm25_finalize,
         bm25_index_partials,
     )

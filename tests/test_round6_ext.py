@@ -1036,7 +1036,7 @@ def test_incremental_bm25_index_matches_batch(spark):
     and (n, a) stats partials fold by SUM to exactly the registered
     query's top-K."""
     from gmall_flink_realtime4_spark import tables as T
-    from gmall_flink_realtime4_spark.streaming.incremental import (
+    from gmall_flink_realtime4_spark.plans.retrieval_queries import (
         bm25_finalize,
         bm25_index_partials,
     )
@@ -1612,15 +1612,15 @@ def test_incremental_lsh_curve_partials_merge(spark):
     cross-batch candidate/truth pairs (doc_id % 3 splits co-shingled
     docs across batches by construction)."""
     from gmall_flink_realtime4_spark import tables as T
+    from gmall_flink_realtime4_spark.operators.minhash import shingles
     from gmall_flink_realtime4_spark.plans.dedup_queries import (
         lsh_curve_finalize,
-        lsh_curve_shingle_partials,
     )
 
     d = T.load(spark, SF, "documents")
     parts = None
     for bid in range(3):
-        b = lsh_curve_shingle_partials(d.filter(F.col("doc_id") % 3 == bid))
+        b = shingles(d.filter(F.col("doc_id") % 3 == bid)).drop("n_sh")
         parts = b if parts is None else parts.unionByName(b)
     cols = [
         "bands", "rows_per_band", "n_candidates", "n_true_pairs",

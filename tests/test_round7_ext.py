@@ -12,7 +12,8 @@ from pyspark.sql import functions as F
 
 from gmall_flink_realtime4_spark.plans.corpus_queries import (
     RES_K,
-    reservoir_sample,
+    reservoir_finalize,
+    reservoir_partials,
 )
 from gmall_flink_realtime4_spark.plans.olap_queries import (
     cooccurrence_lift,
@@ -216,8 +217,9 @@ def test_reservoir_two_phase_equals_global(spark):
         )
         got = [
             (r["rnk"], r["doc_id"], r["u"])
-            for r in reservoir_sample(d, k=k, salt=salt)
-            .orderBy("rnk")
+            for r in reservoir_finalize(
+                reservoir_partials(d, k=k, salt=salt), k=k
+            ).orderBy("rnk")
             .collect()
         ]
         want = sorted(((_u48(i), i) for i in ids))[:k]
@@ -225,8 +227,8 @@ def test_reservoir_two_phase_equals_global(spark):
 
 
 def test_reservoir_registered_query_is_k_rows(spark):
-    out = reservoir_sample(
-        spark.read.parquet(f"{SF}/documents.parquet")
+    out = reservoir_finalize(
+        reservoir_partials(spark.read.parquet(f"{SF}/documents.parquet"))
     ).collect()
     assert len(out) == RES_K
     assert len({r["doc_id"] for r in out}) == RES_K
@@ -401,14 +403,14 @@ def test_incremental_pca_partials_merge(spark):
     from gmall_flink_realtime4_spark import tables as T
     from gmall_flink_realtime4_spark.plans.catalog import queries
     from gmall_flink_realtime4_spark.plans.retrieval_queries import (
-        pca_dim_partials,
+        pca_dim_frame,
         pca_finalize,
     )
 
     emb = T.load(spark, SF, "embeddings")
     parts = None
     for bid in range(3):
-        b = pca_dim_partials(emb.filter(F.col("vec_id") % 3 == bid))
+        b = pca_dim_frame(emb.filter(F.col("vec_id") % 3 == bid))
         parts = b if parts is None else parts.unionByName(b)
     cols = ["n", "s_e9", "a_e9", "v1_floor"]
     got = {

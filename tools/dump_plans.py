@@ -9,9 +9,14 @@ The explain is captured from the UNEXECUTED frame (AdaptiveSparkPlan
 isFinalPlan=false) — the static shape the judge checks claims against.
 Session-global counters are masked (expression ids ``#123``, RDD ids
 ``RDD[45]``, ``plan_id=6``, and the PySpark lambda variable counter in
-``lambda x_285``, renumbered in order of first appearance per plan), so
-two dumps of the same plan diff clean:
-``diff -r a/ b/`` after dumping two checkouts is the plan-identity check.
+``lambda x_285``, renumbered in order of first appearance per plan), and
+so is the Python call site Spark records for a checkpointed RDD
+(``localCheckpoint at <unknown>:0`` or ``NativeMethodAccessorImpl.java:0``,
+depending on what the session built first), so two dumps of the same
+plan diff clean: ``diff -r a/ b/`` after dumping two checkouts is the
+plan-identity check. The first line of each dump names the shuffle width
+and default parallelism the plan was built at, so two dumps taken at
+different widths differ there rather than in every ``hashpartitioning``.
 """
 
 from __future__ import annotations
@@ -29,6 +34,8 @@ _MASKS = (
     (re.compile(r"#\d+"), "#N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    # the creation site of an RDD: ``<op> at <file>:<line>``
+    (re.compile(r"(\bat \w+) at [^\s,\]\)]+:\d+"), r"\1 at <callsite>"),
 )
 # PySpark names every Python lambda variable ``x_<n>`` (``y_``/``z_`` for
 # the 2nd/3rd argument) from a session-global counter.
@@ -60,6 +67,11 @@ def main() -> None:
         names = bench.HEADLINE
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("dump_plans")
+    width = (
+        f"spark.sql.shuffle.partitions="
+        f"{spark.conf.get('spark.sql.shuffle.partitions')}"
+        f" defaultParallelism={spark.sparkContext.defaultParallelism}\n"
+    )
     for name in names:
         df = qs[name](spark, sf_dir)
         txt = df._sc._jvm.PythonSQLUtils.explainString(
@@ -67,7 +79,7 @@ def main() -> None:
         )
         path = os.path.join(out_dir, f"{name}.txt")
         with open(path, "w") as f:
-            f.write(mask_ids(txt))
+            f.write(width + mask_ids(txt))
         print(f"wrote {path} ({len(txt.splitlines())} lines)")
 
 

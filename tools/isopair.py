@@ -11,13 +11,9 @@ Usage: python tools/isopair.py <repo_dir> <sf_dir> <query> [reps=5]
 Prints one JSON line: {"query", "repo", "sf_dir", "reps": [...], "best",
 "median", "load1": <1-min load avg before the session exists>}.
 
-CAVEAT (measured r13, dq_referential_integrity): the timed action is
-count(), the bench-identical methodology — but for a query whose plan is
-a UNION OF GLOBAL AGGREGATES, count() lets the optimizer answer from the
-one-row-per-branch cardinality without computing the aggregate VALUES
-(old dq_ref read 1.3 s at x30 under count() vs ~6 s under the noop sink).
-For such shapes, arbitrate with a noop-sink A/B instead; count() numbers
-on them are only comparable to other count() numbers of the SAME shape.
+The timed action writes the query to the ``noop`` sink, so every
+output row and column is computed (``count()`` would let the optimizer
+skip aggregate values it does not need).
 """
 
 from __future__ import annotations
@@ -60,11 +56,15 @@ def main() -> None:
     spark = get_spark("isopair")
     qs = queries()
     warm_up(spark, sf_dir)
-    qs[name](spark, sf_dir).count()  # untimed first-plan rep (codegen)
+
+    def run() -> None:
+        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+    run()  # untimed first-plan rep (codegen)
     times = []
     for _ in range(reps):
         t0 = time.perf_counter()
-        qs[name](spark, sf_dir).count()
+        run()
         times.append(round(time.perf_counter() - t0, 3))
     print(
         json.dumps(
