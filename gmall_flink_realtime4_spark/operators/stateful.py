@@ -145,8 +145,9 @@ def back_visitor_flags_streaming(
     lastLoginDt; a record emits only on its uid's first login of the day
     (uu), with back=1 when the previous login day is more than 7 days ago.
     The batch twin (pipelines/dws.user_user_login_window) expresses the
-    same with first_today + LAG(day); this is the keyed-state form for
-    unbounded streams (applyInPandasWithState, state = last login date).
+    same with the first login per (uid, day) + LAG(day); this is the
+    keyed-state form for unbounded streams (applyInPandasWithState, state =
+    last login date).
 
     Output: one row per (uid, day) first login — (uid, event_time, back)
     with back in {0, 1}.

@@ -1,9 +1,15 @@
 """DWS domain pipelines over dwd outputs (SURVEY.md §2.5/§2.6).
 
-Each function is the domain twin of one reference DWS app, built from the
-operator library (dedup/tumble/dim_enrich) so batch tests and streaming
-runs share one plan. The driver-data query twins live in
-plans/dws_queries.py; these operate on the reference's own shapes.
+Each function is the one transform of a reference DWS app, built from the
+operator library (dedup/tumble/dim_enrich) over the reference's own
+shapes, with a ``streaming`` flag. The registered queries in
+plans/dws_queries.py run them over TPC-H-table adapters
+(``tables.sku_order_detail`` and its neighbours). The cart-add, login and
+province apps' registered queries read the tables directly and call the
+transforms' named batch steps (``day_firsts``, ``cart_add_uu_counts``,
+``login_uu_back_window``, ``province_order_counts``); the keyword and
+vc/ch/ar/is_new apps still have registered bodies of their own (ROADMAP
+item 7).
 """
 
 from __future__ import annotations
@@ -33,11 +39,28 @@ def trade_cart_add_uu_window(
     cart: DataFrame, window: str = "10 seconds", streaming: bool = False
 ) -> DataFrame:
     """DwsTradeCartAddUuWindow.java:76-119 — first-today dedup by user (A8,
-    1-day TTL state) then 10 s tumbling uu count (A5)."""
+    1-day TTL state) then 10 s tumbling uu count (A5). Batch: the first
+    cart add per (user, day), ``day_firsts``."""
     src = _event_time(cart)
     if streaming:
         src = with_event_watermark(src, "event_time", "5 seconds")
-    firsts = first_today(src, "user_id", "event_time", streaming=streaming)
+        firsts = first_today(src, "user_id", "event_time", streaming=True)
+    else:
+        firsts = day_firsts(src, "user_id")
+    return cart_add_uu_counts(firsts, window)
+
+
+def day_firsts(df: DataFrame, key: str, ts_col: str = "event_time") -> DataFrame:
+    """(key, d, event_time): each key's first event time per day ``d`` —
+    the batch first-today dedup (A8) where only that time is read
+    downstream."""
+    return df.groupBy(key, F.to_date(ts_col).alias("d")).agg(
+        F.min(ts_col).alias("event_time")
+    )
+
+
+def cart_add_uu_counts(firsts: DataFrame, window: str = "10 seconds") -> DataFrame:
+    """Tumbling count of the users' first cart adds of the day (A5)."""
     return tumble(
         firsts,
         "event_time",
@@ -55,8 +78,9 @@ def trade_sku_order_window(
     streaming: bool = False,
 ) -> DataFrame:
     """DwsTradeSkuOrderWindow.java:44-194 — dedup upserts by detail id (A1),
-    10 s tumbling BigDecimal sums per sku (A2), then the sku->spu->trademark
-    dim chain as broadcast joins (J5; replaces Redis/HBase cache+async).
+    10 s tumbling BigDecimal sums per sku (A2, DOUBLE at the boundary), then
+    the sku->spu->trademark dim chain as broadcast joins (J5; replaces
+    Redis/HBase cache+async).
 
     The reference's state-key bug (:89 vs :111) is NOT replicated — intent
     (net out duplicate upsert rows) implemented via dedup.
@@ -78,16 +102,20 @@ def trade_sku_order_window(
         window,
         keys=[F.col("sku_id")],
         aggs=[
-            F.sum(F.col("split_total_amount").cast(MONEY)).alias("order_amount"),
-            F.sum(F.col("split_activity_amount").cast(MONEY)).alias(
-                "activity_reduce_amount"
-            ),
-            F.sum(F.col("split_coupon_amount").cast(MONEY)).alias(
-                "coupon_reduce_amount"
-            ),
+            F.sum(F.col("split_total_amount").cast(MONEY))
+            .cast("double")
+            .alias("order_amount"),
+            F.sum(F.col("split_activity_amount").cast(MONEY))
+            .cast("double")
+            .alias("activity_reduce_amount"),
+            F.sum(F.col("split_coupon_amount").cast(MONEY))
+            .cast("double")
+            .alias("coupon_reduce_amount"),
             F.sum(
                 (F.col("order_price").cast(MONEY) * F.col("sku_num").cast(MONEY))
-            ).alias("original_amount"),
+            )
+            .cast("double")
+            .alias("original_amount"),
         ],
     )
     return dim_enrich(
@@ -123,9 +151,7 @@ def user_user_login_window(
 ) -> DataFrame:
     """DwsUserUserLoginWindow.java:41-129 — login filter (uid set, direct
     or via login page, P7), first-today dedup + 7-day-returning flag (A8),
-    10 s windows. Batch: LAG over login days expresses the ValueState."""
-    from pyspark.sql import Window as W
-
+    10 s windows. Batch: ``login_uu_back_window``."""
     logins = _event_time(
         page.filter(
             F.col("common.uid").isNotNull()
@@ -154,12 +180,21 @@ def user_user_login_window(
             ],
             watermark="5 seconds",
         )
-    firsts = first_today(logins, "uid", "event_time")
-    firsts = firsts.withColumn(
-        "d", F.to_date("event_time")
-    )
+    return login_uu_back_window(logins, window)
+
+
+def login_uu_back_window(
+    logins: DataFrame, window: str = "10 seconds"
+) -> DataFrame:
+    """The batch ValueState of ``user_user_login_window`` over (uid,
+    event_time) logins: the first login per (uid, day), LAG over login
+    days for the 7-day back flag, then tumbling uu/back counts (A5)."""
+    from pyspark.sql import Window as W
+
     prev = W.partitionBy("uid").orderBy("d")
-    flagged = firsts.withColumn("prev_d", F.lag("d").over(prev))
+    flagged = day_firsts(logins, "uid").withColumn(
+        "prev_d", F.lag("d").over(prev)
+    )
     return tumble(
         flagged,
         "event_time",
@@ -426,11 +461,21 @@ def trade_province_order_window(
                 F.sum("amount").cast("double").alias("order_amount"),
             ],
         )
+    return province_order_counts(src, window)
+
+
+def province_order_counts(
+    rows: DataFrame, window: str = "1 day", keys: tuple[str, ...] = ("province_id",)
+) -> DataFrame:
+    """The batch aggregate of ``trade_province_order_window`` over order
+    detail rows with an ``event_time``: countDistinct orders and users and
+    the amount sum per (window, ``keys``); further keys carry attributes
+    of the province (its names) along."""
     return tumble(
-        src,
+        rows,
         "event_time",
         window,
-        keys=[F.col("province_id")],
+        keys=list(keys),
         aggs=[
             F.countDistinct("order_id").alias("order_count"),
             F.countDistinct("user_id").alias("user_count"),

@@ -48,8 +48,15 @@ REGISTRY: dict[str, QuerySpec] = {}
 GATE_PRIORITY: list[str] = [
     # Rotation after the r13 prefix (CORRECTNESS_r13) froze.
     #
-    # CHANGED-PLAN head: every query whose plan changed since then. Each
-    # accumulate-then-finalize query now runs its twin's partials and
+    # CHANGED-PLAN head: every query whose plan changed since then. The
+    # five twinned DWS apps now run their pipelines/dws.py transforms over
+    # tables adapters (new oracles: the reference's columns and grain).
+    "dws_trade_sku_order_window",
+    "dws_trade_province_order_window",
+    "dws_trade_trademark_category_user_refund_window",
+    "dws_trade_cart_add_uu_window",
+    "dws_user_user_login_window",
+    # Each accumulate-then-finalize query now runs its twin's partials and
     # finalize, on the one KMV sketch per engine (operators/hashing.py):
     # the masked plans of the first five changed, and the checkpointed
     # (build-phase) supplier aggregate of the skyline gained the re-sum.
@@ -84,13 +91,9 @@ GATE_PRIORITY: list[str] = [
     "dws_traffic_source_keyword_page_view_window",
     "dws_traffic_vc_ch_ar_is_new_page_view_window",
     "dws_traffic_home_detail_page_view_window",
-    "dws_user_user_login_window",
     "dws_user_user_register_window",
-    "dws_trade_cart_add_uu_window",
     "dws_trade_payment_suc_window",
     "dws_trade_order_window",
-    "dws_trade_sku_order_window",
-    "dws_trade_province_order_window",
     "p1_json_parse_validity_filter",
     "f_date_formats",
     "f_conditional_cast_math",
@@ -111,7 +114,6 @@ GATE_PRIORITY: list[str] = [
     "llm_embedding_quantize_int8",
     "f_zorder_layout_audit",
     "dq_sketch_join_cardinality",
-    "llm_bm25_topk",
 ]
 
 

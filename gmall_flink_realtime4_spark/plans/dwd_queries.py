@@ -14,8 +14,6 @@ from pyspark.sql import DataFrame, SparkSession
 from .. import tables as T
 from .catalog import query
 
-AGG = "decimal(38,6)"
-
 
 # ---------------------------------------------------------------------------
 # DwdTradeOrderDetail — multi-way join J1/J2 + map-key projection P3

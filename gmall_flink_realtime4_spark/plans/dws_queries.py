@@ -2,20 +2,25 @@
 
 Each query re-expresses one reference DWS app (SURVEY.md §2.5/§2.6/§2.9)
 over driver testdata: events plays the behavior log, lineitem/orders the
-trade facts, part/supplier/nation/region the dim chain. Windows use
-``F.window`` (streaming-capable as-is); oracles reproduce buckets with
-tz-independent epoch arithmetic.
+trade facts, part/customer/nation/region the dim chains. The sku-order and
+trademark refund apps are a ``tables`` adapter + their ``pipelines/dws.py``
+transform run with ``streaming=False``, the same transform the streaming
+twin runs. The cart-add uu, user login and province-order apps read the
+tables directly and run their transform's named batch steps (an adapter +
+the whole transform read slower than the former bodies; CHANGES.md has
+the numbers). The others keep a body of their own here. Windows use
+``F.window``; oracles reproduce buckets with tz-independent epoch
+arithmetic.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 
 from .. import tables as T
+from ..pipelines import dws
 from .catalog import query
-
-AGG = "decimal(38,6)"
 
 
 def _bucket(col: str, secs: int, plus: int = 0) -> str:
@@ -101,7 +106,8 @@ def dws_traffic_vc_ch_ar_is_new_page_view_window(
     (vc, ch, ar, is_new), 10 s tumbling windows, reduce summing
     uv/sv/pv/dur (A4). Here: dims derived from events (vc/ar/is_new
     synthesized from props/user_id), 1 h tumbling window, pv count + duration
-    sum. Streaming twin: identical plan + withWatermark("ts", "3 seconds").
+    sum. Its streaming twin in pipelines/dws.py also counts uv/sv, which
+    needs a (mid, day) dedup this query does not run (ROADMAP item 7).
     """
     e = T.load(spark, sf_dir, "events")
     # ANSI-safe integral guard (see p1_json_parse_validity_filter): a
@@ -187,6 +193,7 @@ def dws_traffic_home_detail_page_view_window(
 WITH firsts AS (
     SELECT user_id, CAST(ts AS DATE) AS d, MIN(ts) AS first_ts
     FROM events
+    WHERE user_id IS NOT NULL
     GROUP BY 1, 2
 ), flagged AS (
     SELECT user_id, d, first_ts,
@@ -195,11 +202,12 @@ WITH firsts AS (
 )
 SELECT {_bucket('first_ts', 10)}        AS stt,
        {_bucket('first_ts', 10, 10)}    AS edt,
+       strftime(first_ts, '%Y-%m-%d')   AS cur_date,
        COUNT(*)                         AS uu_ct,
        CAST(SUM(CASE WHEN prev_d IS NOT NULL AND date_diff('day', prev_d, d) > 7
                      THEN 1 ELSE 0 END) AS BIGINT) AS back_ct
 FROM flagged
-GROUP BY 1, 2
+GROUP BY 1, 2, 3
 """,
     tags=("A8", "A5", "W4"),
 )
@@ -210,36 +218,13 @@ def dws_user_user_login_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     lastLoginDate: emit uu only on first login of the day (A8); emit back=1
     when the gap since the previous login exceeds 7 days
     (DwsUserUserLoginWindow.java:96-100); then 10 s windowAll sums (A5).
-    Batch twin: first event per (user, day) + LAG over login days — the same
-    state machine expressed relationally.
+    Every event of a known user is a login (``tables.page_log`` has no
+    previous page), so its (uid, time) pairs feed the transform's batch
+    step straight from events.
     """
     e = T.load(spark, sf_dir, "events", spread=False)
-    firsts = e.groupBy(
-        F.col("user_id"), F.to_date("ts").alias("d")
-    ).agg(F.min("ts").alias("first_ts"))
-    prev = Window.partitionBy("user_id").orderBy("d")
-    flagged = firsts.withColumn("prev_d", F.lag("d").over(prev))
-    return (
-        flagged.groupBy(F.window("first_ts", "10 seconds").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("uu_ct"),
-            F.sum(
-                F.when(
-                    F.col("prev_d").isNotNull()
-                    & (F.datediff(F.col("d"), F.col("prev_d")) > 7),
-                    1,
-                ).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("back_ct"),
-        )
-        .select(
-            F.col("w.start").alias("stt"),
-            F.col("w.end").alias("edt"),
-            "uu_ct",
-            "back_ct",
-        )
-    )
+    logins = e.filter("user_id IS NOT NULL").selectExpr("user_id AS uid", "ts AS event_time")
+    return dws.login_uu_back_window(logins, window="10 seconds")
 
 
 # ---------------------------------------------------------------------------
@@ -282,12 +267,14 @@ def dws_user_user_register_window(spark: SparkSession, sf_dir: str) -> DataFrame
 # ---------------------------------------------------------------------------
 @query(
     "dws_trade_cart_add_uu_window",
-    oracle="""
-SELECT strftime(ts, '%Y-%m-%d')   AS cur_date,
-       COUNT(DISTINCT user_id)     AS cart_add_uu_ct
+    oracle=f"""
+SELECT {_bucket('ts', 86400)}            AS stt,
+       {_bucket('ts', 86400, 86400)}     AS edt,
+       strftime(ts, '%Y-%m-%d')          AS cur_date,
+       COUNT(DISTINCT user_id)           AS cart_add_uu_ct
 FROM events
 WHERE event_type = 'purchase'
-GROUP BY 1
+GROUP BY 1, 2, 3
 """,
     tags=("A8", "W4"),
 )
@@ -296,15 +283,14 @@ def dws_trade_cart_add_uu_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference: DwsTradeCartAddUuWindow.java:76-119 — keyed ValueState
     lastCartDate with 1-day TTL: first cart-add of the day per user counts
-    (A8), 10 s windowAll sum. Batch twin: distinct users per day. Streaming
-    twin: dropDuplicates(["user_id","cur_date"]) under watermark.
+    (A8), then a windowAll sum; here purchase events of known users are
+    the cart adds (``tables.cart_add``), read straight into the
+    transform's batch steps, and the window is one day.
     """
     e = T.load(spark, sf_dir, "events", spread=False).filter(
-        F.col("event_type") == "purchase"
+        "event_type = 'purchase' AND user_id IS NOT NULL"
     )
-    return e.groupBy(F.date_format("ts", "yyyy-MM-dd").alias("cur_date")).agg(
-        F.countDistinct("user_id").alias("cart_add_uu_ct")
-    )
+    return dws.cart_add_uu_counts(dws.day_firsts(e, "user_id", "ts"), "1 day")
 
 
 # ---------------------------------------------------------------------------
@@ -399,101 +385,74 @@ def dws_trade_order_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "dws_trade_sku_order_window",
-    oracle="""
-WITH od AS (
-    SELECT DISTINCT ON (l_orderkey * 8 + l_linenumber)
-           l_orderkey * 8 + l_linenumber AS id,
-           l_orderkey, l_partkey, l_quantity, l_extendedprice, l_discount,
+    oracle=f"""
+WITH detail AS (
+    -- tables.sku_order_detail: the unit price, and the activity split of
+    -- the line (unit price x quantity) at the line's discount; round():
+    -- Spark's cast to a smaller scale rounds half up, DuckDB's truncates
+    -- (the amounts are non-negative)
+    SELECT l_orderkey * 8 + l_linenumber            AS id,
+           l_orderkey                               AS order_id,
+           l_partkey                                AS sku_id,
+           CAST(CAST(l_extendedprice AS DECIMAL(18,2)) / CAST(l_quantity AS DECIMAL(18,2))
+                AS DECIMAL(18,2))                   AS order_price,
+           CAST(l_quantity AS DECIMAL(18,2))        AS sku_num,
+           CAST(l_discount AS DECIMAL(18,2))        AS discount,
+           CAST(floor(epoch(l_shipdate)) AS BIGINT) AS ts,
            l_shipdate
     FROM lineitem
-    ORDER BY l_orderkey * 8 + l_linenumber,
-             l_orderkey NULLS FIRST, l_partkey NULLS FIRST,
-             l_quantity NULLS FIRST, l_extendedprice NULLS FIRST,
-             l_discount NULLS FIRST, l_shipdate NULLS FIRST
-             -- NULLS FIRST matches Spark's min(struct(...)) keeper,
-             -- which sorts NULL struct fields first; DuckDB's default
-             -- ASC ordering is NULLS LAST
+), split AS (
+    SELECT *, round(order_price * sku_num * discount, 2) AS split_activity_amount
+    FROM detail
+), kept AS (
+    -- first_per_key's keeper: ts, then the other columns in order, NULLs
+    -- first like Spark's ascending sort
+    SELECT DISTINCT ON (id) *,
+           order_price * sku_num - split_activity_amount AS split_total_amount
+    FROM split
+    ORDER BY id, ts NULLS FIRST, order_id NULLS FIRST, sku_id NULLS FIRST,
+             order_price NULLS FIRST, sku_num NULLS FIRST,
+             order_price * sku_num - split_activity_amount NULLS FIRST,
+             split_activity_amount NULLS FIRST
+), agg AS (
+    SELECT {_bucket('l_shipdate', 86400)}        AS stt,
+           {_bucket('l_shipdate', 86400, 86400)} AS edt,
+           strftime(l_shipdate, '%Y-%m-%d')     AS cur_date,
+           sku_id,
+           CAST(SUM(CAST(split_total_amount AS DECIMAL(16,2))) AS DOUBLE) AS order_amount,
+           CAST(SUM(CAST(split_activity_amount AS DECIMAL(16,2))) AS DOUBLE)
+                                                AS activity_reduce_amount,
+           CAST(SUM(CAST(0 AS DECIMAL(16,2))) AS DOUBLE) AS coupon_reduce_amount,
+           CAST(SUM(CAST(order_price AS DECIMAL(16,2)) * CAST(sku_num AS DECIMAL(16,2)))
+                AS DOUBLE)                      AS original_amount
+    FROM kept
+    GROUP BY 1, 2, 3, 4
 )
-SELECT date_trunc('day', od.l_shipdate)                 AS stt,
-       date_trunc('day', od.l_shipdate) + INTERVAL 1 DAY AS edt,
-       p.p_brand                                        AS trademark_name,
-       p.p_type                                         AS category_name,
-       COUNT(DISTINCT od.l_orderkey)                    AS order_count,
-       CAST(SUM(CAST(od.l_quantity AS DECIMAL(18,2))) AS DOUBLE)
-                                                        AS sku_num,
-       CAST(SUM(CAST(od.l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-                                                        AS original_amount,
-       CAST(SUM(CAST(od.l_extendedprice AS DECIMAL(18,2))
-                * CAST(od.l_discount AS DECIMAL(18,2))) AS DOUBLE)
-                                                        AS activity_reduce_amount,
-       CAST(SUM(CAST(od.l_extendedprice AS DECIMAL(18,2))
-                * (1 - CAST(od.l_discount AS DECIMAL(18,2)))) AS DOUBLE)
-                                                        AS order_amount
-FROM od
-JOIN part p ON od.l_partkey = p.p_partkey
-GROUP BY 1, 2, 3, 4
+SELECT agg.*,
+       p.p_name  AS sku_name,
+       p.p_name  AS spu_id,
+       p.p_brand AS tm_id,
+       p.p_type  AS category3_id,
+       p.p_name  AS spu_name,
+       p.p_brand AS tm_name
+FROM agg
+LEFT JOIN part p ON agg.sku_id = p.p_partkey
 """,
     tags=("A1", "A2", "A7", "J5", "W1"),
 )
 def dws_trade_sku_order_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FLAGSHIP — sku-grain order window with dim enrichment.
+    """FLAGSHIP — sku-grain daily order window with dim enrichment.
 
     Reference: DwsTradeSkuOrderWindow.java:44-194 — keyed diff-state dedup of
     re-emitted order_detail upserts (A1, :77-118), 10 s tumbling sums of four
     BigDecimal amounts (A2, :120-149), then the sku->spu->trademark->category
     dim chain via Redis/HBase async lookups (J5, Async/SyncCache variants).
-    Spark-first: a deterministic keeper per id under watermark replaces
-    diff-state (the reference's dedup exists to net out duplicate upsert
-    emissions). min(struct(payload)) is the keeper rule: unlike
-    dropDuplicates (arbitrary row, partition-order dependent) it is stable
-    under any partitioning AND partial-aggregable — map-side combine
-    shrinks the dedup shuffle, no window sort. ONE broadcast hash join
-    against the dim table replaces cache+async I/O; 1-day tumbling windows
-    by trademark/category.
+    Here lineitem plays order_detail (``tables.sku_order_detail``) and part
+    the dim chain (``tables.sku_dims``); the windows are one day.
     """
-    payload = ["order_id", "sku_id", "sku_num", "order_price", "discount",
-               "create_time"]
-    # Explicit hash distribution by id: collapses the loader's spread
-    # shuffle (CollapseRepartition) and makes the dedup a single-phase agg
-    # on already-distributed data — upsert re-emissions are rare, so a
-    # map-side partial pass over mostly-unique ids is wasted work.
-    od = (
-        T.order_detail(spark, sf_dir, spread=False)
-        .repartition(F.col("id"))
-        .groupBy("id")
-        .agg(F.min(F.struct(*payload)).alias("s"))
-        .select("id", "s.*")
-    )
-    p = T.load(spark, sf_dir, "part", spread=False)
-    return (
-        od.join(F.broadcast(p), od.sku_id == p.p_partkey)
-        .groupBy(
-            F.window("create_time", "1 day").alias("w"),
-            F.col("p_brand").alias("trademark_name"),
-            F.col("p_type").alias("category_name"),
-        )
-        .agg(
-            F.countDistinct("order_id").alias("order_count"),
-            F.sum("sku_num").cast("double").alias("sku_num"),
-            F.sum("order_price").cast("double").alias("original_amount"),
-            F.sum(F.col("order_price") * F.col("discount"))
-            .cast("double")
-            .alias("activity_reduce_amount"),
-            F.sum(F.col("order_price") * (F.lit(1) - F.col("discount")))
-            .cast("double")
-            .alias("order_amount"),
-        )
-        .select(
-            F.col("w.start").alias("stt"),
-            F.col("w.end").alias("edt"),
-            "trademark_name",
-            "category_name",
-            "order_count",
-            "sku_num",
-            "original_amount",
-            "activity_reduce_amount",
-            "order_amount",
-        )
+    sku, spu, tm = T.sku_dims(spark, sf_dir)
+    return dws.trade_sku_order_window(
+        T.sku_order_detail(spark, sf_dir), sku, spu, tm, window="1 day"
     )
 
 
@@ -502,51 +461,60 @@ def dws_trade_sku_order_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "dws_trade_province_order_window",
-    oracle="""
-SELECT strftime(date_trunc('month', o.o_orderdate), '%Y-%m') AS cur_month,
-       n.n_name                                         AS province_name,
-       r.r_name                                         AS region_name,
-       COUNT(DISTINCT o.o_orderkey)                     AS order_count,
-       COUNT(DISTINCT o.o_custkey)                      AS user_count,
-       CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-                                                        AS order_amount
-FROM orders o
-JOIN customer c ON o.o_custkey   = c.c_custkey
-JOIN nation n   ON c.c_nationkey = n.n_nationkey
-JOIN region r   ON n.n_regionkey = r.r_regionkey
-GROUP BY 1, 2, 3
+    oracle=f"""
+WITH agg AS (
+    SELECT {_bucket('o.o_orderdate', 86400)}        AS stt,
+           {_bucket('o.o_orderdate', 86400, 86400)} AS edt,
+           strftime(o.o_orderdate, '%Y-%m-%d')     AS cur_date,
+           c.c_nationkey                           AS province_id,
+           COUNT(DISTINCT o.o_orderkey)            AS order_count,
+           COUNT(DISTINCT o.o_custkey)             AS user_count,
+           CAST(SUM(CAST(o.o_totalprice AS DECIMAL(16,2))) AS DOUBLE)
+                                                   AS order_amount
+    FROM orders o
+    JOIN customer c ON o.o_custkey = c.c_custkey
+    GROUP BY 1, 2, 3, 4
+)
+SELECT agg.*,
+       n.n_name AS province_name,
+       r.r_name AS region_name
+FROM agg
+LEFT JOIN nation n ON agg.province_id = n.n_nationkey
+LEFT JOIN region r ON n.n_regionkey   = r.r_regionkey
 """,
     tags=("A2", "A7", "J5"),
 )
 def dws_trade_province_order_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Province-grain monthly order aggregate with distinct order count.
+    """Province-grain daily order aggregate with distinct order count.
 
     Reference: DwsTradeProvinceOrderWindow.java:82-155 — diff-state dedup,
     10 s windows summing amounts + an ``orderIdSet`` whose size is the
-    distinct order count (A7), then base_province async lookup (J5). Here:
-    customer->nation->region is the dim chain (broadcast joins), monthly
-    buckets, COUNT(DISTINCT) replaces the hand-built set union.
+    distinct order count (A7), then base_province async lookup (J5). Here
+    orders play the order details and the customer's nation the province
+    (``tables.province_order_detail``); the nation/region names are
+    broadcast-joined before the transform's batch aggregate
+    (``dws.province_order_counts``), which carries them as keys.
     """
     o = T.load(spark, sf_dir, "orders", spread=False)
     c = T.load(spark, sf_dir, "customer", spread=False)
     n = T.load(spark, sf_dir, "nation", spread=False)
     r = T.load(spark, sf_dir, "region", spread=False)
-    return (
+    rows = (
         o.join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy(
-            F.date_format("o_orderdate", "yyyy-MM").alias("cur_month"),
+        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey, "left")
+        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey, "left")
+        .select(
+            F.col("c_nationkey").alias("province_id"),
             F.col("n_name").alias("province_name"),
             F.col("r_name").alias("region_name"),
+            F.col("o_orderkey").alias("order_id"),
+            F.col("o_custkey").alias("user_id"),
+            F.col("o_totalprice").alias("split_total_amount"),
+            F.col("o_orderdate").cast("timestamp_ntz").alias("event_time"),
         )
-        .agg(
-            F.countDistinct("o_orderkey").alias("order_count"),
-            F.countDistinct("o_custkey").alias("user_count"),
-            F.sum(F.col("o_totalprice").cast(T.MONEY))
-            .cast("double")
-            .alias("order_amount"),
-        )
+    )
+    return dws.province_order_counts(
+        rows, "1 day", keys=("province_id", "province_name", "region_name")
     )
 
 
@@ -555,58 +523,44 @@ def dws_trade_province_order_window(spark: SparkSession, sf_dir: str) -> DataFra
 # ---------------------------------------------------------------------------
 @query(
     "dws_trade_trademark_category_user_refund_window",
-    oracle="""
-SELECT date_trunc('day', l.l_shipdate)                  AS stt,
-       date_trunc('day', l.l_shipdate) + INTERVAL 1 DAY AS edt,
-       p.p_brand                                        AS trademark_name,
-       COUNT(DISTINCT l.l_orderkey)                     AS refund_order_count,
-       COUNT(DISTINCT o.o_custkey)                      AS refund_user_count,
-       CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-                                                        AS refund_amount
-FROM lineitem l
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-JOIN part p   ON l.l_partkey  = p.p_partkey
-WHERE l.l_returnflag = 'R'
-GROUP BY 1, 2, 3
+    oracle=f"""
+WITH refund AS (
+    SELECT l.l_orderkey AS order_id, o.o_custkey AS user_id,
+           l.l_partkey AS sku_id, l.l_extendedprice AS refund_amount,
+           l.l_shipdate
+    FROM lineitem l
+    JOIN orders o ON l.l_orderkey = o.o_orderkey
+    WHERE l.l_returnflag = 'R'
+)
+SELECT {_bucket('f.l_shipdate', 86400)}        AS stt,
+       {_bucket('f.l_shipdate', 86400, 86400)} AS edt,
+       strftime(f.l_shipdate, '%Y-%m-%d')     AS cur_date,
+       p.p_brand                              AS tm_id,
+       p.p_type                               AS category3_id,
+       f.user_id                              AS user_id,
+       p.p_brand                              AS tm_name,
+       COUNT(DISTINCT f.order_id)             AS refund_order_count,
+       CAST(SUM(CAST(f.refund_amount AS DECIMAL(16,2))) AS DOUBLE)
+                                              AS refund_amount
+FROM refund f
+LEFT JOIN part p ON f.sku_id = p.p_partkey
+GROUP BY 1, 2, 3, 4, 5, 6, 7
 """,
     tags=("A7", "J5", "P4"),
 )
 def dws_trade_trademark_category_user_refund_window(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Trademark-grain daily refund aggregate.
+    """(trademark, category3, user)-grain daily refund aggregate.
 
     Reference: DwsTradeTrademarkCategoryUserRefundWindow.java:52-189 —
-    refund stream keyed by (trademark, category, user), orderIdSet union for
-    distinct orders (A7), 5 s windows, then trademark/category dim lookups
-    (J5 chain). Here: returned lineitems (l_returnflag='R'), part broadcast
-    join for the trademark dim, daily windows.
+    refund stream keyed by (trademark, category3, user), orderIdSet union
+    for distinct orders (A7), 5 s windows, then trademark/category dim
+    lookups (J5 chain). Here returned lineitems are the refunds
+    (``tables.order_refund``) and part the dim chain; the windows are one
+    day.
     """
-    l = T.load(spark, sf_dir, "lineitem", spread=False).filter(F.col("l_returnflag") == "R")
-    o = T.load(spark, sf_dir, "orders", spread=False)
-    p = T.load(spark, sf_dir, "part", spread=False)
-    # orders is a fact: shuffle_hash (see dwd_trade_order_detail's scale
-    # note); only the part dim stays broadcast
-    return (
-        l.join(o.hint("shuffle_hash"), l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(p), l.l_partkey == p.p_partkey)
-        .groupBy(
-            F.window("l_shipdate", "1 day").alias("w"),
-            F.col("p_brand").alias("trademark_name"),
-        )
-        .agg(
-            F.countDistinct("l_orderkey").alias("refund_order_count"),
-            F.countDistinct("o_custkey").alias("refund_user_count"),
-            F.sum(F.col("l_extendedprice").cast(T.MONEY))
-            .cast("double")
-            .alias("refund_amount"),
-        )
-        .select(
-            F.col("w.start").alias("stt"),
-            F.col("w.end").alias("edt"),
-            "trademark_name",
-            "refund_order_count",
-            "refund_user_count",
-            "refund_amount",
-        )
+    sku, _, tm = T.sku_dims(spark, sf_dir)
+    return dws.trade_trademark_category_user_refund_window(
+        T.order_refund(spark, sf_dir), sku, tm, window="1 day"
     )

@@ -9,8 +9,8 @@ batch-testable twin over driver data (FIXTURES.md §6.4 mapping):
   order_info            <- orders       (id, user_id, order_status, ...)
   order_detail          <- lineitem     (id, order_id, sku_id, amounts, ...)
   user_info             <- customer
-  sku dim chain         <- part -> brand/type  (sku->spu->tm->category chain)
-  province dim chain    <- supplier -> nation -> region
+  sku dim chain         <- part -> name/brand/type (spu/trademark/category3)
+  province dim chain    <- customer -> nation -> region
   topic_log / page log  <- events       (mid=user_id, page_id=event_type)
   documents/embeddings  <- LLM-pipeline extension tables
 
@@ -48,8 +48,6 @@ TABLE_NAMES = (
 
 # money / measure scale used everywhere (see module docstring)
 MONEY = "decimal(18,2)"
-AGG = "decimal(38,6)"  # internal only; final outputs cast to double
-
 
 _SIZE_SUFFIX = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30}
 
@@ -196,4 +194,95 @@ def order_detail(
         F.col("l_returnflag").alias("return_flag"),
         F.col("l_linestatus").alias("line_status"),
         F.col("l_shipdate").alias("create_time"),
+    )
+
+
+# Each DWS adapter below feeds one pipelines/dws.py transform and reads only
+# the tables its registered query reads. The cart-add, login and province
+# queries read those tables straight into the transform's batch steps; their
+# adapters feed the transform in the stream-vs-registered tests. CDC-derived
+# ts is epoch seconds, log ts epoch milliseconds (FIXTURES.md §2/§5).
+def _epoch_s(col: str) -> str:
+    return f"unix_seconds(cast({col} as timestamp)) AS ts"
+
+
+def sku_order_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """order_detail -> the dwd_trade_order_detail rows
+    DwsTradeSkuOrderWindow reads (FIXTURES.md §5). order_price is the unit
+    price (TPC-H's extendedprice is quantity x retail price), the line's
+    discount is its activity split and there are no coupons; the splits
+    divide order_price x sku_num, so they add up to the original amount
+    as upstream."""
+    od = order_detail(spark, sf_dir, spread=False).selectExpr(
+        "id", "order_id", "sku_id", "sku_num", "discount", "create_time",
+        f"cast(order_price / sku_num AS {MONEY}) AS order_price",
+    )
+    activity = f"cast(order_price * sku_num * discount AS {MONEY})"
+    return od.selectExpr(
+        "id", "order_id", "sku_id", "order_price", "sku_num",
+        f"order_price * sku_num - {activity} AS split_total_amount",
+        f"{activity} AS split_activity_amount",
+        f"cast(0 AS {MONEY}) AS split_coupon_amount",
+        _epoch_s("create_time"),
+    )
+
+
+def sku_dims(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """part -> (dim_sku_info, dim_spu_info, dim_base_trademark)
+    (FIXTURES.md §3): a part is a sku, its name the spu, its brand the
+    trademark and its type the category3."""
+    p = load(spark, sf_dir, "part", spread=False)
+    sku = p.selectExpr(
+        "p_partkey AS id", "p_name AS sku_name", "p_name AS spu_id",
+        "p_brand AS tm_id", "p_type AS category3_id",
+    )
+    spu = p.selectExpr("p_name AS id", "p_name AS spu_name").distinct()
+    return sku, spu, p.selectExpr("p_brand AS id", "p_brand AS tm_name").distinct()
+
+
+def province_order_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """orders ⋈ customer -> order-grain dwd_trade_order_detail rows
+    DwsTradeProvinceOrderWindow reads: the customer's nation is the
+    province."""
+    o = load(spark, sf_dir, "orders", spread=False)
+    c = load(spark, sf_dir, "customer", spread=False)
+    return o.join(c, o.o_custkey == c.c_custkey).selectExpr(
+        "c_nationkey AS province_id", "o_orderkey AS order_id",
+        "o_custkey AS user_id", "o_totalprice AS split_total_amount",
+        _epoch_s("o_orderdate"),
+    )
+
+
+def order_refund(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Returned lineitems ⋈ orders -> dwd_trade_order_refund rows
+    (FIXTURES.md §5); orders is a fact, so the join is a shuffle hash join
+    (see dwd_trade_order_detail's scale note)."""
+    l = load(spark, sf_dir, "lineitem", spread=False).filter("l_returnflag = 'R'")
+    o = load(spark, sf_dir, "orders", spread=False).hint("shuffle_hash")
+    return l.join(o, l.l_orderkey == o.o_orderkey).selectExpr(
+        "l_orderkey AS order_id", "o_custkey AS user_id", "l_partkey AS sku_id",
+        "l_extendedprice AS refund_amount", _epoch_s("l_shipdate"),
+    )
+
+
+def cart_add(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Purchase events of known users -> dwd_trade_cart_add rows
+    (user_id, ts)."""
+    e = load(spark, sf_dir, "events", spread=False)
+    return e.filter("event_type = 'purchase' AND user_id IS NOT NULL").selectExpr(
+        "user_id", _epoch_s("ts")
+    )
+
+
+def page_log(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events -> dwd_traffic_page rows (FIXTURES.md §2): mid = uid =
+    user_id (kept BIGINT: no string keys to hash), page_id = event_type,
+    no previous page."""
+    return load(spark, sf_dir, "events", spread=False).selectExpr(
+        "named_struct('mid', user_id, 'uid', user_id) AS common",
+        "named_struct('page_id', event_type,"
+        " 'last_page_id', cast(NULL AS string)) AS page",
+        "unix_millis(cast(ts AS timestamp)) AS ts",
     )

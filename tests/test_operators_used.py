@@ -16,9 +16,9 @@ never count:
 - no package module imports a ``plans`` module inside a function body
   (``plans/__init__.py``'s ``load_all`` is the one registration entry);
 - ``operators/`` and ``functions/`` import nothing from ``plans/``;
-- every public package function (registered queries aside) is referenced
-  somewhere in the package, ``tests/``, ``tools/``, ``perfbench/`` or
-  ``bench.py``;
+- every public package function (registered queries aside) and
+  module-level UPPERCASE constant is referenced somewhere in the package,
+  ``tests/``, ``tools/``, ``perfbench/`` or ``bench.py``;
 - the word-3-gram construction is written once per engine, in
   ``operators/minhash.py``;
 - the streaming near-dup twins write no pair join and no doc-id
@@ -26,7 +26,10 @@ never count:
   ``operators.joins.candidate_pairs``;
 - every public ``*_partials`` function is reached from a registered query
   (the query runs its twin's steps; the twin owns only its merge);
-- the KMV sketch is written once per engine, in ``operators/hashing.py``.
+- the KMV sketch is written once per engine, in ``operators/hashing.py``;
+- every public ``pipelines/dws.py`` function is called from a registered
+  query, or shares a named step with one (three named apps), apart from
+  two named exemptions.
 """
 
 from __future__ import annotations
@@ -52,7 +55,9 @@ def _referenced_names(tree: ast.AST) -> set[str]:
     for node in ast.walk(tree):
         if isinstance(node, ast.ImportFrom):
             names.update(a.name for a in node.names)
-        elif isinstance(node, ast.Name):
+        elif isinstance(node, ast.Name) and not isinstance(
+            node.ctx, ast.Store
+        ):
             names.add(node.id)
         elif isinstance(node, ast.Attribute):
             names.add(node.attr)
@@ -148,6 +153,7 @@ def _is_registered_query(fn: ast.FunctionDef) -> bool:
 
 
 def test_every_public_function_is_referenced():
+    """Public functions and module-level UPPERCASE constants alike."""
     package = _package_modules()
     others = _parse(
         [
@@ -166,22 +172,32 @@ def test_every_public_function_is_referenced():
     unreferenced = []
     for path, tree in sorted(package.items()):
         elsewhere = set().union(*(r for p, r in refs.items() if p != path))
-        for fn in tree.body:
-            if (
-                not isinstance(fn, ast.FunctionDef)
-                or fn.name.startswith("_")
-                or _is_registered_query(fn)
-                or fn.name in elsewhere
+        for node in tree.body:
+            if isinstance(node, ast.FunctionDef) and not _is_registered_query(
+                node
             ):
+                name = node.name
+            elif (
+                isinstance(node, ast.Assign)
+                and len(node.targets) == 1
+                and isinstance(node.targets[0], ast.Name)
+                and node.targets[0].id.isupper()
+            ):
+                name = node.targets[0].id
+            else:
                 continue
-            # the def's own body (recursion) does not count as a use
+            if name.startswith("_") or name in elsewhere:
+                continue
+            # the definition itself (a def's recursion) does not count
             if not any(
-                fn.name in _referenced_names(node)
-                for node in tree.body
-                if node is not fn
+                name in _referenced_names(other)
+                for other in tree.body
+                if other is not node
             ):
-                unreferenced.append(f"{path.relative_to(PKG)}::{fn.name}")
-    assert not unreferenced, f"public functions nothing references: {unreferenced}"
+                unreferenced.append(f"{path.relative_to(PKG)}::{name}")
+    assert not unreferenced, (
+        f"public functions and constants nothing references: {unreferenced}"
+    )
 
 
 # The SQL shingle join of three 1-based tokens (DuckDB list indexing).
@@ -440,4 +456,55 @@ def test_kmv_sketch_exists_once_per_engine():
     assert not wrong, (
         "the KMV sketch must be written once per engine, in"
         f" {home} (missing or surplus sites): {wrong}"
+    )
+
+
+# DWS transforms whose registered query still has a body of its own, with
+# the reason.
+_DWS_ONE_PATH_EXEMPT = {
+    # the reference's uv/sv columns need a (mid, day) dedup shuffle the
+    # registered page-view query does not run (ROADMAP item 7)
+    "traffic_vc_ch_ar_is_new_page_view_window",
+    # splits with the pandas-UDF tokenizer where the registered query uses
+    # the JVM split, over ``documents``, which has no event time
+    "traffic_source_keyword_page_view_window",
+}
+
+# DWS transforms whose registered query reads the driver tables straight
+# into the transform's named batch steps: an adapter + the whole transform
+# read slower than the former registered body (CHANGES.md).
+_DWS_SHARED_STEPS = {
+    "trade_cart_add_uu_window",
+    "user_user_login_window",
+    "trade_province_order_window",
+}
+
+
+def test_every_dws_transform_runs_in_a_registered_query():
+    """A twinned DWS app has one path: its registered query is a
+    ``tables`` adapter + the ``pipelines/dws.py`` transform, the same
+    transform its streaming twin runs, or (``_DWS_SHARED_STEPS``) it calls
+    a named step the transform calls too."""
+    modules = _package_modules()
+    called = set()
+    for tree in modules.values():
+        for fn in tree.body:
+            if isinstance(fn, ast.FunctionDef) and _is_registered_query(fn):
+                called |= {
+                    _call_name(n) for n in ast.walk(fn) if _call_name(n)
+                }
+    public = {
+        fn.name: fn
+        for fn in modules[PKG / "pipelines" / "dws.py"].body
+        if isinstance(fn, ast.FunctionDef) and not fn.name.startswith("_")
+    }
+    orphans = []
+    for name, fn in public.items():
+        if name in called or name in _DWS_ONE_PATH_EXEMPT:
+            continue
+        steps = {_call_name(n) for n in ast.walk(fn)} & called & set(public)
+        if name not in _DWS_SHARED_STEPS or not steps:
+            orphans.append(name)
+    assert not orphans, (
+        f"DWS transforms no registered query calls or shares a step with: {orphans}"
     )

@@ -40,13 +40,18 @@ def test_entry_contract(spark):
     assert df.columns == [
         "stt",
         "edt",
-        "trademark_name",
-        "category_name",
-        "order_count",
-        "sku_num",
-        "original_amount",
-        "activity_reduce_amount",
+        "cur_date",
+        "sku_id",
         "order_amount",
+        "activity_reduce_amount",
+        "coupon_reduce_amount",
+        "original_amount",
+        "sku_name",
+        "spu_id",
+        "tm_id",
+        "category3_id",
+        "spu_name",
+        "tm_name",
     ]
     assert df.count() > 0
 

@@ -5,7 +5,9 @@ DwdTradeCartAdd (CDC envelope parse + change predicate P4/P5) feeding
 DwsTradeCartAddUuWindow (A8 first-today dedup + tumbling uu count) — over
 staged micro-batches, asserted against the identical pipeline run in batch
 mode. This is the BaseAPP lifecycle (SURVEY §3.1) minus the broker: source
-factory -> pipeline transforms -> sink.
+factory -> pipeline transforms -> sink. Each DWS app whose registered query
+runs its pipelines/dws.py transform is also streamed over that query's
+adapter output and compared with the registered query itself.
 """
 
 from __future__ import annotations
@@ -18,7 +20,9 @@ import pyspark.sql.functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from gmall_flink_realtime4_spark import tables as T
 from gmall_flink_realtime4_spark.pipelines import dwd_trade, dws
+from gmall_flink_realtime4_spark.plans.catalog import queries
 from gmall_flink_realtime4_spark.sources import read_topic_db
 from gmall_flink_realtime4_spark.streaming.runner import (
     empty_stream_dir,
@@ -27,6 +31,43 @@ from gmall_flink_realtime4_spark.streaming.runner import (
 )
 
 DAY = 86_400  # epoch seconds
+# a flush row's event time (epoch seconds), in a window past every
+# test-data row
+FLUSH_S = 4_000_000_000
+FLUSH_CUT = "2090-01-01"
+
+
+def _assert_stream_matches_registered(
+    spark, tmp_path, sf_dir, name, frame, run, flush=None, order=("ts",)
+):
+    """Stream the registered query's adapter output ``frame`` through its
+    transform (``run(df, streaming)``) and compare with the registered
+    query on the transform's columns.
+
+    The rows arrive as one micro-batch, in ``order`` (event time by
+    default); a second batch holds one flush row, ``frame``'s first row
+    with ``ts`` at ``FLUSH_S`` and the ``flush`` overrides, whose output
+    windows are dropped."""
+    src = empty_stream_dir(str(tmp_path / "registered"))
+    stages = [
+        lambda: frame.coalesce(1).sortWithinPartitions(*order)
+        .write.mode("append").parquet(src),
+        lambda: frame.limit(1)
+        .withColumns({"ts": F.lit(FLUSH_S), **(flush or {})})
+        .coalesce(1).write.mode("append").parquet(src),
+    ]
+    s = stream_parquet_source(spark, src, frame.schema, 1)
+    got = run_to_memory(run(s, True), "append", stages=stages)
+    cols = got.columns
+    streamed = sorted(
+        tuple(str(r[c]) for c in cols)
+        for r in got.filter(F.col("stt") < FLUSH_CUT).collect()
+    )
+    expect = sorted(
+        tuple(str(r[c]) for c in cols)
+        for r in queries()[name](spark, sf_dir).select(*cols).collect()
+    )
+    assert streamed == expect
 
 
 def _cdc(table, typ, ts, data, old=None):
@@ -60,7 +101,7 @@ def _pipeline(raw, streaming):
     )
 
 
-def test_cart_add_uu_end_to_end_stream_vs_batch(spark, tmp_path):
+def test_cart_add_uu_end_to_end_stream_vs_batch(spark, tmp_path, sf_dir):
     rows = _rows()
     batch_raw = spark.createDataFrame([(v,) for v in rows], "value string")
     expect = sorted(
@@ -86,6 +127,14 @@ def test_cart_add_uu_end_to_end_stream_vs_batch(spark, tmp_path):
     )
     assert streamed == expect
 
+    _assert_stream_matches_registered(
+        spark, tmp_path, sf_dir, "dws_trade_cart_add_uu_window",
+        T.cart_add(spark, sf_dir),
+        lambda df, st: dws.trade_cart_add_uu_window(
+            df, window="1 day", streaming=st
+        ),
+    )
+
 
 def _page_rows(spark, rows):
     """(uid, last_page_id, ts_ms) -> page-log-shaped frame."""
@@ -98,7 +147,7 @@ def _page_rows(spark, rows):
     )
 
 
-def test_login_window_end_to_end_stream_vs_batch(spark, tmp_path):
+def test_login_window_end_to_end_stream_vs_batch(spark, tmp_path, sf_dir):
     """DwsUserUserLoginWindow: the streaming keyed-state path must produce
     the batch plan's uu/back counts exactly (incl. the 7-day back flag)."""
     day = 86_400_000
@@ -135,6 +184,15 @@ def test_login_window_end_to_end_stream_vs_batch(spark, tmp_path):
         for r in got.filter(F.col("stt") < "2000-01-01").collect()
     )
     assert streamed == expect
+
+    _assert_stream_matches_registered(
+        spark, tmp_path, sf_dir, "dws_user_user_login_window",
+        T.page_log(spark, sf_dir),
+        lambda df, st: dws.user_user_login_window(
+            df, window="10 seconds", streaming=st
+        ),
+        flush={"ts": F.lit(FLUSH_S * 1000)},  # page-log ts is epoch millis
+    )
 
 
 def test_base_db_dynamic_routing_end_to_end(spark, tmp_path):
@@ -194,7 +252,7 @@ def test_base_db_dynamic_routing_end_to_end(spark, tmp_path):
     assert '"user_id":"u1"' in vals["dwd_interaction_comment"]
 
 
-def test_sku_order_window_end_to_end_stream_vs_batch(spark, tmp_path):
+def test_sku_order_window_end_to_end_stream_vs_batch(spark, tmp_path, sf_dir):
     """Flagship (DwsTradeSkuOrderWindow) streaming path: watermark -> A1
     dedup -> tumbling sums -> broadcast dim chain, as ONE streaming query,
     vs the identical pipeline in batch. Duplicate emissions carry identical
@@ -247,6 +305,27 @@ def test_sku_order_window_end_to_end_stream_vs_batch(spark, tmp_path):
         for r in got.filter(F.col("stt") < "1970-02-01").collect()  # drop flush
     )
     assert streamed == expect
+
+    # lineitem repeats detail ids with different payloads: the stream
+    # keeps each id's first arrival and the batch its least (ts, payload),
+    # so the rows arrive in that order
+    frame = T.sku_order_detail(spark, sf_dir)
+    sku, spu, tm = T.sku_dims(spark, sf_dir)
+    _assert_stream_matches_registered(
+        spark, tmp_path, sf_dir, "dws_trade_sku_order_window", frame,
+        lambda df, st: dws.trade_sku_order_window(
+            df, sku, spu, tm, window="1 day", streaming=st
+        ),
+        flush={"id": F.lit(-1)},
+        order=["ts", *[c for c in frame.columns if c not in ("id", "ts")]],
+    )
+    # the splits add up to the original amount, as upstream
+    for r in queries()["dws_trade_sku_order_window"](spark, sf_dir).collect():
+        parts = (
+            r["order_amount"] + r["activity_reduce_amount"]
+            + r["coupon_reduce_amount"]
+        )
+        assert abs(parts - r["original_amount"]) < 0.005, r
 
 
 def test_vc_ch_ar_window_end_to_end_stream_vs_batch(spark, tmp_path):
@@ -412,7 +491,9 @@ def test_keyword_window_end_to_end_stream_vs_batch(spark, tmp_path):
     assert streamed == expect
 
 
-def test_trademark_refund_window_end_to_end_stream_vs_batch(spark, tmp_path):
+def test_trademark_refund_window_end_to_end_stream_vs_batch(
+    spark, tmp_path, sf_dir
+):
     """DwsTradeTrademarkCategoryUserRefundWindow streaming: DISTINCT refund
     order count (A7, the orderIdSet pattern) via tagged dedup-stream union,
     sku -> (tm, category3) broadcast pre-join, tm_name post-agg enrichment
@@ -468,8 +549,17 @@ def test_trademark_refund_window_end_to_end_stream_vs_batch(spark, tmp_path):
     )
     assert streamed == expect
 
+    sku, _, tm = T.sku_dims(spark, sf_dir)
+    _assert_stream_matches_registered(
+        spark, tmp_path, sf_dir, "dws_trade_trademark_category_user_refund_window",
+        T.order_refund(spark, sf_dir),
+        lambda df, st: dws.trade_trademark_category_user_refund_window(
+            df, sku, tm, window="1 day", streaming=st
+        ),
+    )
 
-def test_province_window_end_to_end_stream_vs_batch(spark, tmp_path):
+
+def test_province_window_end_to_end_stream_vs_batch(spark, tmp_path, sf_dir):
     """DwsTradeProvinceOrderWindow streaming: DISTINCT order/user counts
     (A7) via tagged dedup-stream union — countDistinct has no streaming
     form — vs the batch countDistinct plan."""
@@ -508,6 +598,11 @@ def test_province_window_end_to_end_stream_vs_batch(spark, tmp_path):
         for r in got.filter(F.col("province_id") != "pz").collect()
     )
     assert streamed == expect
+
+    _assert_stream_matches_registered(
+        spark, tmp_path, sf_dir, "dws_trade_province_order_window",
+        T.province_order_detail(spark, sf_dir), run,
+    )
 
 
 def test_province_window_sub_day_stream_vs_batch(spark, tmp_path):

@@ -2,14 +2,17 @@
 
 The SCALE.md arbitration methodology in executable form: start a FRESH
 JVM/session, run the bench-identical query-neutral warm-up (scan + shuffle
-hash-agg + broadcast join + Arrow worker spin-up), one untimed rep of the
-query itself, then N timed reps; print min/median so an old-vs-new pair of
-invocations (alternated, same machine window) reads as a controlled
-comparison rather than a sweep-adjacency artifact.
+hash-agg + broadcast join + Arrow worker spin-up), then untimed reps of the
+query itself until one is no faster than the rep before it (at most
+``reps`` of them: at sf0.1 a session keeps warming up for several reps),
+then N timed reps; print min/median so an old-vs-new pair of invocations
+(alternated, same machine window) reads as a controlled comparison rather
+than a sweep-adjacency artifact.
 
 Usage: python tools/isopair.py <repo_dir> <sf_dir> <query> [reps=5]
-Prints one JSON line: {"query", "repo", "sf_dir", "reps": [...], "best",
-"median", "load1": <1-min load avg before the session exists>}.
+Prints one JSON line: {"query", "repo", "sf_dir", "warm_reps", "reps":
+[...], "best", "median", "load1": <1-min load avg before the session
+exists>}.
 
 The timed action writes the query to the ``noop`` sink, so every
 output row and column is computed (``count()`` would let the optimizer
@@ -57,21 +60,23 @@ def main() -> None:
     qs = queries()
     warm_up(spark, sf_dir)
 
-    def run() -> None:
-        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-
-    run()  # untimed first-plan rep (codegen)
-    times = []
-    for _ in range(reps):
+    def run() -> float:
         t0 = time.perf_counter()
-        run()
-        times.append(round(time.perf_counter() - t0, 3))
+        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return round(time.perf_counter() - t0, 3)
+
+    # untimed reps until the session stops getting faster
+    warm = [run()]
+    while len(warm) < reps and (len(warm) < 2 or warm[-1] < warm[-2]):
+        warm.append(run())
+    times = [run() for _ in range(reps)]
     print(
         json.dumps(
             {
                 "query": name,
                 "repo": repo,
                 "sf_dir": sf_dir,
+                "warm_reps": len(warm),
                 "reps": times,
                 "best": min(times),
                 "median": statistics.median(times),
