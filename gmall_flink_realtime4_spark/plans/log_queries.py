@@ -108,10 +108,12 @@ def raw_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     # validity filter (which references from_json(value)) below both
     # exchanges into the unsplittable single-task scan stage — build+parse
     # of every row on ONE core. Real deployments read materialized broker
-    # bytes; so does this.
+    # bytes; so does this. Keyed by the events file's stamp too, so an
+    # events.parquet rewritten in place re-materializes the topic.
+    key = f"{sf_dir}|{T._path_stamp(f'{sf_dir}/events.parquet')}"
     cache_dir = os.path.join(
         tempfile.gettempdir(),
-        f"spark_graft_rawlog_{hashlib.md5(sf_dir.encode()).hexdigest()[:12]}",
+        f"spark_graft_rawlog_{hashlib.md5(key.encode()).hexdigest()[:12]}",
     )
     if not os.path.exists(os.path.join(cache_dir, "_SUCCESS")):
         raw.repartition(spark.sparkContext.defaultParallelism).write.mode(

@@ -4,7 +4,9 @@ The reference builds a ``StreamExecutionEnvironment`` per app
 (``realtime-common/.../base/BaseAPP.java:20-66``); here one SparkSession
 serves every pipeline. Confs are split into:
 
-- BUILD_CONFS: set at builder time when *we* own the session (tests, bench).
+- BUILD_CONFS: set at builder time when *we* own the session (tests, bench,
+  tools), together with the machine-sized ``local[N]`` and driver heap
+  (``cpus``, ``driver_memory``; ``owned_confs`` merges them).
 - RUNTIME_CONFS: safe to set on an externally-created session (the driver's
   verify harness builds its own SparkSession and passes it in) — session
   timezone, parquet nanos handling, AQE/shuffle sizing, the streaming
@@ -24,6 +26,29 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# An unset SPARK_GRAFT_* sizes the session from the machine, capped at the
+# widths the engine was tuned on; an explicit value always wins.
+MAX_DEFAULT_CPUS = 32
+MAX_DEFAULT_DRIVER_MEM_MB = 16 * 1024
+
+
+def cpus() -> str:
+    """Cores for ``local[N]`` and the shuffle width: ``$SPARK_GRAFT_CPUS``,
+    else the CPUs this process may run on, at most ``MAX_DEFAULT_CPUS``."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(
+        min(MAX_DEFAULT_CPUS, len(os.sched_getaffinity(0)))
+    )
+
+
+def driver_memory() -> str:
+    """Driver heap: ``$SPARK_GRAFT_DRIVER_MEM``, else half of physical
+    memory, at most ``MAX_DEFAULT_DRIVER_MEM_MB``."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or (
+        f"{min(MAX_DEFAULT_DRIVER_MEM_MB, ram_mb // 2)}m"
+    )
+
 
 # Confs that are legal to set on a live session (checked: all runtime-settable
 # on Spark 4.1).
@@ -48,7 +73,7 @@ RUNTIME_CONFS: dict[str, str] = {
     # runtime-settable: the driver's own session defaults to 200 shuffle
     # partitions — size the shuffles to the box like our own sessions do
     # (AQE still coalesces below this; purely a perf normalization)
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+    "spark.sql.shuffle.partitions": cpus(),
     # Streaming checkpoints (offset/commit logs, state deltas, snapshots and
     # their checksum files) go through FileSystem, not Spark's default
     # FileContext manager. Without the native-hadoop library the local
@@ -66,17 +91,47 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 BUILD_CONFS: dict[str, str] = {
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
     "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
     "spark.ui.enabled": "false",
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
-    # local mode = one JVM; the default 1g heap cannot hold a 64 MB
-    # broadcast's hashed relation next to execution memory (observed OOM
-    # building broadcasts at 10x scale). Size for the box; harmless when a
-    # session already exists (builder confs are ignored then, and the
-    # runtime confs above still apply).
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+    # Generated classes stay compiled for a whole registry pass. The cache
+    # is JVM-wide and static (unsettable on a live session); Spark's default
+    # of 100 entries is below ONE warehouse pass. Measured at sf0.001,
+    # local[4]: the ten perfbench warehouse queries need ~165 distinct
+    # classes and one pass over all 135 queries ~2,200, so at 100 every warm
+    # warehouse pass recompiled 100-150 classes with Janino and ran them
+    # interpreted until the JIT caught up, and a warm registry pass 2,705
+    # (large queries evict their own classes mid-query). At 4096 a warm
+    # registry pass compiles 150 (sources that differ between plan builds)
+    # and runs in 50.7 s against 64.4 s; the code cache never filled and
+    # metaspace used 204 MB against 187 MB. 4096 holds a registry pass with
+    # headroom. Perf only: a driver-owned session keeps its own cache size.
+    "spark.sql.codegen.cache.maxEntries": "4096",
+    # PySpark records the Python call site of every F.* / DataFrame call for
+    # error messages (~5 py4j round trips and a stack walk each) unless this
+    # is false; PySpark reads it once per process from the first active
+    # session, so it belongs to the builder. Error contexts lose the Python
+    # call site; plan build gets ~a quarter cheaper (the ten warehouse plans,
+    # warm, local[4]: median 0.93 -> 0.70 s).
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
+
+
+def owned_confs() -> dict[str, str]:
+    """Every builder conf for a session we own, sized from the machine now
+    (a tool may set ``SPARK_GRAFT_DRIVER_MEM`` after importing this module).
+
+    local mode = one JVM; the default 1g heap cannot hold a 64 MB
+    broadcast's hashed relation next to execution memory (observed OOM
+    building broadcasts at 10x scale). Harmless when a session already
+    exists (builder confs are ignored then, and the runtime confs still
+    apply).
+    """
+    return {
+        **BUILD_CONFS,
+        "spark.driver.memory": driver_memory(),
+        **RUNTIME_CONFS,
+    }
 
 
 # Marker conf recording a shuffle-partition count a caller PINNED
@@ -110,12 +165,11 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession configured for this engine.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` outside a cluster.
+    ``master`` defaults to ``local[cpus()]`` outside a cluster.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = SparkSession.builder.appName(app_name)
-    builder = builder.master(master or f"local[{cpus}]")
-    for k, v in {**BUILD_CONFS, **RUNTIME_CONFS}.items():
+    builder = builder.master(master or f"local[{cpus()}]")
+    for k, v in owned_confs().items():
         builder = builder.config(k, v)
     if shuffle_partitions is not None:
         builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))

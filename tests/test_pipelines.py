@@ -420,3 +420,29 @@ def test_dim_config_ddl_side_effects(spark, tmp_path):
     dim_app.drop_dim_table(spark, "dim_tbl_a")  # idempotent
     assert not spark.catalog.tableExists("dim_tbl_a")
     dim_app.drop_dim_table(spark, "dim_tbl_b")
+
+
+def test_raw_log_topic_follows_events_rewritten_in_place(spark, sf_dir, tmp_path):
+    """The materialized log topic is keyed by the events file, not only the
+    directory: rewriting events.parquet in place changes the page output."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from gmall_flink_realtime4_spark.plans.catalog import queries
+
+    def page(d):
+        df = queries()["dwd_base_log_page"](spark, str(d))
+        return sorted(map(tuple, df.collect()), key=repr)
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    for f in os.listdir(sf_dir):  # copyfile: the fixtures are read-only
+        shutil.copyfile(os.path.join(sf_dir, f), sf / f)
+    before = page(sf)
+    events = pq.read_table(sf / "events.parquet")
+    pq.write_table(events.slice(0, events.num_rows // 2), sf / "events.parquet")
+    after = page(sf)
+    shutil.copytree(sf, tmp_path / "fresh")
+    assert after != before
+    assert after == page(tmp_path / "fresh")

@@ -32,16 +32,15 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from gmall_flink_realtime4_spark.session import (
-        BUILD_CONFS,
-        RUNTIME_CONFS,
         apply_runtime_confs,
+        cpus,
+        owned_confs,
     )
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = SparkSession.builder.appName("task_census").master(
-        f"local[{cpus}]"
+        f"local[{cpus()}]"
     )
-    for k, v in {**BUILD_CONFS, **RUNTIME_CONFS}.items():
+    for k, v in owned_confs().items():
         builder = builder.config(k, v)
     builder = builder.config("spark.eventLog.enabled", "true")
     builder = builder.config("spark.eventLog.dir", f"file:{log_dir}")
